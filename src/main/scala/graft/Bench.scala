@@ -426,12 +426,9 @@ object Bench {
         val fs = leafFiles(t)
         val bytes = fs.map(_.length).sum
         val rgs = fs.map { f =>
-          try {
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.getAbsolutePath), hconf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getFooter.getBlocks.size().toLong finally r.close()
-          } catch { case _: Throwable => -1L }
+          try graft.sources.ParquetFooters.rowGroups(
+            new org.apache.hadoop.fs.Path(f.getAbsolutePath), hconf).toLong
+          catch { case _: Throwable => -1L }
         }
         val rg = if (rgs.contains(-1L)) -1L else rgs.sum
         "\"" + t.getName.stripSuffix(".parquet") + "\":{\"files\":" +
@@ -469,13 +466,19 @@ object Bench {
     // `queries_key` on the line names the shortening so the mapping is
     // machine-recoverable. No query was removed and none renamed in the
     // artifact; medians/semantics are untouched.
-    val shortKey: String => String = n => n.takeWhile(_ != '_')
-    require(names.map(shortKey).distinct.size == names.size,
-      "short query keys must stay unique on the stdout contract line")
+    // A colliding prefix would silently merge two queries' numbers, so the
+    // line then keeps the full names (and says so in `queries_key`).
+    val prefixUnique =
+      names.map(_.takeWhile(_ != '_')).distinct.size == names.size
+    if (!prefixUnique) System.err.println("[bench] WARNING query number " +
+      "prefixes collide — the stdout line keeps full query names")
+    val shortKey: String => String =
+      if (prefixUnique) _.takeWhile(_ != '_') else identity
     val qsShort = stats.map { case (k, st) =>
       "\"" + shortKey(k) + "\":" + st.map(s => fmt(s._1)).getOrElse("null")
     }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsShort,"queries_key":"number_prefix","value_min":${fmt(totalMin)},"sf":"$sfDir","passes":$passes,"detail":"$outPath"$headlineJson$breachJson$errorsJson}"""
+    val queriesKey = if (prefixUnique) "number_prefix" else "full_name"
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsShort,"queries_key":"$queriesKey","value_min":${fmt(totalMin)},"sf":"$sfDir","passes":$passes,"detail":"$outPath"$headlineJson$breachJson$errorsJson}"""
     if (line.length > 1900)
       System.err.println(s"[bench] WARNING stdout contract line is " +
         s"${line.length} chars — may exceed the driver's stdout tail")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine.Engine
+import graft.ext.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,52 +13,13 @@ import SparkEntry.{engine, roundCols, Q, rollupStore, clusteredStore, registerTp
   */
 private[graft] object EntryPipeline {
 
-  /** Parquet row count straight from the footers (no Spark job), cached
-    * per (path, length, mtime) for the JVM — the input-size probe behind
-    * the small-corpus eager-shingle fast path below. Input metadata, not
-    * a result: regenerated fixtures change the key. */
-  private val fixtureRowCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private[graft] def parquetRowCount(s: SparkSession, path: String): Long = {
-    val root = new java.io.File(path)
-    def leaf(f: java.io.File): Seq[java.io.File] =
-      if (f.isFile) Seq(f).filter(_.getName.endsWith(".parquet"))
-      else Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(leaf)
-    // Key on the LEAF files' (path, length, mtime), not the directory's
-    // (VERDICT r19 #7): rewriting a parquet file in place keeps its name,
-    // so the parent directory's mtime does not move — a directory-keyed
-    // cache would serve a stale row count and misroute the eager/lazy gate
-    // after a fixture regeneration. Leaf metadata moves with the files.
-    val leaves = leaf(root).sortBy(_.getAbsolutePath)
-    val key = root.getAbsolutePath + "|" +
-      leaves.map(f => s"${f.getAbsolutePath}:${f.length}:${f.lastModified}")
-        .mkString(";")
-    fixtureRowCache.getOrElseUpdate(key, {
-      val hconf = s.sessionState.newHadoopConf()
-      leaves.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath), hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val bs = r.getFooter.getBlocks
-          (0 until bs.size()).map(bs.get(_).getRowCount).sum
-        } finally r.close()
-      }.sum
-    })
-  }
-
-  /** Corpus ceiling for the eager-shingle fast path: at or below it the
-    * verify shingle sets ride IN the signature checkpoint (one scan, one
-    * shingling; the attach joins read cached blocks), above it the lazy
-    * shingle frame keeps the checkpoint signature-only (shingles are ~20×
-    * the signature bytes — r17's 25 GB at the 1000× SF). 200k docs ≈
-    * ≤200 MB of checkpointed shingles, and matches
-    * [[graft.ext.Dedup.attachPairPayloadsAuto]]'s direct-join ceiling. */
-  private[graft] val EagerShingleMaxDocs: Long = 200000L
-
-  private def eagerShingles(s: SparkSession, dir: String): Boolean =
-    parquetRowCount(s, s"$dir/documents.parquet") <= EagerShingleMaxDocs
+  /** The near-dup entries' signature columns: the 64-hash word-3-gram
+    * minhash, and for the multi-family entries (q23/q59/q94) the minhash
+    * plus the WIDE simhash in one checkpoint. */
+  private def minhash64 =
+    Dedup.minhashSignature(col("text"), numHashes = 64, shingleN = 3)
+  private def minhashAndSimhash128 =
+    Seq(minhash64.as("msig"), Dedup.simhash128(col("text")).as("ssig"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q20_dedup_exact" -> ((s, dir) => {
@@ -91,43 +53,16 @@ private[graft] object EntryPipeline {
       // collides with only p≈0.64, so 32×2-row bands are used here —
       // capture ≥ 1-1e-4 at j=0.5 and ~1 above it (the est-threshold 0.35
       // then prunes candidates 4σ below the bar).
-      // single-file fixture reads as ONE partition; spread the per-doc
-      // hashing across cores (at real scale the scan is already split).
-      // ONE corpus scan: the minhash signature and the verify shingle sets
-      // are computed in a single materialized frame (same shape as q23) —
-      // the banding pipeline and both verify-join sides read cached blocks
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
-      // SMALL corpora (footer row count ≤ EagerShingleMaxDocs): shingles
-      // ride in the checkpoint — one scan+shingling, attach joins read
-      // cached blocks. LARGE corpora checkpoint SIGNATURES only: shingle
-      // sets are ~20x the signature bytes (~25 GB at the 1000x SF), and
-      // the lazy shingle frame re-shingles only candidate-touched docs
-      // through the broadcast-reduced attach.
-      val eager = eagerShingles(s, dir)
-      val sigCol = graft.ext.Dedup.minhashSignature(col("text"),
-        numHashes = 64, shingleN = 3).as("sig")
-      val shCol = graft.ext.Dedup.shingles(col("text"), 3).as("sh")
-      val frame = graft.ext.Dedup.materialize(docs.select(
-        Seq(col("doc_id").as("id"), sigCol) ++
-          (if (eager) Seq(shCol) else Nil): _*))
-      val shf = if (eager) frame
-        else docs.select(col("doc_id").as("id"), shCol)
-      // eager path: the shingle sets RIDE the operator's est-fetch joins
-      // (carry) — two broadcast builds instead of four (r19 JobProbe);
-      // lazy path keeps the broadcast-reduced attach (the r17 sf100 fix)
-      val cand = graft.ext.Dedup.minhashDupPairsFromSigs(frame, "id", "sig",
-        bands = 32, threshold = 0.35,
-        carry = if (eager) Seq("sh" -> "sh") else Nil)
-      val attached = if (eager) cand
-        else graft.ext.Dedup.attachPairPayloadsAuto(cand, frame, shf,
-          "id", "sh", "id_a", "id_b")
-      attached
-        .select(col("id_a"), col("id_b"),
-          graft.functions.TextHashFunctions.set_jaccard(col("sh_a"), col("sh_b"))
-            .as("__j"))
-        .where(col("__j") >= 0.5)
-        .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
+      // ONE corpus scan: the minhash signature (and, on small corpora, the
+      // verify shingle sets — Dedup.nearDupPairs' size-gated placement) are
+      // computed in a single materialized frame (same shape as q23) — the
+      // banding pipeline and both verify-join sides read cached blocks
+      Dedup.nearDupPairs(s.read.parquet(s"$dir/documents.parquet"),
+        "doc_id", "text", Seq(minhash64.as("sig")),
+        (frame, carry) => Dedup.minhashDupPairsFromSigs(frame, "id", "sig",
+          bands = 32, threshold = 0.35, carry = carry),
+        "id_a", "id_b", minJaccard = 0.5)
+        .withColumn("jaccard", round(col("jaccard"), 4))
         .orderBy("id_a", "id_b")
     }),
     "q23_simhash_dups" -> ((s, dir) => {
@@ -140,48 +75,27 @@ private[graft] object EntryPipeline {
       // comes from the minhash side (miss ≈ 4e-8 per true pair); simhash
       // contributes its real-world fast path — boilerplate/near-identical
       // dups at tiny hamming — at a banding that stays thin at any corpus
-      // size. ONE corpus scan: minhash signature, simhash signature and the
-      // verify shingle sets are computed in a single materialized frame; the
-      // two banding branches and both verify-join sides all read its cached
-      // blocks (round 4 ran three separate scan+repartition+hash passes).
+      // size. ONE corpus scan: minhash signature, simhash signature and (on
+      // small corpora — see q22) the verify shingle sets are computed in a
+      // single materialized frame; the two banding branches and both
+      // verify-join sides all read its cached blocks (round 4 ran three
+      // separate scan+repartition+hash passes).
       // Oracle = brute-force exact Jaccard (DuckDB recomputes the shingle
       // sets and the full pair join independently).
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
-      // signature checkpoint + shingle source, eager-shingle fast path at
-      // small corpora (see q22 for the size-gated trade)
-      val eager = eagerShingles(s, dir)
-      val shCol = graft.ext.Dedup.shingles(col("text"), 3).as("sh")
-      val frame = graft.ext.Dedup.materialize(docs.select(
-        Seq(col("doc_id").as("id"),
-          graft.ext.Dedup.minhashSignature(col("text"), numHashes = 64, shingleN = 3)
-            .as("msig"),
-          graft.ext.Dedup.simhash128(col("text")).as("ssig")) ++
-          (if (eager) Seq(shCol) else Nil): _*))
-      val shf = if (eager) frame
-        else docs.select(col("doc_id").as("id"), shCol)
-      // both families band in ONE pass (simhash bands 16-19 after the 16
+      // Both families band in ONE pass (simhash bands 16-19 after the 16
       // minhash bands): one skew-capped self-join instead of two, candidate
       // capture a superset of the separate-pipelines union. The frame
       // carries the WIDE simhash: below the ~1M-doc ceiling the operator
       // bands its low long (== simhash64, so this fixture's candidates are
       // bit-for-bit the legacy ones); at corpus scale it self-routes to
       // 4×32-bit banding instead of flooding the est-floor join
-      // eager path: the shingle sets RIDE the operator's est-fetch joins
-      // (carry) — two broadcast builds instead of four (r19 JobProbe);
-      // lazy path keeps the broadcast-reduced attach (the r17 sf100 fix)
-      val prefiltered = graft.ext.Dedup.multiFamilyDupCandidates(frame,
-        "id", "msig", "ssig", mBands = 16, estThreshold = 0.75, maxHamming = 3,
-        sBands = 4, carry = if (eager) Seq("sh" -> "sh") else Nil)
-      val attached = if (eager) prefiltered
-        else graft.ext.Dedup.attachPairPayloadsAuto(prefiltered, frame, shf,
-          "id", "sh", "id_a", "id_b")
-      attached
-        .select(col("id_a"), col("id_b"),
-          graft.functions.TextHashFunctions.set_jaccard(col("sh_a"), col("sh_b"))
-            .as("__j"))
-        .where(col("__j") >= 0.9)
-        .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
+      Dedup.nearDupPairs(s.read.parquet(s"$dir/documents.parquet"),
+        "doc_id", "text", minhashAndSimhash128,
+        (frame, carry) => Dedup.multiFamilyDupCandidates(frame,
+          "id", "msig", "ssig", mBands = 16, estThreshold = 0.75,
+          maxHamming = 3, sBands = 4, carry = carry),
+        "id_a", "id_b", minJaccard = 0.9)
+        .withColumn("jaccard", round(col("jaccard"), 4))
         .orderBy("id_a", "id_b")
     }),
     "q24_ngram_jaccard" -> ((s, dir) => {
@@ -274,35 +188,13 @@ private[graft] object EntryPipeline {
       // the output is engine-independent — DuckDB brute-force exact Jaccard
       // hash-matches it. The 128-bit BANDING itself stays pinned by
       // ExtSpec's pigeonhole set-equality against brute-force hamming.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
-      // signature checkpoint + shingle source, eager-shingle fast path at
-      // small corpora (see q22 for the size-gated trade)
-      val eager = eagerShingles(s, dir)
-      val shCol = graft.ext.Dedup.shingles(col("text"), 3).as("sh")
-      val frame = graft.ext.Dedup.materialize(docs.select(
-        Seq(col("doc_id").as("id"),
-          graft.ext.Dedup.minhashSignature(col("text"), numHashes = 64, shingleN = 3)
-            .as("msig"),
-          graft.ext.Dedup.simhash128(col("text")).as("ssig")) ++
-          (if (eager) Seq(shCol) else Nil): _*))
-      val shf = if (eager) frame
-        else docs.select(col("doc_id").as("id"), shCol)
-      // eager path: the shingle sets RIDE the operator's est-fetch joins
-      // (carry) — two broadcast builds instead of four (r19 JobProbe);
-      // lazy path keeps the broadcast-reduced attach (the r17 sf100 fix)
-      val cand = graft.ext.Dedup.multiFamilyDupCandidates(frame,
-        "id", "msig", "ssig", mBands = 16, estThreshold = 0.65, maxHamming = 3,
-        wideArmMinDocs = 0L, carry = if (eager) Seq("sh" -> "sh") else Nil)
-      val attached = if (eager) cand
-        else graft.ext.Dedup.attachPairPayloadsAuto(cand, frame, shf,
-          "id", "sh", "id_a", "id_b")
-      attached
-        .select(col("id_a"), col("id_b"),
-          graft.functions.TextHashFunctions.set_jaccard(col("sh_a"), col("sh_b"))
-            .as("__j"))
-        .where(col("__j") >= 0.8)
-        .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
+      Dedup.nearDupPairs(s.read.parquet(s"$dir/documents.parquet"),
+        "doc_id", "text", minhashAndSimhash128,
+        (frame, carry) => Dedup.multiFamilyDupCandidates(frame,
+          "id", "msig", "ssig", mBands = 16, estThreshold = 0.65,
+          maxHamming = 3, wideArmMinDocs = 0L, carry = carry),
+        "id_a", "id_b", minJaccard = 0.8)
+        .withColumn("jaccard", round(col("jaccard"), 4))
         .orderBy("id_a", "id_b")
     }),
     "q94_simhash_autoswitch" -> ((s, dir) => {
@@ -318,45 +210,25 @@ private[graft] object EntryPipeline {
       // pair output is q59's exact-verified shape: capture at j≥0.8 comes
       // from the minhash arm (est ≥ 0.65), so the result is arm- and
       // engine-independent and q59's brute-force oracle replays it.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
-      // signature checkpoint + shingle source, eager-shingle fast path at
-      // small corpora (see q22 for the size-gated trade)
-      val eager = eagerShingles(s, dir)
-      val shCol = graft.ext.Dedup.shingles(col("text"), 3).as("sh")
-      val frame = graft.ext.Dedup.materialize(docs.select(
-        Seq(col("doc_id").as("id"),
-          graft.ext.Dedup.minhashSignature(col("text"), numHashes = 64, shingleN = 3)
-            .as("msig"),
-          graft.ext.Dedup.simhash128(col("text")).as("ssig")) ++
-          (if (eager) Seq(shCol) else Nil): _*))
-      val shf = if (eager) frame
-        else docs.select(col("doc_id").as("id"), shCol)
-      // eager path: the shingle sets RIDE the operator's est-fetch joins
-      // (carry) — two broadcast builds instead of four (r19 JobProbe);
-      // lazy path keeps the broadcast-reduced attach (the r17 sf100 fix)
-      val cand = graft.ext.Dedup.multiFamilyDupCandidates(frame,
-        "id", "msig", "ssig", mBands = 16, estThreshold = 0.65, maxHamming = 3,
-        carry = if (eager) Seq("sh" -> "sh") else Nil)
-      val st = graft.ext.Dedup.lshStats.reverse
-        .find(_.kind == "multiband-arm")
-        .getOrElse(throw new IllegalStateException(
-          "multiFamilyDupCandidates did not record its arm decision"))
-      val wantWide =
-        st.armCorpusDocs >= graft.ext.Dedup.defaultWideArmMinDocs
-      if (!st.armWide.contains(wantWide))
-        throw new IllegalStateException(
-          s"simhash arm auto-switch regressed: corpus=${st.armCorpusDocs} " +
-            s"docs, threshold=${st.armThresholdDocs}, wide=${st.armWide}")
-      val attached = if (eager) cand
-        else graft.ext.Dedup.attachPairPayloadsAuto(cand, frame, shf,
-          "id", "sh", "id_a", "id_b")
-      attached
-        .select(col("id_a"), col("id_b"),
-          graft.functions.TextHashFunctions.set_jaccard(col("sh_a"), col("sh_b"))
-            .as("__j"))
-        .where(col("__j") >= 0.8)
-        .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
+      Dedup.nearDupPairs(s.read.parquet(s"$dir/documents.parquet"),
+        "doc_id", "text", minhashAndSimhash128,
+        (frame, carry) => {
+          val cand = Dedup.multiFamilyDupCandidates(frame,
+            "id", "msig", "ssig", mBands = 16, estThreshold = 0.65,
+            maxHamming = 3, carry = carry)
+          val st = Dedup.lshStats.reverse
+            .find(_.kind == "multiband-arm")
+            .getOrElse(throw new IllegalStateException(
+              "multiFamilyDupCandidates did not record its arm decision"))
+          val wantWide = st.armCorpusDocs >= Dedup.defaultWideArmMinDocs
+          if (!st.armWide.contains(wantWide))
+            throw new IllegalStateException(
+              s"simhash arm auto-switch regressed: corpus=${st.armCorpusDocs} " +
+                s"docs, threshold=${st.armThresholdDocs}, wide=${st.armWide}")
+          cand
+        },
+        "id_a", "id_b", minJaccard = 0.8)
+        .withColumn("jaccard", round(col("jaccard"), 4))
         .orderBy("id_a", "id_b")
     }),
     "q96_minhash_scale_dups" -> ((s, dir) => {
@@ -372,35 +244,13 @@ private[graft] object EntryPipeline {
       // background-collision candidate mass near-linear in the corpus
       // (capture per true pair ≥0.9915 at the 0.8 bar, ≥0.99998 at 0.9 —
       // the fixture's dup mass sits at j≥0.9).
-      val docs = graft.sources.TableLoader.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      // signature checkpoint + shingle source, eager-shingle fast path at
-      // small corpora (see q22 for the size-gated trade)
-      val eager = eagerShingles(s, dir)
-      val shCol = graft.ext.Dedup.shingles(col("text"), 3).as("sh")
-      val frame = graft.ext.Dedup.materialize(docs.select(
-        Seq(col("doc_id").as("id"),
-          graft.ext.Dedup.minhashSignature(col("text"), numHashes = 64, shingleN = 3)
-            .as("sig")) ++
-          (if (eager) Seq(shCol) else Nil): _*))
-      val shf = if (eager) frame
-        else docs.select(col("doc_id").as("id"), shCol)
-      // eager path: the shingle sets RIDE the operator's est-fetch joins
-      // (carry) — two broadcast builds instead of four (r19 JobProbe);
-      // lazy path keeps the broadcast-reduced attach (the r17 sf100 fix)
-      val cand = graft.ext.Dedup.minhashDupPairsFromSigs(frame, "id", "sig",
-        bands = 16, threshold = 0.65, numHashes = 64,
-        scaleGeomMinDocs = graft.ext.Dedup.defaultScaleGeomMinDocs,
-        carry = if (eager) Seq("sh" -> "sh") else Nil)
-      val attached = if (eager) cand
-        else graft.ext.Dedup.attachPairPayloadsAuto(
-          cand.select("id_a", "id_b"), frame, shf, "id", "sh", "id_a", "id_b")
-      attached
-        .select(col("id_a"), col("id_b"),
-          graft.functions.TextHashFunctions.set_jaccard(col("sh_a"), col("sh_b"))
-            .as("__j"))
-        .where(col("__j") >= 0.8)
-        .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
+      Dedup.nearDupPairs(graft.sources.TableLoader.load(s, dir, "documents"),
+        "doc_id", "text", Seq(minhash64.as("sig")),
+        (frame, carry) => Dedup.minhashDupPairsFromSigs(frame, "id", "sig",
+          bands = 16, threshold = 0.65, numHashes = 64,
+          scaleGeomMinDocs = Dedup.defaultScaleGeomMinDocs, carry = carry),
+        "id_a", "id_b", minJaccard = 0.8)
+        .withColumn("jaccard", round(col("jaccard"), 4))
         .orderBy("id_a", "id_b")
     }),
     "q28_cosine_neardup" -> ((s, dir) => {
@@ -465,38 +315,17 @@ private[graft] object EntryPipeline {
       // n-gram Jaccard ≥ 0.5, so DuckDB brute-force over the same split
       // hash-checks the whole incremental path (same 32×2 banding as q22:
       // capture ≥ 1-1e-4 at the 0.5 bar).
-      import graft.ext.Dedup
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
-      // signature checkpoint + shingle source, eager-shingle fast path at
-      // small corpora (see q22 for the size-gated trade)
-      val eager = eagerShingles(s, dir)
-      val shCol = Dedup.shingles(col("text"), 3).as("sh")
-      val frame = Dedup.materialize(docs.select(
-        Seq(col("doc_id").as("id"),
-          Dedup.minhashSignature(col("text"), numHashes = 64, shingleN = 3)
-            .as("sig")) ++
-          (if (eager) Seq(shCol) else Nil): _*))
-      val shf = if (eager) frame
-        else docs.select(col("doc_id").as("id"), shCol)
-      val inc = frame.where(col("id") % 10 === 0)
-      val corpus = frame.where(col("id") % 10 =!= 0)
-      val index = Dedup.minhashBandIndex(corpus, "id", "sig", bands = 32)
-      // eager path: the shingle sets RIDE the operator's signature-fetch
-      // joins (carry) — two broadcast builds instead of four (r19
-      // JobProbe); lazy path keeps the broadcast-reduced attach
-      val cand = Dedup.incrementalMinhashDupPairs(inc, index, corpus,
-        "id", "sig", bands = 32, threshold = 0.35,
-        carry = if (eager) Seq("sh" -> "sh") else Nil)
-      val attached = if (eager) cand
-        else Dedup.attachPairPayloadsAuto(cand, frame, shf,
-          "id", "sh", "inc_id", "corpus_id")
-      attached
-        .select(col("inc_id"), col("corpus_id"),
-          graft.functions.TextHashFunctions.set_jaccard(col("sh_a"), col("sh_b"))
-            .as("__j"))
-        .where(col("__j") >= 0.5)
-        .select(col("inc_id"), col("corpus_id"), round(col("__j"), 4).as("jaccard"))
+      Dedup.nearDupPairs(s.read.parquet(s"$dir/documents.parquet"),
+        "doc_id", "text", Seq(minhash64.as("sig")),
+        (frame, carry) => {
+          val inc = frame.where(col("id") % 10 === 0)
+          val corpus = frame.where(col("id") % 10 =!= 0)
+          val index = Dedup.minhashBandIndex(corpus, "id", "sig", bands = 32)
+          Dedup.incrementalMinhashDupPairs(inc, index, corpus,
+            "id", "sig", bands = 32, threshold = 0.35, carry = carry)
+        },
+        "inc_id", "corpus_id", minJaccard = 0.5)
+        .withColumn("jaccard", round(col("jaccard"), 4))
         .orderBy("inc_id", "corpus_id")
     }),
     "q64_incremental_cosine" -> ((s, dir) => {
@@ -715,8 +544,8 @@ private[graft] object EntryPipeline {
       // n sizes k and the budget only; the footers give the identical
       // number with zero jobs where the old count() paid a full (column-
       // pruned) scan — one fewer execution per run at every scale (r20)
-      val n = graft.ext.Similarity.parquetFooterRowCount(emb)
-        .getOrElse(emb.count())
+      val n = graft.sources.ParquetFooters.scanRows(emb).filter(_.exact)
+        .map(_.total).getOrElse(emb.count())
       val k = math.max(8, math.ceil(n / 500.0).toInt)
       val cents = emb.orderBy("vec_id").limit(k)
         .select("embedding").collect()

@@ -496,6 +496,68 @@ object Dedup {
     pairs.join(reduced, keyCol)
   }
 
+  /** Corpus ceiling for [[nearDupPairs]]' eager shingle placement: at or
+    * below it the verify shingle sets ride IN the signature checkpoint
+    * (one scan, one shingling; the candidate step's fetch joins carry them
+    * from cached blocks), above it the checkpoint stays signature-only
+    * (shingles are ~20× the signature bytes — r17's 25 GB at the 1000×
+    * SF). 200k docs ≈ ≤200 MB of checkpointed shingles, and matches
+    * [[attachPairPayloadsAuto]]'s direct-join ceiling. */
+  private val NearDupEagerMaxDocs: Long = 200000L
+
+  /** Exactly verified shingle-Jaccard near-dup pairs — the one pipeline
+    * behind the entries' candidate → verify queries:
+    *
+    *  1. spread `docs` over the cores (a single-file corpus reads as ONE
+    *     partition; at real scale the scan is already split);
+    *  2. materialize ONE checkpoint of `id` (= `idCol`) and `sigCols`, so
+    *     every hash family reads one corpus scan's cached blocks;
+    *  3. `candidates(frame, carry)` — an existing candidate operator over
+    *     that checkpoint, emitting the pair ids in `aCol`/`bCol` and
+    *     passing `carry` through to its own fetch joins;
+    *  4. attach both docs' word 3-gram shingle sets (`sh_a`/`sh_b`) and
+    *     keep the pairs whose exact Jaccard is ≥ `minJaccard`.
+    *
+    * Shingle placement follows the footer row count of `docs`: at or under
+    * [[NearDupEagerMaxDocs]] the shingle set `sh` rides in the checkpoint
+    * and the candidate step carries it (`carry = Seq("sh" -> "sh")` — two
+    * broadcast builds instead of four, r19 JobProbe); above it, or when
+    * `docs` is not a pure parquet scan, the checkpoint stays
+    * signature-only and only candidate-touched docs are re-shingled,
+    * through the broadcast-reduced [[attachPairPayloads]] (the r17 sf100
+    * fix). Output: (`aCol`, `bCol`, jaccard), unordered. */
+  def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
+      sigCols: Seq[Column],
+      candidates: (DataFrame, Seq[(String, String)]) => DataFrame,
+      aCol: String, bCol: String, minJaccard: Double): DataFrame =
+    placedNearDupPairs(docs, idCol, textCol, sigCols, candidates, aCol, bCol,
+      minJaccard, eagerShingles = graft.sources.ParquetFooters.scanRows(docs)
+        .exists(_.total <= NearDupEagerMaxDocs))
+
+  /** [[nearDupPairs]] with the shingle placement decided by the caller. */
+  private[graft] def placedNearDupPairs(docs: DataFrame, idCol: String,
+      textCol: String, sigCols: Seq[Column],
+      candidates: (DataFrame, Seq[(String, String)]) => DataFrame,
+      aCol: String, bCol: String, minJaccard: Double,
+      eagerShingles: Boolean): DataFrame = {
+    val spread =
+      docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    val sh = shingles(col(textCol), 3).as("sh")
+    val frame = materialize(spread.select(
+      (col(idCol).as("id") +: sigCols) ++
+        (if (eagerShingles) Seq(sh) else Nil): _*))
+    val withShingles =
+      if (eagerShingles) candidates(frame, Seq("sh" -> "sh"))
+      else attachPairPayloads(candidates(frame, Nil).select(aCol, bCol),
+        spread.select(col(idCol).as("id"), sh), "id", "sh", aCol, bCol)
+    withShingles
+      .select(col(aCol), col(bCol),
+        graft.functions.TextHashFunctions.set_jaccard(col("sh_a"), col("sh_b"))
+          .as("__j"))
+      .where(col("__j") >= minJaccard)
+      .select(col(aCol), col(bCol), col("__j").as("jaccard"))
+  }
+
   // -------------------------------------------------------------------------
   // shingling
   // -------------------------------------------------------------------------
@@ -1610,7 +1672,8 @@ object Dedup {
     val n =
       if (wideArmMinDocs <= 0L) Long.MaxValue // force the wide arm
       else if (wideArmMinDocs == Long.MaxValue) 0L // pinned legacy: skip count
-      else Similarity.parquetFooterRowCount(df).getOrElse(df.count())
+      else graft.sources.ParquetFooters.scanRows(df).filter(_.exact)
+        .map(_.total).getOrElse(df.count())
     if (n >= wideArmMinDocs) {
       if (maxHamming > 3)
         throw new IllegalArgumentException(

@@ -172,66 +172,12 @@ object Similarity {
       .drop("__rank")
   }
 
-  /** Parquet-footer row count for a plan that is a pure (projected) file
-    * scan: sums row-group counts from the file footers on the driver — NO
-    * Spark job, no corpus pass. None when the plan reshapes rows (filter /
-    * join / agg) or isn't a single parquet relation, in which case the
-    * caller falls back to `count()`. At 100 TB this is the difference
-    * between reading ~KBs of footer metadata and scanning every row once
-    * just to size a sample. */
-  private[graft] def parquetFooterRowCount(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val plan: LogicalPlan = df.queryExecution.optimizedPlan
-    val rowPreserving = plan.collect { case p => p }.forall {
-      case _: Project | _: LogicalRelation => true
-      case _ => false
-    }
-    val relations = plan.collect { case lr: LogicalRelation => lr }
-    if (!rowPreserving || relations.size != 1) None
-    else {
-      val files = df.inputFiles
-      if (files.isEmpty || !files.forall(_.endsWith(".parquet"))) None
-      else {
-        val conf = df.sparkSession.sessionState.newHadoopConf()
-        try Some(graft.sources.ParquetFooters.totalRecords(files.toSeq, conf))
-        catch { case scala.util.control.NonFatal(_) => None }
-      }
-    }
-  }
-
-  /** UPPER BOUND on a plan's row count from parquet footers: like
-    * [[parquetFooterRowCount]] but `Filter` nodes are allowed (a filter
-    * only removes rows, so the unfiltered footer total bounds the output
-    * from above). None when the plan reshapes rows any other way or isn't
-    * a single parquet relation. Used to route small-corpus fast paths
-    * WITHOUT a counting job even when the input carries a predicate (the
-    * q85 `vec_id < 200` shape). */
-  private[graft] def parquetFooterRowUpperBound(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val plan: LogicalPlan = df.queryExecution.optimizedPlan
-    val boundPreserving = plan.collect { case p => p }.forall {
-      case _: Project | _: Filter | _: LogicalRelation => true
-      case _ => false
-    }
-    val relations = plan.collect { case lr: LogicalRelation => lr }
-    if (!boundPreserving || relations.size != 1) None
-    else {
-      val files = df.inputFiles
-      if (files.isEmpty || !files.forall(_.endsWith(".parquet"))) None
-      else {
-        val conf = df.sparkSession.sessionState.newHadoopConf()
-        try Some(graft.sources.ParquetFooters.totalRecords(files.toSeq, conf))
-        catch { case scala.util.control.NonFatal(_) => None }
-      }
-    }
-  }
-
   /** Driver-side ordering matching Spark's ascending-nulls-first sort for
     * the id types the centroid-build fast path supports; None for types
     * where replicating Spark's sort order is not worth the risk (the
-    * caller keeps the distributed orderBy). */
+    * caller keeps the distributed orderBy). Strings are such a type: Spark
+    * compares their UTF-8 bytes, Java's `String` order compares UTF-16
+    * units, and the two disagree past the BMP. */
   private def sparkAscOrdering(dt: DataType): Option[Ordering[Any]] = {
     def lift[T](ord: Ordering[T]): Ordering[Any] = new Ordering[Any] {
       def compare(a: Any, b: Any): Int = (a, b) match {
@@ -246,7 +192,6 @@ object Similarity {
       case IntegerType => Some(lift(Ordering.Int))
       case ShortType => Some(lift(Ordering.Short))
       case ByteType => Some(lift(Ordering.Byte))
-      case StringType => Some(lift(Ordering.String))
       case _ => None
     }
   }
@@ -275,50 +220,47 @@ object Similarity {
       lloydIters: Int = 3): Array[Array[Double]] = {
     val base = corpus.select(col(idCol).as("__id"), col(vecCol).as("__vec"))
     // SMALL-CORPUS DIRECT PATH (r20, VERDICT r19 #5): when the parquet
-    // footers BOUND the corpus under the direct cap (Filter-tolerant upper
-    // bound — a predicate like q85's `vec_id < 200` only removes rows),
-    // the whole sample fits on the driver by construction, so collect it
-    // ONCE and derive everything locally: seeds = first nClusters by id
-    // (the same ascending order Spark's orderBy.limit produced), Lloyd
-    // over the same rows through the same shared assignment rule. This
-    // replaces four jobs (count fallback, sample checkpoint, seed
-    // take-ordered, Lloyd collect) with ONE collect — the r19 JobProbe
-    // measured those four at ~half of q85's build-side executions. Ids of
-    // types whose Spark sort order we don't replicate keep the
-    // distributed path; the rare huge-dim corner (rows fit, doubles
-    // don't) falls back too, so venue choice — and thus float-fold order
-    // — never changes for any input the old code handled locally.
+    // footers BOUND the corpus under both the direct cap and `maxSample`
+    // (Filter-tolerant upper bound — a predicate like q85's `vec_id < 200`
+    // only removes rows; under `maxSample` the distributed path would use
+    // every row too), the whole sample fits on the driver by construction,
+    // so collect it ONCE and derive everything locally: seeds = first
+    // nClusters by id (the same ascending order Spark's orderBy.limit
+    // produced), Lloyd over the same rows through the same shared
+    // assignment rule. This replaces four jobs (count fallback, sample
+    // checkpoint, seed take-ordered, Lloyd collect) with ONE collect — the
+    // r19 JobProbe measured those four at ~half of q85's build-side
+    // executions. Ids of types whose Spark sort order we don't replicate
+    // keep the distributed path, and so does the huge-dim corner (rows
+    // fit, doubles don't): the bound times one row's width is checked
+    // BEFORE anything is collected.
     val directCap = corpus.sparkSession.conf
       .getOption("spark.graft.ivf.directBuildMaxRows").map(_.toLong)
       .getOrElse(32768L)
     val idOrd = sparkAscOrdering(base.schema("__id").dataType)
-    val directRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (idOrd.isEmpty) None
-      else parquetFooterRowUpperBound(corpus).filter(_ <= directCap)
-        .map(_ => base.collect())
-    directRows match {
-      case Some(rows) =>
-        val dim0 = rows.headOption.flatMap(r => Option(r.getSeq[Float](1)))
-          .map(_.length).getOrElse(0)
-        if (rows.length.toLong * math.max(dim0, 1) <= 16000000L) {
-          val ord = idOrd.get
-          val sorted = rows.sortBy(_.get(0))(ord)
-          var cents: Array[Array[Double]] = sorted.take(nClusters)
-            .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-          val dim = cents.headOption.map(_.length).getOrElse(0)
-          val vecs = rows.map(_.getSeq[Float](1).map(_.toDouble).toArray)
-          var iter = 0
-          while (iter < lloydIters) {
-            cents = lloydStepLocal(cents, vecs, dim)
-            iter += 1
-          }
-          return cents
-        }
-        // huge-dim corner: fall through to the materialized path so the
-        // refinement venue (and its float-fold order) matches the old code
-      case None => ()
+    val footer = graft.sources.ParquetFooters.scanRows(corpus)
+    val directBound = footer.map(_.total)
+      .filter(b => idOrd.nonEmpty && b <= math.min(directCap, maxSample.toLong))
+    val fitsDriver = directBound.exists { bound =>
+      val dim0 = base.select(col("__vec")).take(1).headOption
+        .flatMap(r => Option(r.getSeq[Float](0))).map(_.length).getOrElse(0)
+      bound * math.max(dim0, 1) <= 16000000L
     }
-    val n = parquetFooterRowCount(corpus).getOrElse(corpus.count())
+    if (fitsDriver) {
+      val rows = base.collect()
+      val sorted = rows.sortBy(_.get(0))(idOrd.get)
+      var cents: Array[Array[Double]] = sorted.take(nClusters)
+        .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+      val dim = cents.headOption.map(_.length).getOrElse(0)
+      val vecs = rows.map(_.getSeq[Float](1).map(_.toDouble).toArray)
+      var iter = 0
+      while (iter < lloydIters) {
+        cents = lloydStepLocal(cents, vecs, dim)
+        iter += 1
+      }
+      return cents
+    }
+    val n = footer.filter(_.exact).map(_.total).getOrElse(corpus.count())
     val (sample, sampleRows) = Dedup.materializeCounted(
       if (n <= maxSample) base
       else base
@@ -592,37 +534,6 @@ object Similarity {
           Dedup.recordLshStat(st)
           st
         }
-        // SAMPLED first probe (r20, VERDICT r19 #8, opt-in): at the 4th
-        // decade the first probe is a full (band, bucket) histogram over
-        // 338M banded keys — a real shuffle paid just to DECIDE whether to
-        // resize. With `spark.graft.lsh.probeSampleFraction` ∈ (0,1) the
-        // first probe samples that fraction of signature rows and scales
-        // the pair estimate by 1/f² (within-bucket pairs scale as f²;
-        // star-capped buckets scale as ~f, so their contribution is
-        // OVER-estimated — conservative for a resize trigger). Soundness
-        // is unchanged because a sampled estimate is never authoritative:
-        // the post-resize re-probe stays EXACT and gates the final
-        // geometry, a sampled over-budget verdict is re-confirmed exactly
-        // before any refusal, and a sampled under-budget verdict leaves
-        // `measuredEst` unset so the downstream skew-cap guard re-measures
-        // exactly. Default 0 (off): oracle SFs and the bench never sample.
-        val probeSampleF = df.sparkSession.conf
-          .getOption("spark.graft.lsh.probeSampleFraction")
-          .map(_.toDouble).getOrElse(0.0)
-        require(probeSampleF >= 0.0 && probeSampleF < 1.0,
-          s"spark.graft.lsh.probeSampleFraction must be in [0,1): $probeSampleF")
-        def sampledProbeStats(s: DataFrame): Dedup.LshStat = {
-          val st = probeStats(
-            s.sample(withReplacement = false, probeSampleF, seed = 77L),
-            "cosine-neardup-probe-sampled")
-          val scale = 1.0 / (probeSampleF * probeSampleF)
-          val scaled =
-            if (st.estCandidates <= 0) st.estCandidates
-            else if (st.estCandidates > (Long.MaxValue / scale).toLong)
-              Long.MaxValue
-            else (st.estCandidates * scale).toLong
-          st.copy(estCandidates = scaled)
-        }
         // target in PAIRS but sized for BYTES: the surviving candidates
         // co-locate both packed signatures (~2·nBits/8 B per pair) through
         // a re-shuffle, so the resized stream must land well under the
@@ -654,13 +565,8 @@ object Similarity {
                 graft.functions.TextHashFunctions.band_keys(col("__sig"), b)
                   .as("__bands")))
           }
-        var stIsExact = probeSampleF <= 0.0
-        var st =
-          if (stIsExact) probeStats(sigs, "cosine-neardup-probe")
-          else sampledProbeStats(sigs)
-        // a sampled estimate must not authorize skipping the downstream
-        // exact guard — only exact measurements land in measuredEst
-        measuredEst = if (stIsExact) st.estCandidates else -1L
+        var st = probeStats(sigs, "cosine-neardup-probe")
+        measuredEst = st.estCandidates
         var attempts = 0
         while (st.estCandidates > budget && attempts < 2) {
           var r2 = rowsR; var b2 = bandsR; var pred = st.estCandidates
@@ -669,15 +575,7 @@ object Similarity {
             b2 = captureBandsFor(threshold, r2)
             pred = predict(st.estCandidates, bandsR, b2, r2 - rowsR)
           }
-          if (r2 == rowsR && !stIsExact) {
-            // the sampled probe says refuse and the solver cannot widen —
-            // re-confirm EXACTLY before any refusal (or, if the exact
-            // number fits the budget after all, the loop exits clean)
-            st = probeStats(sigs, "cosine-neardup-probe")
-            stIsExact = true
-            measuredEst = st.estCandidates
-          }
-          else if (r2 == rowsR) attempts = 2 // solver cannot widen further: refuse
+          if (r2 == rowsR) attempts = 2 // solver cannot widen further: refuse
           else {
             // capture-shortfall observability (ADVICE r18): when the
             // capture law's band demand exceeds MaxAdaptiveBands the
@@ -702,13 +600,11 @@ object Similarity {
             Dedup.releaseMaterialized(stale) // multi-GB at corpus scale
             bandsR = b2; rowsR = r2; resized = true
             attempts += 1
-            // POST-RESIZE RE-PROBE: the authoritative guard, ALWAYS exact
-            // (sampling applies to the first decide-only probe, never
-            // here). One keys-only histogram over the resized bands — the
-            // same pass the downstream skew-cap guard would have re-run
-            // anyway (it is skipped below because this measurement exists).
+            // POST-RESIZE RE-PROBE: the authoritative guard. One keys-only
+            // histogram over the resized bands — the same pass the
+            // downstream skew-cap guard would have re-run anyway (it is
+            // skipped below because this measurement exists).
             st = probeStats(sigs, "cosine-neardup-reprobe")
-            stIsExact = true
             measuredEst = st.estCandidates
           }
         }

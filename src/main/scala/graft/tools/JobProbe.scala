@@ -5,11 +5,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall breakdown for any SparkEntry query: which scheduler jobs a
   * single pass runs, what each costs, and what the gaps between them
-  * (driver-side planning / checkpoint barriers) add up to. The per-query
-  * stage tools (Q23Probe, DedupProbe) decompose one operator; this one
-  * answers the cross-query question "how many actions does this query pay
-  * and which of them matter" — the fixed-stage tax that dominates
-  * sub-second queries at bench SF.
+  * (driver-side planning / checkpoint barriers) add up to — "how many
+  * actions does this query pay and which of them matter", the fixed-stage
+  * tax that dominates sub-second queries at bench SF. Pointed at a
+  * near-dup entry (q22, q23, …) it decomposes `Dedup.nearDupPairs`.
   * Usage: sbt "runMain graft.tools.JobProbe q89_perplexity_buckets [sfDir] [reps]"
   */
 object JobProbe {

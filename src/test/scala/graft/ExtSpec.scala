@@ -406,15 +406,57 @@ class ExtSpec extends SparkTestBase {
         jobs += 1
     }
     spark.sparkContext.addSparkListener(listener)
+    import graft.sources.ParquetFooters
     try {
-      assert(Similarity.parquetFooterRowCount(df).contains(12345L))
+      assert(ParquetFooters.scanRows(df).contains(
+        ParquetFooters.ScanRows(12345L, exact = true)))
       // drain the async listener bus before asserting
       Thread.sleep(1000)
       assert(jobs == 0, s"footer row count must not run a Spark job (ran $jobs)")
     } finally spark.sparkContext.removeSparkListener(listener)
-    // row-reshaping plans refuse the fast path (a filtered count from
-    // footers would be WRONG, not just stale)
-    assert(Similarity.parquetFooterRowCount(df.where($"id" < 10)).isEmpty)
+    // a filter only removes rows: the footer total is then an upper bound,
+    // never an exact count (a filtered count from footers would be WRONG)
+    assert(ParquetFooters.scanRows(df.where($"id" < 10)).contains(
+      ParquetFooters.ScanRows(12345L, exact = false)))
+    // any other row-reshaping plan refuses the footer path
+    assert(ParquetFooters.scanRows(df.groupBy($"id" % 3).count()).isEmpty)
+    assert(ParquetFooters.scanRows(df.limit(5)).isEmpty)
+  }
+
+  test("IVF centroid build: direct path == distributed path on a parquet corpus") {
+    // the small-corpus direct path (one collect, driver-side seeds + Lloyd)
+    // must reproduce the distributed build bit-for-bit: same first-k-by-id
+    // seeds, same rows in the same order through the same local step
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    (0 until 600).map { i =>
+      val rnd = new scala.util.Random(i * 31L + 5)
+      (i.toLong, Array.fill(8)(rnd.nextFloat() * 2 - 1))
+    }.toDF("vec_id", "embedding").write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    def build(): (Seq[Seq[Double]], Int) = {
+      Thread.sleep(500)
+      val before = jobs
+      val c = Similarity.buildIvfCentroids(corpus, "vec_id", "embedding",
+        nClusters = 8)
+      Thread.sleep(1000) // drain the async listener bus
+      (c.map(_.toSeq).toSeq, jobs - before)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (direct, directJobs) = build()
+      spark.conf.set("spark.graft.ivf.directBuildMaxRows", "0")
+      val (distributed, distributedJobs) =
+        try build() finally spark.conf.unset("spark.graft.ivf.directBuildMaxRows")
+      assert(direct.size == 8 && direct == distributed)
+      // the default build really took the direct path (fewer jobs)
+      assert(directJobs < distributedJobs,
+        s"direct=$directJobs distributed=$distributedJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("simhash hamming: identical docs → distance 0") {
@@ -1059,55 +1101,6 @@ class ExtSpec extends SparkTestBase {
     assert(resizedRun.nonEmpty && resizedRun == pinned,
       s"resized=${resizedRun.size} pinned=${pinned.size} " +
         s"missed=${(pinned -- resizedRun).size} extra=${(resizedRun -- pinned).size}")
-  }
-
-  test("cosine near-dup SAMPLED first probe: same output, exact re-probe still gates") {
-    import graft.ext.{Dedup, Similarity}
-    // VERDICT r19 #8: at the 4th decade the first probe histograms 338M
-    // banded keys just to DECIDE whether to resize — the sampled probe
-    // (opt-in conf) scales a fraction's estimate instead. Soundness: the
-    // post-resize re-probe stays exact, and a sampled estimate never
-    // authorizes skipping the downstream guard. Same fixture as the
-    // self-resize test; the sampled run must land on the same exact pair
-    // set and record both the sampled probe and the exact re-probe.
-    val dim = 16
-    val base = (0 until 3000).map { i =>
-      val rnd = new scala.util.Random(i * 7919L + 13)
-      (i.toLong, Array.fill(dim)(rnd.nextFloat() * 2 - 1))
-    }
-    val planted = base.filter(_._1 % 5 == 0).map { case (id, v) =>
-      (id + 10000L, v.zipWithIndex.map { case (x, j) =>
-        x + ((id * 13 + j) % 5 - 2) * 0.01f })
-    }
-    val df = (base ++ planted).toDF("vec_id", "embedding").localCheckpoint(true)
-    def pairs(d: org.apache.spark.sql.DataFrame) = d
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val conf = spark.conf
-    val statsMark = Dedup.lshStatsSeen
-    val sampledRun =
-      try {
-        conf.set("spark.graft.lsh.candidateBudget", "100000")
-        conf.set("spark.graft.lsh.probeSampleFraction", "0.5")
-        pairs(Similarity.cosineNearDupPairs(df, "vec_id", "embedding",
-          dim, threshold = 0.9))
-      } finally {
-        conf.unset("spark.graft.lsh.candidateBudget")
-        conf.unset("spark.graft.lsh.probeSampleFraction")
-      }
-    val runStats = Dedup.lshStatsSince(statsMark)
-    assert(runStats.exists(_.kind == "cosine-neardup-probe-sampled"),
-      s"sampled probe missing: ${runStats.map(_.kind)}")
-    assert(runStats.exists(_.kind == "cosine-neardup-reprobe"),
-      s"exact post-resize re-probe missing: ${runStats.map(_.kind)}")
-    val pinned =
-      try {
-        conf.set("spark.graft.lsh.candidateBudget", "0")
-        pairs(Similarity.cosineNearDupPairs(df, "vec_id", "embedding",
-          dim, threshold = 0.9, bands = 16, rowsPerBand = 8))
-      } finally conf.unset("spark.graft.lsh.candidateBudget")
-    assert(sampledRun.nonEmpty && sampledRun == pinned,
-      s"sampled=${sampledRun.size} pinned=${pinned.size} " +
-        s"missed=${(pinned -- sampledRun).size} extra=${(sampledRun -- pinned).size}")
   }
 
   test("ExtendSignBits: extended signature == full re-hash, bit-for-bit") {
@@ -2331,6 +2324,37 @@ class ExtSpec extends SparkTestBase {
     assert(out == Map(1L -> ("a b c d e f", 0L), 2L -> ("x y", 4L)))
   }
 
+  /** A candidate family as a [[Dedup.nearDupPairs]] step over its
+    * (id, sig, ssig[, sh]) checkpoint, with the step's pair columns. */
+  private case class NearDupStep(family: String,
+      run: (org.apache.spark.sql.DataFrame, Seq[(String, String)]) =>
+        org.apache.spark.sql.DataFrame,
+      aCol: String, bCol: String)
+
+  private def nearDupSteps(collapseSigMinDocs: Long): Seq[NearDupStep] = Seq(
+    NearDupStep("minhash", (f, c) => Dedup.minhashDupPairsFromSigs(f, "id",
+      "sig", bands = 16, threshold = 0.5,
+      collapseSigMinDocs = collapseSigMinDocs, carry = c), "id_a", "id_b"),
+    NearDupStep("multi-family", (f, c) => Dedup.multiFamilyDupCandidates(f,
+      "id", "sig", "ssig", mBands = 16, estThreshold = 0.65, maxHamming = 3,
+      carry = c), "id_a", "id_b"),
+    NearDupStep("incremental", (f, c) => {
+      val corpus = Dedup.materialize(f.where(col("id") % 10 =!= 0))
+      Dedup.incrementalMinhashDupPairs(f.where(col("id") % 10 === 0),
+        Dedup.minhashBandIndex(corpus, "id", "sig", bands = 32), corpus,
+        "id", "sig", bands = 32, threshold = 0.35, carry = c)
+    }, "inc_id", "corpus_id"))
+
+  /** (a, b, jaccard) of one [[Dedup.nearDupPairs]] run with the shingle
+    * placement forced. */
+  private def placedPairs(corpus: org.apache.spark.sql.DataFrame,
+      step: NearDupStep, eager: Boolean): Set[(Long, Long, Double)] =
+    Dedup.placedNearDupPairs(corpus, "doc_id", "text",
+        Seq(Dedup.minhashSignature(col("text"), numHashes = 64, shingleN = 3)
+          .as("sig"), Dedup.simhash128(col("text")).as("ssig")),
+        step.run, step.aCol, step.bCol, minJaccard = 0.5, eagerShingles = eager)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
   test("carry columns ride the est fetch == separate pair attach (all three candidate ops)") {
     // the eager-shingle entries fetch verify payloads through the
     // operator's existing per-pair signature joins (carry) instead of a
@@ -2390,6 +2414,35 @@ class ExtSpec extends SparkTestBase {
       pairsOf(incPlain, "inc_id", "corpus_id", est = true),
       "incremental carry mismatch")
     assert(pairsOf(incCarry, "inc_id", "corpus_id", est = true).nonEmpty)
+
+    // the same three families through nearDupPairs with the shingle
+    // placement forced both ways — eager (shingles carried through the
+    // step's fetch joins) and lazy (signature-only checkpoint + the
+    // broadcast-reduced attachPairPayloads) must verify to the same pairs
+    val sameText = "every document carries this same duplicated sentence"
+    val astral = "\uD835\uDD18nicode \uD83D\uDE00 text with astral " +
+      "\uD800\uDF48 symbols and a few more words"
+    val corpora = Seq(
+      "fixture" -> docs,
+      "empty and whitespace-only" -> Seq((0L, ""), (1L, "   "), (2L, "\t\n"),
+        (3L, ""), (10L, " \u00A0 "), (11L, "a b c d e"), (20L, "a b c d e"))
+        .toDF("doc_id", "text"),
+      "non-BMP" -> Seq((0L, astral), (1L, astral), (2L, astral + " tail"),
+        (10L, astral + " \uD83D\uDE01"), (11L, "plain ascii words only here"))
+        .toDF("doc_id", "text"),
+      "one document" -> Seq((0L, "the only document in this corpus"))
+        .toDF("doc_id", "text"),
+      "all duplicates" -> (0 until 12).map(i => (i.toLong, sameText))
+        .toDF("doc_id", "text"))
+    for ((name, corpus) <- corpora; step <- nearDupSteps(1L)) {
+      val eager = placedPairs(corpus, step, eager = true)
+      val lazyPairs = placedPairs(corpus, step, eager = false)
+      assert(eager == lazyPairs, s"${step.family} on $name: " +
+        s"eager-only=${eager -- lazyPairs} lazy-only=${lazyPairs -- eager}")
+      if (name == "fixture" || name == "all duplicates" || name == "non-BMP")
+        assert(eager.nonEmpty, s"${step.family} on $name verified no pairs")
+      if (name == "one document") assert(eager.isEmpty)
+    }
   }
 
   test("carry equivalence holds in PAYLOAD banding form (high-collision corpus)") {
@@ -2460,6 +2513,16 @@ class ExtSpec extends SparkTestBase {
       assert(mfPairs == pairsOf(mfPlain, est = false),
         "multi-family payload-form carry mismatch")
       assert(mfPairs.nonEmpty)
+
+      // nearDupPairs, placement forced both ways, in the payload form
+      for (step <- nearDupSteps(Dedup.defaultScaleGeomMinDocs)) {
+        val eager = placedPairs(collDocs, step, eager = true)
+        val lazyPairs = placedPairs(collDocs, step, eager = false)
+        assert(eager.nonEmpty && eager == lazyPairs, s"${step.family}: " +
+          s"eager-only=${eager -- lazyPairs} lazy-only=${lazyPairs -- eager}")
+      }
+      assert(lastOfFamily("multiband").exists(_.kind == "multiband"),
+        "nearDupPairs runs left the payload form")
     } finally spark.conf.unset("spark.graft.lsh.candidateBudget")
   }
 

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.TableLoader
+import graft.sources.{ParquetFooters, TableLoader}
 
 /** Pins the fixture-load contract against driver-side testdata drift.
   *
@@ -57,16 +57,19 @@ class FixtureContractSpec extends SparkTestBase {
     locally { val _ = dir } // tmp dir reserved for symmetry; nothing written
   }
 
-  test("parquetRowCount refreshes when a parquet file is rewritten in place") {
+  test("footer row count refreshes when a parquet file is rewritten in place") {
     // VERDICT r19 #7: rewriting a parquet file keeps its NAME, so the parent
-    // directory's mtime does not move — the row-count cache must key on the
-    // leaf files' own (path, length, mtime) or the eager/lazy shingle gate
-    // routes on a stale corpus size after a fixture regeneration.
+    // directory's mtime does not move — the footer row count behind
+    // Dedup.nearDupPairs' eager/lazy shingle gate must follow the files'
+    // bytes, or the gate routes on a stale corpus size after a fixture
+    // regeneration (ParquetFooters reads the footers, uncached).
     val dir = Files.createTempDirectory("graft_rowcount").toString
     val table = s"$dir/documents.parquet"
+    def footerRows = ParquetFooters
+      .scanRows(spark.read.parquet(table)).map(_.total)
     spark.range(0, 100, 1, 1).toDF("doc_id")
       .write.mode("overwrite").parquet(table)
-    assert(EntryPipeline.parquetRowCount(spark, table) == 100L)
+    assert(footerRows.contains(100L))
 
     // Rewrite IN PLACE: same leaf file names, different row count. Write to
     // a sibling dir and copy bytes over the existing part files so the
@@ -90,7 +93,7 @@ class FixtureContractSpec extends SparkTestBase {
     // (run minutes later) would.
     assert(oldParts.head.setLastModified(oldParts.head.lastModified + 2000L))
 
-    assert(EntryPipeline.parquetRowCount(spark, table) == 37L,
+    assert(footerRows.contains(37L),
       "row count must refresh after an in-place parquet rewrite")
   }
 
