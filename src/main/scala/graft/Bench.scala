@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -40,54 +40,28 @@ import org.apache.spark.sql.SparkSession
   * compare canaries first before reading a cross-run query delta as real.
   */
 object Bench {
+  /** Queries whose dominant work is a map-only projection: under
+    * `.count()` Catalyst prunes the projection (and eliminates the sort),
+    * so the timing measures little more than the scan — the r10 q80
+    * caveat (0.11s for a full text rebuild). These execute the FULL plan
+    * through the noop sink instead: every output column materializes,
+    * nothing is written. Applied ONLY to queries absent from the round-1
+    * baseline; baseline-overlap map queries (q21/q26/q49/q50) keep
+    * `.count()` so their trend line stays methodology-identical to the
+    * r1 numbers they gate against (both sides under-measure identically). */
+  private val fullEval = Set("q66_markup_strip", "q68_repetition_stats",
+    "q75_quantize_int8", "q80_strip_dup_spans", "q86_blocklist",
+    "q88_unicode_normalize")
+
+  /** The measured action of one declared query's frame, as every bench
+    * pass runs it: the noop sink for [[fullEval]] queries, else `count()`. */
+  def run(name: String, df: DataFrame): Unit =
+    if (fullEval(name)) df.write.format("noop").mode("overwrite").save()
+    else { df.count(); () }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode liveness: driver and "executor" share one GC domain, so
-      // a heavy sweep (32 busy tasks + multi-second G1 young pauses at big
-      // heaps) can starve the in-process heartbeat RPC loop long past the
-      // 120s default — HeartbeatReceiver then kills the only executor and
-      // the whole context collapses mid-bench (observed at 10x SF: 268s
-      // heartbeat gap -> exit 56 at minute 28). In-process heartbeats
-      // carry no liveness signal worth dying for.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      // static conf, default 100: a 78-query suite generates far more
-      // codegen'd classes than that, so every repeat recompiled its
-      // whole-stage classes through janino — a uniform per-query tax the
-      // canary can't see. Size the cache to hold the full suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Shuffle writer: SPARK'S DEFAULT threshold (bypass-merge at
-      // R ≤ 200), env-overridable. History (r19): the round initially
-      // forced the sort-path writer (threshold 0) off a measurement that
-      // the bypass writer's one-file-per-block cost (~9 ms/block on this
-      // ext4 VM disk) dominated tiny-SF shuffles — but (a) the round's
-      // structural work then removed most of those shuffles, and a
-      // same-window re-A/B at sf0.1 measures the two writers as a wash
-      // on the current code, while (b) at the 100× corpus the sort-path
-      // writer's buffer/spill pass costs real money on big-block
-      // shuffles (q19 sql join 6.93 s sort-path vs 4.06 s bypass;
-      // q22 12.89 vs 11.93 — measured this round). Production R is >200,
-      // where Spark takes the sort path regardless and this setting is
-      // inert; locally the default lets each shuffle's block size pick
-      // the cheaper writer the way upstream intended.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "200"))
-      // Shuffle/spill scratch: default /tmp sits on the sandbox's VM
-      // disk whose small-file ops dominate tiny-SF shuffles. A tmpfs
-      // default keeps the bench measuring the engine, not the VM's FS
-      // metadata path; env-overridable for hosts where RAM-backed
-      // scratch is wrong (production: point at the NVMe array).
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-shuffle"
-        else System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
+    val spark = graft.tools.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_BENCH_QUERIES=q74,q75 pins the sweep to matching names
@@ -105,23 +79,8 @@ object Bench {
       }
     }
 
-    // Queries whose dominant work is a map-only projection: under
-    // `.count()` Catalyst prunes the projection (and eliminates the sort),
-    // so the timing measures little more than the scan — the r10 q80
-    // caveat (0.11s for a full text rebuild). These execute the FULL plan
-    // through the noop sink instead: every output column materializes,
-    // nothing is written. Applied ONLY to queries absent from the round-1
-    // baseline; baseline-overlap map queries (q21/q26/q49/q50) keep
-    // `.count()` so their trend line stays methodology-identical to the
-    // r1 numbers they gate against (both sides under-measure identically).
-    val fullEval = Set("q66_markup_strip", "q68_repetition_stats",
-      "q75_quantize_int8", "q80_strip_dup_spans", "q86_blocklist",
-      "q88_unicode_normalize")
-    def exec(name: String, dir: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, dir)
-      if (fullEval(name)) df.write.format("noop").mode("overwrite").save()
-      else { df.count(); () }
-    }
+    def exec(name: String, dir: String): Unit =
+      run(name, SparkEntry.queries(name)(spark, dir))
 
     // global warmup: full query set at the smallest SF (JIT + engine code
     // paths + one-time costs like rollup store build / view registration).
@@ -169,7 +128,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     def canaryPar(): Double = {
-      val n = cpus.toInt
+      val n = graft.tools.Sessions.cpus
       val t0 = System.nanoTime()
       val ts = (1 to n).map(_ => new Thread(() => { canarySink ^= canaryLoop() }))
       ts.foreach(_.start()); ts.foreach(_.join())

@@ -52,6 +52,9 @@ object Decontaminate {
     docs.join(hits.select(col(idCol)), Seq(idCol), "left_anti")
   }
 
+  /** Uncapped fuzzy-decon candidate volume past which lshStats WARNs. */
+  private val WarnCandidates: Long = 10000000L
+
   /** FUZZY decontamination — near-duplicate (not verbatim) benchmark
     * leakage: training documents whose word-shingle Jaccard against some
     * benchmark document reaches `threshold`, found via MinHash LSH
@@ -147,9 +150,7 @@ object Decontaminate {
         // and record/WARN its volume through lshStats
         val c = Dedup.materialize(colliding)
         Dedup.reportUncappedCollisionVolume(c, "fuzzy-decon",
-          warnAt = docs.sparkSession.conf
-            .getOption("spark.graft.decon.warnCandidates")
-            .map(_.toLong).getOrElse(10000000L))
+          warnAt = WarnCandidates)
         c
       } else {
         val byBucket = Window.partitionBy("band", "bucket")

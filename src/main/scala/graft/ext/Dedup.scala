@@ -875,6 +875,11 @@ object Dedup {
       s"carry out names must be distinct: ${carry.map(_._2).mkString(", ")}")
   }
 
+  /** `joinSigs` broadcast caps: measured projection bytes, and the row
+    * count for frames with no recorded bytes. */
+  private val BroadcastSigBytes: Long = 64L << 20
+  private val BroadcastSigs: Long = 1L << 18
+
   private[ext] def joinSigs(pairs: DataFrame, sigs: DataFrame, idCol: String,
       cols: (Column, String)*): DataFrame = {
     val nSigs = materializedRows(sigs)
@@ -883,12 +888,6 @@ object Dedup {
     // proxy: 64-hash minhash + 128-bit simhash rows near a 2^20 cap are
     // several hundred MB of hashed relation — ADVICE r17); the row cap is
     // the fallback for externally-materialized frames
-    val byteCap = sigs.sparkSession.conf
-      .getOption("spark.graft.lsh.broadcastSigBytes").map(_.toLong)
-      .getOrElse(64L << 20)
-    val rowCap = sigs.sparkSession.conf
-      .getOption("spark.graft.lsh.broadcastSigs").map(_.toLong)
-      .getOrElse(1L << 18)
     val sigBytes = materializedBytes(sigs)
     // the build side is a PRUNED projection of the stored frame — e.g.
     // 64-B minhash_bytes columns off a frame whose stored rows are
@@ -901,13 +900,13 @@ object Dedup {
     // The probe only runs when stored bytes EXCEED the cap: below it the
     // decision is broadcast either way, so small corpora pay no extra job.
     val projBytes =
-      if (sigBytes < 0 || nSigs <= 0 || sigBytes <= byteCap) sigBytes
+      if (sigBytes < 0 || nSigs <= 0 || sigBytes <= BroadcastSigBytes) sigBytes
       else sigs.select(col(idCol) +: cols.map(_._1): _*)
         .limit(1).collect().headOption
         .map(r => math.min(sigBytes, (projectedRowBytes(r) + 24L) * nSigs))
         .getOrElse(sigBytes)
     val small =
-      if (projBytes >= 0) projBytes <= byteCap else nSigs <= rowCap
+      if (projBytes >= 0) projBytes <= BroadcastSigBytes else nSigs <= BroadcastSigs
     if (nSigs >= 0) System.err.println(
       s"[graft-lsh] joinSigs: rows=$nSigs storedBytes=$sigBytes " +
         s"projBytes=$projBytes -> " +

@@ -374,6 +374,9 @@ object Vocabulary {
       meta.getLong(1), meta.getLong(2), meta.getInt(3))
   }
 
+  /** Model size, in features, up to which DSIR scoring broadcasts it. */
+  private val DsirBroadcastFeatures: Long = 1L << 21
+
   /** Per-document DSIR log importance weight: `Σ_f ln p̂_target(f) − ln
     * p̂_raw(f)` over the document's feature stream (duplicates count —
     * it is a log-likelihood ratio, not a set overlap). High weight =
@@ -397,15 +400,12 @@ object Vocabulary {
     // 35.8 s vs 13.0 s for the IDENTICAL model read back from parquet
     // (which the planner broadcasts on file-size stats) at sf10, and it
     // was the real residual behind q83's 21x decade ratio (VERDICT r16
-    // #1). Broadcast up to `spark.graft.dsir.broadcastFeatures` entries
-    // (default 2^21 ≈ 170 MB of hashed relation — bucket mode's B rows
-    // always qualify); past that, shuffle-hash with the model as the
-    // build side — neither arm ever sorts the feature stream.
-    val cap = docs.sparkSession.conf
-      .getOption("spark.graft.dsir.broadcastFeatures").map(_.toLong)
-      .getOrElse(1L << 21)
+    // #1). Broadcast up to `DsirBroadcastFeatures` entries (2^21 ≈ 170 MB
+    // of hashed relation — bucket mode's B rows always qualify); past
+    // that, shuffle-hash with the model as the build side — neither arm
+    // ever sorts the feature stream.
     val ratio =
-      if (model.featureSpace <= cap) broadcast(model.logRatio)
+      if (model.featureSpace <= DsirBroadcastFeatures) broadcast(model.logRatio)
       else model.logRatio.hint("shuffle_hash")
     docs.select(col(idCol),
         explode(dsirFeatures(col(textCol))).as("__f0"))

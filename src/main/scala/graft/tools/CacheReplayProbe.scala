@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-broker replay: a FRESH JVM (forked by LocalClusterRehearsal)
   * pointing at the same SegmentStore and the same file-backed cache
   * directory as the first broker, running a query whose day-partial
@@ -20,12 +18,7 @@ object CacheReplayProbe {
     require(args.length == 5,
       "usage: CacheReplayProbe storeRoot cacheDir queryFile wantFile expectedHits")
     val Array(storeRoot, cacheDir, queryFile, wantFile, expectedHitsS) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("local[2]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       spark.conf.set("spark.graft.resultCache.backend", "file")
@@ -40,7 +33,7 @@ object CacheReplayProbe {
           jobs.incrementAndGet(): Unit
       })
       val got = engine.executeJson(query)
-      Thread.sleep(1500) // drain the async listener bus
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       val hits = engine.metrics.last.segmentHits
       val ok = got == want && jobs.get() == 0 && hits == expectedHitsS.toInt
       println(s"[cache-replay] ${if (ok) "PASS" else "FAIL"} jobs=${jobs.get()} " +

@@ -36,15 +36,7 @@ object IngestRehearsal {
   def main(args: Array[String]): Unit = {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     var failures = 0
@@ -74,11 +66,8 @@ object IngestRehearsal {
         jobs.incrementAndGet()
     })
     def stableJobs(): Int = {
-      var last = -1; var cur = jobs.get(); var spins = 0
-      while (cur != last && spins < 100) {
-        last = cur; Thread.sleep(100); cur = jobs.get(); spins += 1
-      }
-      cur
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      jobs.get()
     }
     def dirBytes(p: java.nio.file.Path): Long = {
       val s = java.nio.file.Files.walk(p)

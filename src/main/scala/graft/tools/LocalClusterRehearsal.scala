@@ -44,8 +44,7 @@ object LocalClusterRehearsal {
       "set SPARK_SCALA_VERSION=2.13: the dist-layout executor launcher " +
         "needs it and fails with 'Cannot find any build directories' otherwise")
 
-    val spark = SparkSession.builder()
-      .master(master)
+    val spark = Sessions.builder(master, 32)
       // the master-string memory is the WORKER's capacity; executors still
       // size their heap from spark.executor.memory (default 1g — which
       // OOM-killed the sf0.1 sweep, exit 143). Claim most of the worker.
@@ -53,27 +52,11 @@ object LocalClusterRehearsal {
         sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM",
           if (specMode) "1600m" else "7g"))
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
       // don't schedule until BOTH executors registered — with one 16-core
       // executor up first, a 16-task probe fits entirely on it and the
       // two-JVM gate below false-fails
       .config("spark.scheduler.minRegisteredResourcesRatio", "1.0")
       .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
-      // align the shuffle writer + scratch dir with Bench: Spark's DEFAULT
-      // writer threshold (bypass-merge at R ≤ 200 — the r19 revert after
-      // cross-decade evidence showed the forced sort path losing 1.7× on
-      // big-block shuffles), env-overridable the same way, so rehearsal
-      // numbers stay comparable to bench numbers on any host
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "200"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-shuffle"
-        else System.getProperty("java.io.tmpdir")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

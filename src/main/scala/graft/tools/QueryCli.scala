@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.engine.Engine
 import graft.sources.ParquetDirCatalog
-import org.apache.spark.sql.SparkSession
 
 /** Standalone query endpoint — the CLI equivalent of the reference's
   * `POST /druid/v2` (JSON query on stdin or argv, Druid-shaped JSON result
@@ -17,12 +16,8 @@ object QueryCli {
     val json =
       if (args.length > 1) args(1)
       else scala.io.Source.stdin.mkString
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(
+      sys.env.getOrElse("SPARK_MASTER", "local[8]"), 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new Engine(spark, new ParquetDirCatalog(dir))
     try println(engine.executeJson(json))

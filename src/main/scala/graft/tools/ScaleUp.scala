@@ -56,13 +56,7 @@ object ScaleUp {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "target/testdata-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     scaleAll(spark, src, out, n)
     spark.stop()

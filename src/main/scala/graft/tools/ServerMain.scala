@@ -159,11 +159,9 @@ object ServerMain {
   def main(args: Array[String]): Unit = {
     // args are a convenience alias for the two roots, so an operator can
     // `ServerMain <dataDir> [storeRoot]` without -D plumbing
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
+    val builder = Sessions.builder(
+        sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32").toInt)
       .config("spark.ui.enabled",
         sys.props.getOrElse("spark.ui.enabled", "false"))
     args.headOption.foreach(builder.config("spark.graft.server.data", _))

@@ -3,7 +3,6 @@ package graft.tools
 import graft.SparkEntry
 import graft.engine.Engine
 import graft.sources.ParquetDirCatalog
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end smoke: drives the public surfaces (entry(), Engine.executeJson
   * incl. the error contract) against sf0.001. Run:
@@ -11,12 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // 1. flagship entry smoke (the driver's rows>0 check)

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.store.SegmentStore
 import graft.streaming.RealtimeIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -46,15 +45,7 @@ object StreamRehearsal {
     val rates: Seq[Long] =
       if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(50000L, 200000L, 800000L, 1600000L, 3200000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

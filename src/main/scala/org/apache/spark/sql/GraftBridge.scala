@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge between the public Column API and Catalyst Expressions.
@@ -21,4 +22,11 @@ object GraftBridge {
     * analyzer must be able to recurse into them. */
   def analyzableExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** Block until every event posted so far has reached every listener.
+    * The listener bus is asynchronous: a job's start/end events can land
+    * after the action that ran it returns, so a listener-side count read
+    * right after the action may miss them. Throws a TimeoutException
+    * if the bus is still busy after 10 s. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

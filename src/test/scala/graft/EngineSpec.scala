@@ -455,7 +455,7 @@ class EngineSpec extends SparkTestBase {
       assert(streamed == want)
       val m = engine.metrics.last
       assert(m.cached && m.segmentHits == 4 && m.segmentMisses == 0, m.toString)
-      Thread.sleep(1500) // drain the async listener bus
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       assert(jobs == 0, s"fragment-complete stream must run zero jobs, ran $jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1389,7 +1389,7 @@ class EngineSpec extends SparkTestBase {
       spark.sparkContext.addSparkListener(listener)
       try {
         assert(b.executeJson(q("quarter")) == wantQ)
-        Thread.sleep(1500)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
         assert(jobs == 0, s"second engine must serve from the shared dir, ran $jobs jobs")
       } finally spark.sparkContext.removeSparkListener(listener)
       assert(b.metrics.last.segmentHits == 9 && b.metrics.last.segmentMisses == 0,
@@ -1485,7 +1485,7 @@ class EngineSpec extends SparkTestBase {
       val streamed = engine.executeJsonStream(
         monthly("2024-06-30T00:00:00Z")).mkString
       assert(streamed == want)
-      Thread.sleep(1500)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       assert(jobs == 0, s"fully-warm partial merge must run zero jobs, ran $jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
     // a write into May invalidates ONLY that chunk's partial

@@ -410,8 +410,7 @@ class ExtSpec extends SparkTestBase {
     try {
       assert(ParquetFooters.scanRows(df).contains(
         ParquetFooters.ScanRows(12345L, exact = true)))
-      // drain the async listener bus before asserting
-      Thread.sleep(1000)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       assert(jobs == 0, s"footer row count must not run a Spark job (ran $jobs)")
     } finally spark.sparkContext.removeSparkListener(listener)
     // a filter only removes rows: the footer total is then an upper bound,
@@ -439,11 +438,11 @@ class ExtSpec extends SparkTestBase {
         jobs += 1
     }
     def build(): (Seq[Seq[Double]], Int) = {
-      Thread.sleep(500)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       val before = jobs
       val c = Similarity.buildIvfCentroids(corpus, "vec_id", "embedding",
         nClusters = 8)
-      Thread.sleep(1000) // drain the async listener bus
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       (c.map(_.toSeq).toSeq, jobs - before)
     }
     spark.sparkContext.addSparkListener(listener)

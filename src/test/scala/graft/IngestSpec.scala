@@ -192,12 +192,8 @@ class IngestSpec extends SparkTestBase {
         jobs.incrementAndGet()
     }
     def stableJobCount(): Int = {
-      // the listener bus is async — poll until the count stops moving
-      var last = -1; var cur = jobs.get(); var spins = 0
-      while (cur != last && spins < 100) {
-        last = cur; Thread.sleep(100); cur = jobs.get(); spins += 1
-      }
-      cur
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      jobs.get()
     }
 
     val store = freshStore()
@@ -632,7 +628,7 @@ class IngestSpec extends SparkTestBase {
     try {
       engine.executeJsonStream(daily).mkString
       engine.executeJsonStream(monthly).mkString
-      Thread.sleep(1500)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       assert(jobs == 0, s"warm queries must run zero jobs, ran $jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
 
@@ -701,11 +697,8 @@ class IngestSpec extends SparkTestBase {
           jobs.incrementAndGet(): Unit
       }
       def stableJobCount(): Int = {
-        var last = -1; var cur = jobs.get(); var spins = 0
-        while (cur != last && spins < 100) {
-          last = cur; Thread.sleep(100); cur = jobs.get(); spins += 1
-        }
-        cur
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+        jobs.get()
       }
       spark.sparkContext.addSparkListener(listener)
       try {

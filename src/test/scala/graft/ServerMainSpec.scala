@@ -8,6 +8,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 /** The production entry point's wiring contract: conf → catalog + engine +
   * tasks + retention + HTTP server, the retention loop actually started,
   * segment datasources shadowing same-named static tables, and loud
@@ -181,5 +183,27 @@ class ServerMainSpec extends SparkTestBase {
           wired.catalog.datasourceNames.contains("events_mv"))
       } finally wired.stop()
     }
+  }
+
+  test("every runnable main builds its session through Sessions") {
+    // one conf set for the bench, the oracle dump, the rehearsals and the
+    // probes: a second builder site is where their confs drift apart
+    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.exists(_.endsWith("graft/tools/Sessions.scala")))
+    val offenders = for {
+      f <- files if !f.endsWith("graft/tools/Sessions.scala")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if builderCall.findFirstIn(code).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}"
+    assert(offenders.isEmpty,
+      s"SparkSession.builder() outside graft.tools.Sessions: ${offenders.mkString(", ")}")
   }
 }
