@@ -11,6 +11,7 @@ import java.time.Instant
 import java.time.format.DateTimeFormatter
 import java.util.UUID
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.util.control.NonFatal
 
 /** Engine façade — the Spark-native equivalent of Druid's single query
@@ -258,198 +259,73 @@ class Engine(spark: SparkSession, catalog: Catalog,
         "ForbiddenException")
     }
 
-  /** Transport-facing authorization probes: the HTTP layer runs these
-    * BEFORE honoring If-None-Match, so a denied caller cannot use 304s to
-    * confirm a datasource's existence or the freshness of its segments. */
-  def assertAuthorized(query: Query, identity: Option[String]): Unit =
-    authorize(query.getClass.getSimpleName,
-      query.context.getOrElse("queryId", "etag-probe"), identity,
-      datasourceNames(query.dataSource))
+  /** One request, prepared once (the lifecycle's INITIALIZE and AUTHORIZE
+    * steps, reference `query/query-internal-procedure.md:68-96`): the
+    * query is parsed, its queryId assigned, the caller authorized, the
+    * etag computed and the context flags read exactly once, then handed to
+    * the HTTP layer (ETag / If-None-Match) and on to execution. The
+    * authorization check precedes the etag, so a denied caller cannot use
+    * 304s to confirm a datasource's existence or the freshness of its
+    * segments.
+    * `fragments` is the per-(segment, query) serve `(useCache,
+    * populateFragments, hits, misses) => merged result`; `compute` plans
+    * and encodes the whole query as a chunk stream. */
+  private[engine] final class Prepared(val queryType: String,
+      val queryId: String, identity: Option[String], val etag: String,
+      val context: Map[String, String],
+      val fragments: (Boolean, Boolean, AtomicInteger, AtomicInteger) => Option[String],
+      val compute: () => Iterator[String]) {
+    val timeoutMs: Option[Long] = Engine.parseTimeout(context)
+    val useCache: Boolean = context.get("useCache").forall(_.toBoolean)
+    val populateCache: Boolean = context.get("populateCache").forall(_.toBoolean)
+    private val recorded = new java.util.concurrent.atomic.AtomicBoolean
 
-  def assertSqlAuthorized(sql: String, datasources: Seq[String],
-      identity: Option[String]): Unit =
-    assertSqlNamesAuthorized(resolvedSqlNames(sql, datasources), identity)
+    /** The LOGGING step: the request's one metric row — the first outcome
+      * reported wins (a buffered timeout is reported by the waiting caller
+      * while the abandoned worker may still finish later). */
+    def record(millis: Long, success: Boolean, cached: Boolean = false,
+        bytes: Long = 0L, segmentHits: Int = 0, segmentMisses: Int = 0): Unit =
+      if (recorded.compareAndSet(false, true))
+        Engine.this.record(QueryMetric(queryId, queryType, millis, success,
+          cached, bytes, segmentHits, segmentMisses, identity))
 
-  /** Pre-resolved variants for the HTTP layer: the statement is parsed and
-    * its names catalog-probed ONCE per request ([[resolveSqlNames]]), then
-    * threaded through authorization, the etag, and execution — instead of
-    * each step re-running the parser and the catalog probes. */
-  def resolveSqlNames(sql: String, datasources: Seq[String]): Seq[String] =
-    resolvedSqlNames(sql, datasources)
+    def timeoutError: QueryError = QueryError("Query timeout",
+      s"query $queryId timed out after ${timeoutMs.getOrElse(0L)}ms",
+      "QueryTimeoutException")
+  }
 
-  private[engine] def assertSqlNamesAuthorized(names: Seq[String],
-      identity: Option[String]): Unit =
-    authorize("Sql", "etag-probe", identity, names)
+  /** Prepare a native JSON query. Parse failures propagate as thrown (the
+    * HTTP layer maps a malformed body to 400); in-process callers go
+    * through [[prepareChecked]]. */
+  private[engine] def prepare(json: String, identity: Option[String]): Prepared = {
+    val query = QueryJson.parseQuery(json)
+    val queryType = query.getClass.getSimpleName
+    val queryId = query.context.getOrElse("queryId", UUID.randomUUID().toString)
+    authorize(queryType, queryId, identity, datasourceNames(query.dataSource))
+    // groupBy resource cap → the documented "Resource limit exceeded" error
+    // (`query/query-module-overview.md:86`). Enforced inside the encode
+    // iteration — one execution, no probe job.
+    val maxResults = query.context.get("maxResults").flatMap(_.toIntOption)
+    new Prepared(queryType, queryId, identity, etag(json, query), query.context,
+      runSegmentCached(json, query, _, _, _, _),
+      () => ResultEncoder.encodeStream(query, QueryPlanner.plan(spark, query, catalog),
+        maxResults, segmentIdFor = segmentPagingMapper(query)))
+  }
+
+  private def prepareChecked(json: String, identity: Option[String]): Prepared =
+    try prepare(json, identity)
+    catch {
+      case qe: QueryError => throw qe
+      case NonFatal(e) => throw QueryError.unknown(e)
+    }
 
   /** Execute a JSON query; returns the result as a single JSON string in the
     * query type's Druid result shape. Honors context `timeout` (millis),
     * `queryId` (cancellation key) and `useCache`/`populateCache`.
     * `identity` is the transport-extracted caller principal for the
     * AUTHORIZING step (None = anonymous). */
-  def executeJson(json: String, identity: Option[String] = None): String = {
-    val query =
-      try QueryJson.parseQuery(json)
-      catch {
-        case NonFatal(e) => throw QueryError.unknown(e)
-      }
-    val queryId = query.context.getOrElse("queryId", UUID.randomUUID().toString)
-    val timeoutMs = Engine.parseTimeout(query.context)
-    authorize(query.getClass.getSimpleName, queryId, identity,
-      datasourceNames(query.dataSource))
-
-    val useCache = query.context.get("useCache").forall(_.toBoolean)
-    val populateCache = query.context.get("populateCache").forall(_.toBoolean)
-    val cacheKey = etag(json, query)
-    if (useCache) {
-      cacheLookup(cacheKey).foreach { hit =>
-        record(QueryMetric(queryId, query.getClass.getSimpleName, 0L,
-          success = true, cached = true, bytes = hit.length.toLong,
-          identity = identity))
-        return hit
-      }
-    }
-    val t0 = System.nanoTime()
-    def elapsedMs: Long = (System.nanoTime() - t0) / 1000000L
-
-    spark.sparkContext.setJobGroup(queryId, s"graft query $queryId",
-      interruptOnCancel = true)
-    // Job TAG as well: group cancellation does not reliably reach AQE's
-    // stage-materialization jobs (observed: tasks kept running after
-    // cancelJobGroup); tags propagate through SQLExecution to those jobs
-    // and cancelJobsWithTag interrupts them. Stale tags from an abandoned
-    // streaming iterator on this thread are cleared first — otherwise a
-    // cancel of the OLD queryId would kill this query.
-    spark.sparkContext.clearJobTags()
-    spark.sparkContext.addJobTag(Engine.jobTag(queryId))
-    // context `priority` → scheduler pool (Druid query prioritization,
-    // reference `query/query-module-overview.md:55`); takes effect when the
-    // session runs the FAIR scheduler, harmless otherwise
-    query.context.get("priority").foreach { p =>
-      val pool = if (p.toIntOption.exists(_ > 0)) "graft_high" else "graft_low"
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-    }
-    // per-(segment, query) counts for this query's metric row
-    val segHits = new java.util.concurrent.atomic.AtomicInteger
-    val segMisses = new java.util.concurrent.atomic.AtomicInteger
-    try {
-      val run = () => {
-        // re-assert the query's job group/tag ON THE EXECUTING THREAD: for
-        // timed queries run() executes on a REUSED timedQueryPool worker,
-        // and Spark's local properties are InheritableThreadLocal — cloned
-        // only at thread creation — so a recycled worker still carries the
-        // query it was created under. Without this reset, a timed query's
-        // jobs would be tagged as some finished query: its own watchdog
-        // cancel(queryId) reaches nothing (the late-started-job leak), and
-        // a retried DELETE of the OLD id would kill this unrelated query.
-        spark.sparkContext.clearJobTags()
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.setJobGroup(queryId, s"graft query $queryId",
-          interruptOnCancel = true)
-        spark.sparkContext.addJobTag(Engine.jobTag(queryId))
-        try {
-          runSegmentCached(json, query, useCache, populateCache,
-            segHits, segMisses).getOrElse {
-            val df = QueryPlanner.plan(spark, query, catalog)
-            // groupBy resource cap → the documented "Resource limit
-            // exceeded" error (`query/query-module-overview.md:86`).
-            // Enforced inside the encode iteration — one execution, no
-            // probe job.
-            val maxResults = query.context.get("maxResults").flatMap(_.toIntOption)
-            ResultEncoder.encode(query, df, maxResults,
-              segmentIdFor = segmentPagingMapper(query))
-          }
-        } finally {
-          // leave the (possibly pooled) executing thread clean so the tag
-          // cannot leak into whatever runs on it next
-          spark.sparkContext.removeJobTag(Engine.jobTag(queryId))
-          spark.sparkContext.clearJobGroup()
-        }
-      }
-      val result = timeoutMs match {
-        case None => run()
-        case Some(ms) =>
-          // Two mechanisms, both needed: a worker thread + fut.get(ms) so
-          // the CLIENT gets QueryTimeoutException at the deadline even when
-          // the Spark job ignores its kill flag (whole-stage-codegen loops
-          // never check TaskContext.isInterrupted — an in-thread wait would
-          // block for the job's natural runtime), and a FIXED-DELAY
-          // re-cancel watchdog so the job itself actually dies: a one-shot
-          // cancel fired while planning is still in progress reaches no
-          // RUNNING job, and the late-started job would run to completion.
-          // The watchdog outlives the CLIENT deadline on purpose — it keeps
-          // cancelling until the worker actually finishes (the `done` flag
-          // self-stops the fixed-delay task); disarming it when fut.get
-          // times out would resurrect the late-started-job leak.
-          val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-          val watchdog = Engine.timeoutScheduler.scheduleWithFixedDelay(
-            new Runnable {
-              def run(): Unit = {
-                if (done.get) throw new java.util.concurrent.CancellationException(
-                  "query finished — stop this watchdog")
-                cancel(queryId)
-              }
-            },
-            ms, math.max(ms / 4, 25L), TimeUnit.MILLISECONDS)
-          val deadline = t0 + ms * 1000000L
-          val fut = Engine.timedQueryPool.submit(new java.util.concurrent.Callable[String] {
-            def call(): String = try run() finally done.set(true)
-          })
-          try fut.get(ms, TimeUnit.MILLISECONDS)
-          catch {
-            case _: TimeoutException =>
-              cancel(queryId) // immediate cancel; the watchdog keeps retrying
-              throw QueryError("Query timeout", s"query $queryId timed out after ${ms}ms",
-                "QueryTimeoutException")
-            case e: java.util.concurrent.ExecutionException =>
-              e.getCause match {
-                // a QueryError raised inside the worker (e.g. the
-                // maxResults cap) keeps its documented error code
-                case qe: QueryError => throw qe
-                // the watchdog's cancel can beat fut.get's own deadline
-                // (its countdown starts before the worker is submitted) —
-                // a failure at/past the deadline IS the timeout, not a
-                // client-visible 'Query cancelled'
-                case c if System.nanoTime() > deadline =>
-                  throw QueryError("Query timeout",
-                    s"query $queryId timed out after ${ms}ms", "QueryTimeoutException")
-                case c if c != null => throw c
-                case _ => throw e
-              }
-          } finally {
-            fut.cancel(true) // interrupt the worker if still waiting
-            if (done.get) watchdog.cancel(false) // completed: disarm eagerly
-          }
-      }
-      if (populateCache) cachePut(cacheKey, result)
-      // a fully-segment-cached result ran no Spark job — report it cached
-      record(QueryMetric(queryId, query.getClass.getSimpleName, elapsedMs,
-        success = true, identity = identity,
-        cached = segHits.get > 0 && segMisses.get == 0,
-        bytes = result.length.toLong,
-        segmentHits = segHits.get, segmentMisses = segMisses.get))
-      result
-    } catch {
-      case qe: QueryError =>
-        record(QueryMetric(queryId, query.getClass.getSimpleName, elapsedMs,
-          success = false, cached = false, bytes = 0L, identity = identity))
-        throw qe
-      case e: InterruptedException =>
-        record(QueryMetric(queryId, query.getClass.getSimpleName, elapsedMs,
-          success = false, cached = false, bytes = 0L, identity = identity))
-        throw QueryError("Query interrupted", String.valueOf(e.getMessage),
-          e.getClass.getName)
-      case NonFatal(e) =>
-        record(QueryMetric(queryId, query.getClass.getSimpleName, elapsedMs,
-          success = false, cached = false, bytes = 0L, identity = identity))
-        if (isCancellation(e))
-          throw QueryError("Query cancelled", s"query $queryId cancelled", e.getClass.getName)
-        else throw QueryError.unknown(e)
-    } finally {
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      spark.sparkContext.removeJobTag(Engine.jobTag(queryId))
-      spark.sparkContext.clearJobGroup()
-    }
-  }
+  def executeJson(json: String, identity: Option[String] = None): String =
+    execute(prepareChecked(json, identity))
 
   /** Streaming variant of executeJson: the result arrives as JSON chunks
     * while the DataFrame executes partition-at-a-time — a large scan/select
@@ -457,212 +333,205 @@ class Engine(spark: SparkSession, catalog: Catalog,
     * property, `query/query-internal-procedure.md:152-189`). A prior cached
     * result (whole-query, or a fragment-COMPLETE per-segment hit) is served
     * as one chunk with zero Spark jobs; population happens on a successful
-    * full drain with bounded accumulation (chunks buffer only while the
-    * result could still fit the cache budget — the SQL streaming path's
-    * rule), so big scans still never materialize whole on the driver.
-    * Cold segment FRAGMENTS are not populated here (their boundaries are
-    * invisible in the merged stream; the buffered path populates them).
-    * Errors raised mid-stream propagate from the iterator. */
+    * full drain with bounded accumulation, so big scans still never
+    * materialize whole on the driver. Cold segment FRAGMENTS are not
+    * populated here (their boundaries are invisible in the merged stream;
+    * the buffered path populates them). Errors raised mid-stream propagate
+    * from the iterator in the documented [[QueryError]] shape. */
   def executeJsonStream(json: String,
-      identity: Option[String] = None): Iterator[String] = {
-    val query =
-      try QueryJson.parseQuery(json)
-      catch { case NonFatal(e) => throw QueryError.unknown(e) }
-    val queryId = query.context.getOrElse("queryId", UUID.randomUUID().toString)
-    val timeoutMs = Engine.parseTimeout(query.context)
-    authorize(query.getClass.getSimpleName, queryId, identity,
-      datasourceNames(query.dataSource))
-    val useCache = query.context.get("useCache").forall(_.toBoolean)
-    val cacheKey = etag(json, query)
-    if (useCache) {
-      cacheLookup(cacheKey) match {
-        case Some(hit) =>
-          record(QueryMetric(queryId, query.getClass.getSimpleName, 0L,
-            success = true, cached = true, bytes = hit.length.toLong,
-            identity = identity))
-          return Iterator.single(hit)
-        case None =>
-      }
-      // fragment-COMPLETE per-segment hit (every chunk slice cached):
-      // serve merged fragments with zero Spark jobs — the fully-warm
-      // dashboard window on the streaming path. A partial hit falls
-      // through to normal streaming (population is skipped there, so
-      // cold fragments stay cold — the buffered path populates them).
-      if (segmentCacheEnabled) {
-        SegmentResultCache.decompose(json, query, catalog)
-          .filter(_.size <= segmentCacheMaxSlices) match {
-          case Some(slices) =>
-            val frags = slices.map(s => cachePeek(s.key))
-            if (frags.forall(_.isDefined)) {
-              segmentCacheHits.addAndGet(slices.size.toLong)
-              val ordered = query match {
-                case t: Query.Timeseries if t.descending => frags.reverse
-                case _ => frags
-              }
-              val merged = ordered.flatten.filter(_.nonEmpty)
-                .mkString("[", ",", "]")
-              record(QueryMetric(queryId, query.getClass.getSimpleName, 0L,
-                success = true, cached = true, bytes = merged.length.toLong,
-                segmentHits = slices.size, segmentMisses = 0,
-                identity = identity))
-              return Iterator.single(merged)
-            }
-          case None =>
-            // PARTIAL path: a fully-warm non-nesting-granularity window
-            // merges its day partials driver-side — still zero Spark jobs
-            SegmentResultCache.decomposePartial(json, query, catalog)
-              .filter(_.size <= segmentCacheMaxSlices)
-              .foreach { slices =>
-                val frags = slices.map(s => cachePeek(s.key))
-                if (frags.forall(_.isDefined)) {
-                  // an Overflow (driver group bound) falls through to the
-                  // streaming whole-query plan
-                  val mergedOpt =
-                    try Some(mergePartial(query, frags.flatten))
-                    catch {
-                      case _: PartialMerge.Overflow =>
-                        segmentCachePartialOverflows.incrementAndGet()
-                        None
-                      case _: PartialMerge.NotServeable =>
-                        segmentCacheNotServeable.incrementAndGet()
-                        None
-                      // a torn/corrupt cached fragment (e.g. a shared
-                      // file-tier replace raced by a reader) surfaces as a
-                      // parse error at merge time — the lossy-never-wrong
-                      // contract says that is a MISS, not a query error
-                      case NonFatal(_) =>
-                        segmentCacheMergeErrors.incrementAndGet()
-                        None
-                    }
-                  mergedOpt.foreach { merged =>
-                    segmentCacheHits.addAndGet(slices.size.toLong)
-                    record(QueryMetric(queryId, query.getClass.getSimpleName,
-                      0L, success = true, cached = true,
-                      bytes = merged.length.toLong,
-                      segmentHits = slices.size, segmentMisses = 0,
-                      identity = identity))
-                    return Iterator.single(merged)
-                  }
-                }
-              }
-        }
-      }
+      identity: Option[String] = None): Iterator[String] =
+    open(prepareChecked(json, identity), populateFragments = false)
+
+  /** Buffered execution of a prepared request: the stream of [[open]],
+    * drained. Without a timeout it drains on the caller's thread. With one,
+    * two mechanisms, both needed: the drain runs on a worker +
+    * fut.get(ms), so the CLIENT gets QueryTimeoutException at the deadline
+    * even when the Spark job ignores its kill flag (whole-stage-codegen
+    * loops never check TaskContext.isInterrupted — an in-thread wait would
+    * block for the job's natural runtime), and the stream's fixed-delay
+    * re-cancel watchdog makes the job itself actually die. The watchdog
+    * outlives the CLIENT deadline on purpose — it keeps cancelling until
+    * the worker's stream finishes; disarming it when fut.get times out
+    * would resurrect the late-started-job leak. */
+  private[engine] def execute(p: Prepared): String = p.timeoutMs match {
+    case None => open(p, populateFragments = true).mkString
+    case Some(ms) =>
+      val t0 = System.nanoTime()
+      val fut = Engine.timedQueryPool.submit(new java.util.concurrent.Callable[String] {
+        def call(): String = open(p, populateFragments = true).mkString
+      })
+      try fut.get(ms, TimeUnit.MILLISECONDS)
+      catch {
+        // a QueryError raised inside the worker (the maxResults cap, the
+        // timeout itself) keeps its documented error code
+        case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+          throw e.getCause
+        case e @ (_: TimeoutException | _: InterruptedException) =>
+          cancel(p.queryId) // immediate cancel; the watchdog keeps retrying
+          p.record((System.nanoTime() - t0) / 1000000L, success = false)
+          throw (if (e.isInstanceOf[TimeoutException]) p.timeoutError
+            else QueryError("Query interrupted", String.valueOf(e.getMessage),
+              e.getClass.getName))
+      } finally fut.cancel(true) // interrupt the worker if still waiting
+  }
+
+  /** The EXECUTE step shared by every request — native and SQL, buffered
+    * and streamed: the whole-query cache lookup, then a [[QueryRun]]. */
+  private[engine] def open(p: Prepared, populateFragments: Boolean): Iterator[String] = {
+    if (p.useCache) cacheLookup(p.etag).foreach { hit =>
+      p.record(0L, success = true, cached = true, bytes = hit.length.toLong)
+      return Iterator.single(hit)
     }
-    spark.sparkContext.setJobGroup(queryId, s"graft query $queryId",
-      interruptOnCancel = true)
-    // tag applies to jobs the CONSUMER's iteration submits (same thread or
-    // one created after this point); cleared once the stream is drained —
-    // stale tags from a previously abandoned stream are dropped first
-    spark.sparkContext.clearJobTags()
-    spark.sparkContext.addJobTag(Engine.jobTag(queryId))
-    val t0 = System.nanoTime()
-    // plan-time failures keep the documented QueryError contract and land
-    // in the metrics ring
-    val inner =
-      try {
-        val df = QueryPlanner.plan(spark, query, catalog)
-        val maxResults = query.context.get("maxResults").flatMap(_.toIntOption)
-        ResultEncoder.encodeStream(query, df, maxResults,
-          segmentIdFor = segmentPagingMapper(query))
-      } catch {
-        case qe: QueryError =>
-          recordFailure(queryId, query, t0, identity)
-          spark.sparkContext.removeJobTag(Engine.jobTag(queryId))
-          throw qe
-        case NonFatal(e) =>
-          recordFailure(queryId, query, t0, identity)
-          spark.sparkContext.removeJobTag(Engine.jobTag(queryId))
-          throw QueryError.unknown(e)
-      }
-    // context `timeout` holds on the streaming path too (reference timeout
-    // contract, `query/query-module-overview.md:83-86`): a deadline check per
-    // chunk handles the fast case, and a scheduled cancel-by-tag at the
-    // deadline breaks a chunk computation that is BLOCKED inside a Spark job
-    // (a per-next() check alone never runs while the call is stuck) — the
-    // resulting cancellation exception is translated to the documented
-    // QueryTimeoutException below.
-    // fixed-delay re-cancel, not one-shot: cancellation only reaches
-    // RUNNING jobs, and the consumer may submit the first job (and block)
-    // after the deadline tick — a later tick must still break it
-    val deadline = timeoutMs.map(ms => t0 + ms * 1000000L)
-    val watchdog = timeoutMs.map(ms => Engine.timeoutScheduler.scheduleWithFixedDelay(
-      new Runnable { def run(): Unit = cancel(queryId) },
-      ms, math.max(ms / 4, 25L), TimeUnit.MILLISECONDS))
-    // AutoCloseable so an ABANDONED stream (client disconnect throws from
-    // the HTTP write, outside the iterator) can release its resources:
-    // without close(), the fixed-delay watchdog would keep firing
-    // cancel(queryId) for the life of the JVM — cancelling any future
-    // query that reuses the same queryId (fixed ids are common for
-    // dashboards) and accumulating immortal tasks on the scheduler.
-    val populateCache = query.context.get("populateCache").forall(_.toBoolean)
-    new Iterator[String] with AutoCloseable {
-      private var bytes = 0L
-      // populate the whole-query cache on a SUCCESSFUL full drain (the SQL
-      // streaming path's rule): chunks accumulate only while they could
-      // still fit the cache's byte budget — a result too big to store
-      // stops buffering instead of pressuring the driver. Closes the
-      // stream=true dashboard gap where repeated identical streams
-      // recomputed every time.
-      private val acc = new java.lang.StringBuilder
-      private var accFits = populateCache
-      def close(): Unit =
-        if (bytes >= 0L) {
-          cancel(queryId) // stop the abandoned query's still-running jobs
-          finishedBad()
-        }
-      private def finishedOk(): Unit = {
-        record(QueryMetric(queryId, query.getClass.getSimpleName,
-          (System.nanoTime() - t0) / 1000000L,
-          success = true, cached = false, bytes = bytes,
-          identity = identity))
-        bytes = -1L // record once
-        if (accFits) cachePut(cacheKey, acc.toString)
-        watchdog.foreach(_.cancel(false))
-        spark.sparkContext.removeJobTag(Engine.jobTag(queryId))
-      }
-      private def finishedBad(): Unit = {
-        if (bytes >= 0L) { recordFailure(queryId, query, t0, identity); bytes = -1L }
-        watchdog.foreach(_.cancel(false))
-        spark.sparkContext.removeJobTag(Engine.jobTag(queryId))
-      }
-      private def timedOut(ms: Long): Nothing = {
-        cancel(queryId) // stop whatever the drained-so-far plan still runs
-        finishedBad()
-        throw QueryError("Query timeout", s"query $queryId timed out after ${ms}ms",
-          "QueryTimeoutException")
-      }
-      private def checkDeadline(): Unit =
-        deadline.foreach(d =>
-          if (System.nanoTime() > d) timedOut(timeoutMs.get))
-      def hasNext: Boolean = {
-        checkDeadline()
-        val more =
-          try inner.hasNext
-          catch { case NonFatal(e) => onStreamError(e) }
-        if (!more && bytes >= 0L) finishedOk()
-        more
-      }
-      def next(): String = {
-        checkDeadline()
-        try {
-          val s = inner.next(); bytes += s.length
-          if (accFits) {
-            if (2L * (acc.length() + s.length) <= resultCacheMaxBytes)
-              acc.append(s)
-            else { accFits = false; acc.setLength(0) }
-          }
-          s
-        }
-        catch { case NonFatal(e) => onStreamError(e) }
-      }
-      private def onStreamError(e: Throwable): Nothing = {
-        // the watchdog's cancel surfaces as a cancellation exception from
-        // the blocked Spark job — past the deadline that IS the timeout
-        if (deadline.exists(System.nanoTime() > _)) timedOut(timeoutMs.get)
-        finishedBad()
-        throw e
-      }
+    new QueryRun(p, populateFragments)
+  }
+
+  /** One executing request, as a chunk iterator: it sets the job group,
+    * tag and scheduler pool, serves from the per-(segment, query) cache or
+    * plans the whole query, and on finish — full drain, failure, timeout or
+    * `close()` — records the one metric row, populates the whole-query
+    * cache and clears what it set on the thread.
+    *
+    * `populateFragments=false` (the stream) makes the fragment serve
+    * lookup-only: it serves only when EVERY slice is warm — the
+    * fully-warm dashboard window with zero Spark jobs — and otherwise falls
+    * through to the whole-query plan, leaving cold fragments cold.
+    *
+    * AutoCloseable so an ABANDONED stream (client disconnect throws from
+    * the HTTP write, outside the iterator) can release its resources:
+    * without close(), the fixed-delay watchdog would keep firing
+    * cancel(queryId) for the life of the JVM — cancelling any future query
+    * that reuses the same queryId (fixed ids are common for dashboards)
+    * and accumulating immortal tasks on the scheduler. */
+  private final class QueryRun(p: Prepared, populateFragments: Boolean)
+      extends Iterator[String] with AutoCloseable {
+    private val sc = spark.sparkContext
+    private val t0 = System.nanoTime()
+    // Job TAG as well as group: group cancellation does not reliably reach
+    // AQE's stage-materialization jobs (observed: tasks kept running after
+    // cancelJobGroup); tags propagate through SQLExecution to those jobs
+    // and cancelJobsWithTag interrupts them. Stale state from an abandoned
+    // stream on this thread is cleared first — otherwise a cancel of the
+    // OLD queryId would kill this query. The same clearing covers a REUSED
+    // timedQueryPool worker: Spark's local properties are
+    // InheritableThreadLocal, cloned only at thread creation, so a recycled
+    // worker still carries the query it was created under — without the
+    // reset its jobs would be tagged as some finished query, its own
+    // watchdog would reach nothing (the late-started-job leak), and a
+    // retried DELETE of the OLD id would kill this query. Set BEFORE
+    // planning, so plan-time jobs (SQL lookup collects, file listings,
+    // timeBoundary probes) fall under the same cancellation umbrella.
+    sc.clearJobTags()
+    sc.clearJobGroup()
+    sc.setJobGroup(p.queryId, s"graft query ${p.queryId}", interruptOnCancel = true)
+    sc.addJobTag(Engine.jobTag(p.queryId))
+    // context `priority` → scheduler pool (Druid query prioritization,
+    // reference `query/query-module-overview.md:55`); takes effect when the
+    // session runs the FAIR scheduler, harmless otherwise
+    p.context.get("priority").foreach { pr =>
+      sc.setLocalProperty("spark.scheduler.pool",
+        if (pr.toIntOption.exists(_ > 0)) "graft_high" else "graft_low")
     }
+    // context `timeout` (reference timeout contract,
+    // `query/query-module-overview.md:83-86`): a deadline check per chunk
+    // handles the fast case, and a scheduled cancel-by-tag breaks a chunk
+    // computation that is BLOCKED inside a Spark job (a per-next() check
+    // alone never runs while the call is stuck) — the resulting
+    // cancellation is translated to QueryTimeoutException. Fixed-delay
+    // re-cancel, not one-shot: cancellation only reaches RUNNING jobs, and
+    // a job may be submitted (and block) after the deadline tick — a
+    // later tick must still break it.
+    private val deadline = p.timeoutMs.map(ms => t0 + ms * 1000000L)
+    private val watchdog = p.timeoutMs.map(ms =>
+      Engine.timeoutScheduler.scheduleWithFixedDelay(
+        new Runnable { def run(): Unit = cancel(p.queryId) },
+        ms, math.max(ms / 4, 25L), TimeUnit.MILLISECONDS))
+    // per-(segment, query) counts for this query's metric row
+    private val hits = new AtomicInteger
+    private val misses = new AtomicInteger
+    private var bytes = 0L
+    private var finished = false
+    // populate the whole-query cache on a SUCCESSFUL full drain: chunks
+    // accumulate only while the result could still fit the cache's entry
+    // bound (2 bytes a char against the byte budget, HeapLru's own rule) —
+    // a result too big to store stops buffering instead of pressuring the
+    // driver
+    private val acc = new java.lang.StringBuilder
+    private var accFits = p.populateCache
+    private val inner: Iterator[String] =
+      try p.fragments(p.useCache, populateFragments && p.populateCache, hits, misses)
+        .fold(p.compute())(Iterator.single)
+      catch { case e: Throwable if failure(e) => fail(e) }
+
+    def hasNext: Boolean = !finished && {
+      checkDeadline()
+      val more = try inner.hasNext catch { case e: Throwable if failure(e) => fail(e) }
+      if (!more) finish(success = true)
+      more
+    }
+
+    def next(): String = {
+      checkDeadline()
+      val s = try inner.next() catch { case e: Throwable if failure(e) => fail(e) }
+      bytes += s.length
+      if (accFits) {
+        if (2L * (acc.length() + s.length) <= resultCacheMaxBytes) acc.append(s)
+        else { accFits = false; acc.setLength(0) }
+      }
+      s
+    }
+
+    def close(): Unit =
+      if (!finished) {
+        cancel(p.queryId) // stop the abandoned query's still-running jobs
+        finish(success = false)
+      }
+
+    private def failure(e: Throwable): Boolean =
+      NonFatal(e) || e.isInstanceOf[InterruptedException]
+
+    private def checkDeadline(): Unit =
+      if (deadline.exists(System.nanoTime() > _)) fail(p.timeoutError)
+
+    /** Finish on a failure and raise it in the documented error shape. The
+      * watchdog's cancel surfaces as a cancellation exception from the
+      * blocked Spark job, and can beat a waiting caller's own deadline — a
+      * failure at/past the deadline IS the timeout, not a client-visible
+      * 'Query cancelled'. */
+    private def fail(e: Throwable): Nothing = {
+      val err = e match {
+        case qe: QueryError => qe
+        case _ if deadline.exists(System.nanoTime() > _) => p.timeoutError
+        case _: InterruptedException =>
+          QueryError("Query interrupted", String.valueOf(e.getMessage), e.getClass.getName)
+        case _ if isCancellation(e) =>
+          QueryError("Query cancelled", s"query ${p.queryId} cancelled", e.getClass.getName)
+        case _ => QueryError.unknown(e)
+      }
+      // stop whatever the drained-so-far plan still runs
+      if (err.errorClass == "QueryTimeoutException") cancel(p.queryId)
+      finish(success = false)
+      throw err
+    }
+
+    private def finish(success: Boolean): Unit =
+      if (!finished) {
+        finished = true
+        watchdog.foreach(_.cancel(false))
+        val millis = (System.nanoTime() - t0) / 1000000L
+        if (!success) p.record(millis, success = false)
+        else {
+          if (accFits) cachePut(p.etag, acc.toString)
+          // a fully-segment-cached result ran no Spark job — report it cached
+          p.record(millis, success = true,
+            cached = hits.get > 0 && misses.get == 0, bytes = bytes,
+            segmentHits = hits.get, segmentMisses = misses.get)
+        }
+        // leave the (possibly pooled) thread clean so the tag cannot leak
+        // into whatever runs on it next
+        sc.setLocalProperty("spark.scheduler.pool", null)
+        sc.removeJobTag(Engine.jobTag(p.queryId))
+        sc.clearJobGroup()
+      }
   }
 
   /** Per-segment pagingIdentifiers shim (reference
@@ -694,7 +563,7 @@ class Engine(spark: SparkSession, catalog: Catalog,
   /** Per-(segment, query) cached execution (reference
     * `query/query-internal-procedure.md:43-47`, `TOC.md:39,53`; SURVEY
     * §2.12 phase-2): when the query decomposes into per-chunk slices
-    * ([[SegmentResultCache.decompose]]), serve each chunk's encoded
+    * (`SegmentResultCache`'s nesting decomposition), serve each chunk's encoded
     * fragment from the cache when its (query, chunk, version) key hits,
     * compute only the cold chunks, and merge by concatenation. A moving
     * dashboard window thus recomputes ONLY the advancing chunk — the
@@ -717,8 +586,7 @@ class Engine(spark: SparkSession, catalog: Catalog,
     * silent. */
   private def runSegmentCached(json: String, query: Query,
       useCache: Boolean, populateCache: Boolean,
-      hits: java.util.concurrent.atomic.AtomicInteger,
-      misses: java.util.concurrent.atomic.AtomicInteger): Option[String] = {
+      hits: AtomicInteger, misses: AtomicInteger): Option[String] = {
     if (!segmentCacheEnabled || !(useCache || populateCache)) return None
     SegmentResultCache.decompose(json, query, catalog)
       .filter(_.size <= segmentCacheMaxSlices) match {
@@ -824,9 +692,9 @@ class Engine(spark: SparkSession, catalog: Catalog,
   private val inflightFragments =
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.CompletableFuture[String]]()
-  private val inflightWaitMs: Long =
-    spark.conf.getOption("spark.graft.segmentCache.inflightWaitMs")
-      .map(_.toLong).getOrElse(600000L)
+  // how long a query awaits another's in-flight cold-fragment compute
+  // before computing those slices itself
+  private val InflightWaitMs = 600000L
 
   /** Look up / compute the fragments for `slices`, aligned by index.
     * Cold fragments compute from ONE plan per distinct sub-query TEMPLATE
@@ -840,8 +708,7 @@ class Engine(spark: SparkSession, catalog: Catalog,
   private def collectFragments(
       slices: Seq[SegmentResultCache.ChunkSlice],
       useCache: Boolean, populateCache: Boolean,
-      hits: java.util.concurrent.atomic.AtomicInteger,
-      misses: java.util.concurrent.atomic.AtomicInteger): Option[Array[String]] = {
+      hits: AtomicInteger, misses: AtomicInteger): Option[Array[String]] = {
     val frags = new Array[String](slices.size)
     val cold0 = scala.collection.mutable.ArrayBuffer.empty[Int]
     slices.zipWithIndex.foreach { case (s, i) =>
@@ -892,7 +759,7 @@ class Engine(spark: SparkSession, catalog: Catalog,
         // is correct, just not coalesced)
         val leftover = scala.collection.mutable.ArrayBuffer.empty[Int]
         awaited.foreach { case (i, f) =>
-          try frags(i) = f.get(inflightWaitMs,
+          try frags(i) = f.get(InflightWaitMs,
             java.util.concurrent.TimeUnit.MILLISECONDS)
           catch {
             // a cancelled query's interrupt must ABORT the query (the
@@ -978,12 +845,6 @@ class Engine(spark: SparkSession, catalog: Catalog,
         }
       }
   }
-
-  private def recordFailure(queryId: String, query: Query, t0: Long,
-      identity: Option[String]): Unit =
-    record(QueryMetric(queryId, query.getClass.getSimpleName,
-      (System.nanoTime() - t0) / 1000000L,
-      success = false, cached = false, bytes = 0L, identity = identity))
 
   /** Per-query metrics ring (Druid's query/time + bytes emission,
     * reference `query/query-internal-procedure.md:152-189`).
@@ -1285,7 +1146,7 @@ class Engine(spark: SparkSession, catalog: Catalog,
   def sqlEtag(sql: String, datasources: Seq[String] = Seq.empty): String =
     sqlEtagResolved(sql, resolvedSqlNames(sql, datasources))
 
-  private[engine] def sqlEtagResolved(sql: String, names: Seq[String]): String = {
+  private def sqlEtagResolved(sql: String, names: Seq[String]): String = {
     val versions = names
       .map(n => s"$n=${catalog.versionToken(n)}").mkString(";")
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -1304,77 +1165,22 @@ class Engine(spark: SparkSession, catalog: Catalog,
     * failure land in the metrics ring once the stream is drained. */
   def executeSqlJsonStream(sql: String, datasources: Seq[String],
       identity: Option[String] = None): Iterator[String] =
-    executeSqlStreamResolved(sql, resolvedSqlNames(sql, datasources), identity)
+    open(prepareSql(sql, datasources, Map.empty, identity), populateFragments = false)
 
-  private[engine] def executeSqlStreamResolved(sql: String, names: Seq[String],
-      identity: Option[String]): Iterator[String] = {
-    val queryId = "sql-" + UUID.randomUUID().toString
-    val t0 = System.nanoTime()
+  /** Prepare a SQL statement: the statement is parsed and its names
+    * catalog-probed ONCE ([[resolvedSqlNames]]), then threaded through
+    * authorization, the etag and execution. `context` carries the same
+    * `queryId`/`timeout`/`useCache`/`populateCache` keys as a native
+    * query's. The result cache is the native path's store and
+    * invalidation: key = (statement, datasource version tokens). */
+  private[engine] def prepareSql(sql: String, datasources: Seq[String],
+      context: Map[String, String], identity: Option[String]): Prepared = {
+    val names = resolvedSqlNames(sql, datasources)
+    val queryId = context.getOrElse("queryId", "sql-" + UUID.randomUUID().toString)
     authorize("Sql", queryId, identity, names)
-    // result cache, same store + invalidation as the native path: key =
-    // (statement, datasource version tokens). A hit returns the buffered
-    // result as one chunk — no Spark job, recorded as a cached metric.
-    val cacheKey = sqlEtagResolved(sql, names)
-    cacheLookup(cacheKey) match {
-      case Some(hit) =>
-        record(QueryMetric(queryId, "Sql", 0L,
-          success = true, cached = true, bytes = hit.length.toLong,
-          identity = identity))
-        return Iterator.single(hit)
-      case None => ()
-    }
-    // clear stale thread state FIRST, then set this statement's group/tag
-    // BEFORE planning — the preparatory jobs executeSql runs (lookup
-    // collects, file listings) must fall under the same cancellation
-    // umbrella as the result iteration
-    spark.sparkContext.clearJobTags()
-    spark.sparkContext.clearJobGroup()
-    spark.sparkContext.setJobGroup(queryId, s"graft sql $queryId",
-      interruptOnCancel = true)
-    spark.sparkContext.addJobTag(Engine.jobTag(queryId))
-    val df = executeSqlTagged(sql, names)
-    val inner = ResultEncoder.encodeRowsStream(df)
-    new Iterator[String] with AutoCloseable {
-      private var bytes = 0L
-      // populate the result cache on a SUCCESSFUL full drain only: chunks
-      // accumulate up to the cache's own byte budget (past it the entry
-      // could never be stored — stop buffering, don't blow the driver)
-      private val acc = new java.lang.StringBuilder
-      private var accFits = true
-      private def done(success: Boolean): Unit = {
-        record(QueryMetric(queryId, "Sql",
-          (System.nanoTime() - t0) / 1000000L,
-          success = success, cached = false, bytes = math.max(bytes, 0L),
-          identity = identity))
-        if (success && accFits) cachePut(cacheKey, acc.toString)
-        bytes = -1L // record once
-        spark.sparkContext.removeJobTag(Engine.jobTag(queryId))
-        spark.sparkContext.clearJobGroup() // don't leave the thread in a dead group
-      }
-      def close(): Unit =
-        if (bytes >= 0L) {
-          cancel(queryId) // stop the abandoned statement's running jobs
-          done(false)
-        }
-      def hasNext: Boolean = {
-        val more =
-          try inner.hasNext
-          catch { case NonFatal(e) => if (bytes >= 0L) done(false); throw e }
-        if (!more && bytes >= 0L) done(true)
-        more
-      }
-      def next(): String =
-        try {
-          val s = inner.next(); bytes += s.length
-          if (accFits) {
-            if (2L * (acc.length() + s.length) <= resultCacheMaxBytes)
-              acc.append(s)
-            else { accFits = false; acc.setLength(0) }
-          }
-          s
-        }
-        catch { case NonFatal(e) => if (bytes >= 0L) done(false); throw e }
-    }
+    new Prepared("Sql", queryId, identity, sqlEtagResolved(sql, names), context,
+      (_, _, _, _) => None,
+      () => ResultEncoder.encodeRowsStream(executeSqlTagged(sql, names)))
   }
 
   private def isCancellation(e: Throwable): Boolean = {
@@ -1416,9 +1222,9 @@ object Engine {
       }
     })
 
-  /** Shared daemon scheduler for streaming-path timeout watchdogs — one
-    * thread for the whole JVM; each armed timeout is a no-op cancel if the
-    * stream drains first. */
+  /** Shared daemon scheduler for the timeout watchdogs — one thread for
+    * the whole JVM; each armed timeout is disarmed when its query's stream
+    * finishes. */
   private[engine] lazy val timeoutScheduler = {
     val ex = new java.util.concurrent.ScheduledThreadPoolExecutor(1,
       new java.util.concurrent.ThreadFactory {

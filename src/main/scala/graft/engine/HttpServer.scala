@@ -94,6 +94,51 @@ class HttpServer(engine: Engine, tasks: Option[TaskService] = None, port: Int = 
     engine.resolveTransportIdentity(
       Option(ex.getRequestHeaders.getFirst("Authorization")))
 
+  /** Serve a prepared query: a 304 when the client's If-None-Match names
+    * its etag, else the result — chunked when `stream`, buffered otherwise.
+    * The prepared request was authorized before this point, so the
+    * conditional-request shortcut is never open to a denied caller. */
+  private def serve(ex: HttpExchange, prep: engine.Prepared, stream: Boolean): Unit =
+    if (Option(ex.getRequestHeaders.getFirst("If-None-Match")).contains(prep.etag)) {
+      ex.getResponseHeaders.add("ETag", prep.etag)
+      ex.sendResponseHeaders(304, -1)
+      ex.close()
+    } else if (!stream) {
+      val body = engine.execute(prep)
+      ex.getResponseHeaders.add("ETag", prep.etag)
+      respond(ex, 200, body)
+    } else if (!streamPermits.tryAcquire()) capacityExceeded(ex)
+    else try {
+      // chunked transfer: result chunks flushed as the query executes
+      // partition-at-a-time — a big scan never sits in server memory. The
+      // stream (and its plan) is created BEFORE committing the 200, so
+      // plan-time failures keep the 5-code error contract; a mid-stream
+      // failure after chunks have been flushed can only truncate the body
+      // (inherent to chunked encoding).
+      val chunks = engine.open(prep, populateFragments = false)
+      ex.getResponseHeaders.add("ETag", prep.etag)
+      ex.getResponseHeaders.add("Content-Type", "application/json")
+      ex.sendResponseHeaders(200, 0L) // length 0 → chunked encoding
+      val os = ex.getResponseBody
+      // a client disconnect throws from os.write — OUTSIDE the iterator's
+      // next() — so the stream's own cleanup never runs; close() cancels
+      // the abandoned query + its timeout watchdog, and
+      // clearThreadJobState drops the tag so this pooled thread cannot
+      // leak it into its next request
+      try chunks.foreach(s => os.write(s.getBytes(StandardCharsets.UTF_8)))
+      finally {
+        try os.close()
+        finally {
+          chunks match {
+            case c: AutoCloseable =>
+              try c.close() catch { case _: Exception => () }
+            case _ =>
+          }
+          engine.clearThreadJobState()
+        }
+      }
+    } finally streamPermits.release()
+
   server.createContext("/druid/v2", new HttpHandler {
     override def handle(ex: HttpExchange): Unit =
       try {
@@ -101,107 +146,29 @@ class HttpServer(engine: Engine, tasks: Option[TaskService] = None, port: Int = 
         // just the query POSTs: cancellation (destructive by queryId),
         // and the metrics endpoint (per-identity audit counters) must not
         // stay anonymous behind an armed token map. No-op when unarmed.
-        identityOf(ex): Unit
+        val identity = identityOf(ex)
         (ex.getRequestMethod, ex.getRequestURI.getPath) match {
           case ("POST", "/druid/v2/sql") | ("POST", "/druid/v2/sql/") =>
-            // reference SQL endpoint: {"query": "...", "datasources": [...]}
-            // → JSON array of row objects, ALWAYS chunked: the rows stream
-            // off toLocalIterator while the statement executes, so a big
-            // SELECT * is O(chunk) on the driver — the buffered path was the
-            // last remaining place a result had to fit in driver memory.
+            // reference SQL endpoint: {"query": "...", "datasources": [...],
+            // "context": {...}} → JSON array of row objects, ALWAYS chunked:
+            // the rows stream off toLocalIterator while the statement
+            // executes, so a big SELECT * is O(chunk) on the driver.
             // Planning (and SQL analysis errors) happen BEFORE the 200 is
-            // committed, so bad statements keep their error status.
+            // committed, so bad statements keep their error status. The
+            // SQL etag keys on (statement, datasource version tokens), so
+            // 304s stay valid exactly until a referenced datasource changes.
             val node = mapper.readTree(readBody(ex))
             val sql = Option(node.get("query")).map(_.asText()).getOrElse(
               throw new IllegalArgumentException("missing 'query' field"))
             val dss = Option(node.get("datasources")).map { arr =>
               (0 until arr.size()).map(arr.get(_).asText())
             }.getOrElse(Seq.empty)
-            // parse + catalog-probe the statement's names ONCE, then
-            // authorize BEFORE the 304 shortcut — a denied caller must not
-            // learn segment freshness from conditional requests
-            val identity = identityOf(ex)
-            val names = engine.resolveSqlNames(sql, dss)
-            engine.assertSqlNamesAuthorized(names, identity)
-            // etag / If-None-Match parity with the native endpoint: the
-            // SQL etag keys on (statement, datasource version tokens), so
-            // 304s stay valid exactly until a referenced datasource changes
-            val tag = engine.sqlEtagResolved(sql, names)
-            val ifNoneMatch = Option(ex.getRequestHeaders.getFirst("If-None-Match"))
-            if (ifNoneMatch.contains(tag)) {
-              ex.getResponseHeaders.add("ETag", tag)
-              ex.sendResponseHeaders(304, -1)
-              ex.close()
-            } else if (!streamPermits.tryAcquire()) capacityExceeded(ex)
-            else try {
-              val stream = engine.executeSqlStreamResolved(sql, names, identity)
-              ex.getResponseHeaders.add("ETag", tag)
-              ex.getResponseHeaders.add("Content-Type", "application/json")
-              ex.sendResponseHeaders(200, 0L) // length 0 → chunked encoding
-              val os = ex.getResponseBody
-              // disconnect mid-stream: close() cancels the statement's jobs
-              try stream.foreach(s => os.write(s.getBytes(StandardCharsets.UTF_8)))
-              finally {
-                try os.close()
-                finally {
-                  stream match {
-                    case c: AutoCloseable =>
-                      try c.close() catch { case _: Exception => () }
-                    case _ =>
-                  }
-                  engine.clearThreadJobState()
-                }
-              }
-            } finally streamPermits.release()
+            serve(ex, engine.prepareSql(sql, dss,
+              graft.model.QueryJson.context(node), identity), stream = true)
           case ("POST", "/druid/v2") | ("POST", "/druid/v2/") =>
             // etag / If-None-Match (reference query/query-internal-procedure.md:43-47)
-            val body = readBody(ex)
-            val query = graft.model.QueryJson.parseQuery(body)
-            // AUTHORIZING precedes the conditional-request shortcut too
-            val identity = identityOf(ex)
-            engine.assertAuthorized(query, identity)
-            val tag = engine.etag(body, query)
-            val ifNoneMatch = Option(ex.getRequestHeaders.getFirst("If-None-Match"))
-            if (ifNoneMatch.contains(tag)) {
-              ex.getResponseHeaders.add("ETag", tag)
-              ex.sendResponseHeaders(304, -1)
-              ex.close()
-            } else if (query.context.get("stream").exists(_.toBoolean)) {
-              // chunked transfer: result chunks flushed as the query executes
-              // partition-at-a-time — a big scan never sits in server memory.
-              // The stream (and its plan) is created BEFORE committing the
-              // 200, so plan-time failures keep the 5-code error contract; a
-              // mid-stream failure after chunks have been flushed can only
-              // truncate the body (inherent to chunked encoding).
-              if (!streamPermits.tryAcquire()) capacityExceeded(ex)
-              else try {
-                val stream = engine.executeJsonStream(body, identity)
-                ex.getResponseHeaders.add("ETag", tag)
-                ex.getResponseHeaders.add("Content-Type", "application/json")
-                ex.sendResponseHeaders(200, 0L) // length 0 → chunked encoding
-                val os = ex.getResponseBody
-                // a client disconnect throws from os.write — OUTSIDE the
-                // iterator's next() — so the stream's own cleanup never
-                // runs; close() cancels the abandoned query + its timeout
-                // watchdog, and clearThreadJobState drops the tag so this
-                // pooled thread cannot leak it into its next request
-                try stream.foreach(s => os.write(s.getBytes(StandardCharsets.UTF_8)))
-                finally {
-                  try os.close()
-                  finally {
-                    stream match {
-                      case c: AutoCloseable =>
-                        try c.close() catch { case _: Exception => () }
-                      case _ =>
-                    }
-                    engine.clearThreadJobState()
-                  }
-                }
-              } finally streamPermits.release()
-            } else {
-              ex.getResponseHeaders.add("ETag", tag)
-              respond(ex, 200, engine.executeJson(body, identity))
-            }
+            val prep = engine.prepare(readBody(ex), identity)
+            serve(ex, prep, stream = prep.context.get("stream").exists(_.toBoolean))
           case ("GET", "/druid/v2/metrics") =>
             // metric families (reference `TOC.md:50-58`): the query ring
             // (query/time family — queryId, type, wall millis, success,

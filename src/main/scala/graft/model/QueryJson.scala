@@ -53,7 +53,8 @@ object QueryJson {
     raw.map(Interval.parse)
   }
 
-  private def context(n: JsonNode): Map[String, String] =
+  /** A body's `context` object as strings (absent → empty). */
+  def context(n: JsonNode): Map[String, String] =
     opt(n, "context").map { c =>
       c.fields().asScala.map(e => e.getKey -> e.getValue.asText())
         // `graft.`-prefixed context keys are ENGINE-INTERNAL plumbing

@@ -571,8 +571,7 @@ object QueryPlanner {
     * per-chunk emptiness to stop early) — timeBoundary is a metadata-style
     * query and this mirrors Druid answering it from the segment timeline
     * rather than a data scan. `Engine.plan` on a filtered timeBoundary
-    * therefore runs those probe jobs; disable with
-    * `spark.graft.timeBoundary.filteredProbe=false` for a purely lazy plan. */
+    * therefore runs those probe jobs. */
   private def planTimeBoundary(spark: SparkSession, q: Query.TimeBoundary, catalog: Catalog)
       : DataFrame = {
     // UNFILTERED timeBoundary over a segment timeline: chunks partition BY
@@ -612,9 +611,7 @@ object QueryPlanner {
       // — never N tiny per-chunk jobs. The probe executes EAGERLY at plan
       // time (under the caller's job group/tag, so cancellation applies)
       // and returns a local one-row relation.
-      case DataSource.Table(name)
-          if spark.conf.getOption("spark.graft.timeBoundary.filteredProbe")
-            .forall(_.toBoolean) =>
+      case DataSource.Table(name) =>
         val live = catalog.segmentInfos(name).filter(_._3 > 0L)
           .map(_._1).distinct.sorted
         if (live.isEmpty) None

@@ -258,6 +258,26 @@ class EngineSpec extends SparkTestBase {
     assert(active.isEmpty, "timed-out query's tasks must terminate")
   }
 
+  test("buffered timeout holds when the job ignores its kill flag") {
+    // the spinning UDF never checks the kill flag: only the worker +
+    // fut.get(ms) design returns the documented error at the deadline
+    val engine = new Engine(spark, new MapCatalog(
+      Map("spin" -> SparkTestBase.killFlagIgnoringDF(spark, ts("2024-05-01T00:00:00Z")))))
+    val t0 = System.nanoTime()
+    val e = intercept[Engine.QueryError](engine.executeJson(
+      """{"queryType":"timeseries","dataSource":"spin",
+        |"intervals":["2024-05-01T00:00:00Z/2024-05-02T00:00:00Z"],
+        |"granularity":"all","context":{"timeout":"200","queryId":"spin-to"},
+        |"aggregations":[{"type":"longSum","name":"s","fieldName":"id"}]}""".stripMargin))
+    val ms = (System.nanoTime() - t0) / 1000000L
+    assert(e.errorClass == "QueryTimeoutException", e.toString)
+    assert(ms < 700, s"timeout surfaced after $ms ms")
+    awaitNoActiveJobs()
+    Thread.sleep(2500) // the spinning tasks end; the worker then finishes
+    val rows = engine.metrics.filter(_.queryId == "spin-to")
+    assert(rows.size == 1 && !rows.head.success, rows.toString)
+  }
+
   test("abandoned stream's stale tag is cleared by the next task submission") {
     val engine = new Engine(spark, new MapCatalog(Map("ev" -> raw)))
     // abandon a streaming query on THIS thread without consuming it — its
@@ -312,6 +332,83 @@ class EngineSpec extends SparkTestBase {
     engine.executeJsonStream(qNo).mkString
     assert(!engine.metrics.last.cached,
       "populateCache=false stream must not populate")
+
+    // ONE metric row per query, per outcome, on both paths
+    def oneRow(e: Engine)(run: => Any): e.QueryMetric = {
+      val n = e.metrics.size
+      run
+      assert(e.metrics.size == n + 1, e.metrics.drop(n).toString)
+      e.metrics.last
+    }
+    def withCtx(q: String, ctx: String): String =
+      q.dropRight(1) + s""","context":{$ctx}}"""
+    type Exec = (Engine, String) => Any
+    val buffered: Exec = (e, q) => e.executeJson(q)
+    val streamed: Exec = (e, q) => e.executeJsonStream(q).mkString
+    Seq("buffered" -> buffered, "stream" -> streamed).foreach { case (path, exec) =>
+      val e = new Engine(spark, new MapCatalog(Map("ev" -> raw)))
+      val ok = withCtx(tsQuery, s""""queryId":"ok-$path"""")
+      val computed = oneRow(e)(exec(e, ok))
+      assert(computed.success && !computed.cached && computed.segmentHits == 0 &&
+        computed.segmentMisses == 0, s"$path: $computed")
+      val hit = oneRow(e)(exec(e, ok)) // whole-query hit
+      assert(hit.success && hit.cached, s"$path: $hit")
+      val capped = oneRow(e)(intercept[Engine.QueryError](exec(e,
+        """{"queryType":"groupBy","dataSource":"ev",
+          |"intervals":["2024-05-01T00:00:00Z/2024-05-03T00:00:00Z"],
+          |"granularity":"all","dimensions":["event_type"],
+          |"context":{"maxResults":"1"},
+          |"aggregations":[{"type":"count","name":"cnt"}]}""".stripMargin)))
+      assert(!capped.success && !capped.cached, s"$path: $capped")
+    }
+    // fragment-complete hit: a window never run whole whose chunks are warm
+    val seg = new Engine(spark, new SegmentCatalog(segFixture("graft-segrows")))
+    val window =
+      """{"queryType":"timeseries","dataSource":"ev",
+        |"intervals":["2024-05-01T00:00:00Z/2024-05-03T00:00:00Z"],
+        |"granularity":"day",
+        |"aggregations":[{"type":"count","name":"cnt"}]}""".stripMargin
+    val cold = oneRow(seg)(seg.executeJson(withCtx(window, """"queryId":"w0"""")))
+    assert(cold.success && !cold.cached && cold.segmentHits == 0 &&
+      cold.segmentMisses == 2, cold.toString)
+    Seq("buffered" -> buffered, "stream" -> streamed).foreach { case (path, exec) =>
+      val warm = oneRow(seg)(exec(seg, withCtx(window, s""""queryId":"w-$path"""")))
+      assert(warm.success && warm.cached && warm.segmentHits == 2 &&
+        warm.segmentMisses == 0, s"$path: $warm")
+    }
+    // timeouts: the buffered caller and the stream each report one failed
+    // row, and the abandoned worker's later failure adds none
+    val slow = new Engine(spark, new MapCatalog(
+      Map("big" -> SparkTestBase.interruptiblySlowDF(spark, ts("2024-05-01T00:00:00Z")))))
+    val slowQ =
+      """{"queryType":"timeseries","dataSource":"big",
+        |"intervals":["2024-05-01T00:00:00Z/2024-05-02T00:00:00Z"],
+        |"granularity":"all",
+        |"aggregations":[{"type":"longSum","name":"s","fieldName":"id"}]}""".stripMargin
+    Seq("buffered" -> buffered, "stream" -> streamed).foreach { case (path, exec) =>
+      val id = s"to-$path"
+      val timedOut = oneRow(slow)(intercept[Engine.QueryError](
+        exec(slow, withCtx(slowQ, s""""queryId":"$id","timeout":"100""""))))
+      assert(!timedOut.success && !timedOut.cached, s"$path: $timedOut")
+      awaitNoActiveJobs()
+      Thread.sleep(300) // the cancelled worker finishes after its job dies
+      assert(slow.metrics.count(_.queryId == id) == 1, slow.metrics.toString)
+    }
+    // an abandoned stream's close() records one failed row, once
+    val e = new Engine(spark, new MapCatalog(Map("ev" -> raw)))
+    val abandoned = e.executeJsonStream(withCtx(tsQuery, """"queryId":"gone","useCache":"false""""))
+    val closed = oneRow(e)(abandoned.asInstanceOf[AutoCloseable].close())
+    assert(!closed.success && !closed.cached, closed.toString)
+    abandoned.asInstanceOf[AutoCloseable].close()
+    assert(e.metrics.count(_.queryId == "gone") == 1)
+  }
+
+  private def awaitNoActiveJobs(): Unit = {
+    val deadline = System.currentTimeMillis() + 10000
+    def active = spark.sparkContext.statusTracker.getActiveJobIds()
+    while (System.currentTimeMillis() < deadline && active.nonEmpty)
+      Thread.sleep(200)
+    assert(active.isEmpty, "cancelled query's tasks must terminate")
   }
 
   // -- per-(segment, query) result cache (VERDICT r11 #1; SURVEY §2.12) ----

@@ -209,6 +209,85 @@ class HttpServerSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("SQL endpoint honours the body's context: queryId, timeout, useCache, " +
+      "populateCache") {
+    val engine = new Engine(spark, new MapCatalog(Map("ev" -> events,
+      "big" -> SparkTestBase.interruptiblySlowDF(spark, ts("2024-03-01T00:00:00Z")))))
+    val srv = new HttpServer(engine)
+    srv.start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val before = engine.cacheStats
+      val off = post(s"$base/druid/v2/sql", """{"query":"SELECT count(*) AS n FROM ev",""" +
+        """"context":{"queryId":"sql-ctx","useCache":false,"populateCache":false}}""")
+      assert(off.statusCode() == 200 && om.readTree(off.body()).get(0).get("n").asLong() == 2L)
+      val after = engine.cacheStats
+      Seq("resultCacheEntries", "resultCacheHits", "resultCacheMisses").foreach(k =>
+        assert(after(k) == before(k), s"$k moved: ${before(k)} -> ${after(k)}"))
+      assert(engine.metrics.last.queryId == "sql-ctx", engine.metrics.last.toString)
+
+      // DELETE /druid/v2/{queryId} reaches a running statement
+      val slow = """{"query":"SELECT sum(id) AS s FROM big","context":{"queryId":"sql-slow"}}"""
+      val pending = client.sendAsync(HttpRequest.newBuilder(URI.create(s"$base/druid/v2/sql"))
+        .POST(HttpRequest.BodyPublishers.ofString(slow)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      val deadline = System.currentTimeMillis() + 10000
+      while (System.currentTimeMillis() < deadline &&
+          spark.sparkContext.statusTracker.getJobIdsForGroup("sql-slow").isEmpty)
+        Thread.sleep(50)
+      client.send(HttpRequest.newBuilder(URI.create(s"$base/druid/v2/sql-slow"))
+        .DELETE().build(), HttpResponse.BodyHandlers.ofString())
+      val cancelled = pending.get(20, java.util.concurrent.TimeUnit.SECONDS)
+      assert(cancelled.statusCode() == 500, cancelled.body())
+      assert(om.readTree(cancelled.body()).get("error").asText() == "Query cancelled",
+        cancelled.body())
+
+      // context `timeout` holds on the SQL endpoint too
+      val timed = post(s"$base/druid/v2/sql",
+        """{"query":"SELECT sum(id) AS s FROM big","context":{"timeout":"200"}}""")
+      assert(timed.statusCode() == 500, timed.body())
+      assert(om.readTree(timed.body()).get("errorClass").asText() ==
+        "QueryTimeoutException", timed.body())
+      val quiet = System.currentTimeMillis() + 10000
+      while (System.currentTimeMillis() < quiet &&
+          spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty) Thread.sleep(200)
+    } finally srv.stop()
+  }
+
+  test("each request is prepared once: one versionToken per datasource and one " +
+      "authorizer call per POST") {
+    val tokens = new java.util.concurrent.atomic.AtomicInteger
+    val checks = new java.util.concurrent.atomic.AtomicInteger
+    val catalog = new MapCatalog(Map("ev" -> events)) {
+      override def versionToken(name: String): String = {
+        tokens.incrementAndGet(); "static"
+      }
+    }
+    val authorizer = new graft.engine.QueryAuthorizer {
+      def authorize(identity: Option[String], datasources: Seq[String]): Boolean = {
+        checks.incrementAndGet(); true
+      }
+    }
+    val engine = new Engine(spark, catalog, authorizer)
+    val srv = new HttpServer(engine)
+    srv.start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      val native = post(s"$base/druid/v2",
+        """{"queryType":"timeseries","dataSource":"ev",
+          |"intervals":["2024-03-01T00:00:00Z/2024-03-03T00:00:00Z"],
+          |"granularity":"day",
+          |"aggregations":[{"type":"count","name":"cnt"}]}""".stripMargin)
+      assert(native.statusCode() == 200, native.body())
+      assert(tokens.get == 1 && checks.get == 1, s"native: ${tokens.get} ${checks.get}")
+      tokens.set(0); checks.set(0)
+      val sql = post(s"$base/druid/v2/sql", """{"query":"SELECT count(*) AS n FROM ev"}""")
+      assert(sql.statusCode() == 200, sql.body())
+      assert(tokens.get == 1 && checks.get == 1, s"sql: ${tokens.get} ${checks.get}")
+    } finally srv.stop()
+  }
+
   test("SQL lookup registration is gated on the PARSED call, not a substring") {
     // a statement merely touching an identifier containing "lookup" (e.g. a
     // column alias `lookup_count`) must not trigger driver-side lookup

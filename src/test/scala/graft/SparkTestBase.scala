@@ -33,6 +33,27 @@ object SparkTestBase {
       .select("__time", "id")
   }
 
+  /** A datasource whose UDF SPINS on `System.nanoTime` — no sleep, so a
+    * task kill never interrupts it: the job ignores its kill flag until the
+    * spin ends. Bounded at one ~2 s row per core (4 partitions on
+    * local[4]), so a cancelled run frees the cores within about 2 s
+    * instead of wedging the suites scheduled after it. Only for deadlines
+    * that must hold WITHOUT the job's cooperation; every other
+    * cancellation/timeout fixture uses [[interruptiblySlowDF]]. */
+  def killFlagIgnoringDF(spark: SparkSession, atTs: java.sql.Timestamp)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val spin = udf { (x: Long) =>
+      val end = System.nanoTime() + 2000000000L
+      while (System.nanoTime() < end) {}
+      x
+    }
+    spark.range(0, 4L, 1, 4).toDF("raw")
+      .withColumn("id", spin(col("raw")))
+      .withColumn("__time", lit(atTs))
+      .select("__time", "id")
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
