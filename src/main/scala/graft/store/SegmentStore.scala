@@ -21,13 +21,21 @@ import scala.util.control.NonFatal
   *   root/<datasource>/manifest.json                          // metadata store
   * }}}
   *
+  * Every mutation (`write`, `appendBatch`, `writeClustered` and the
+  * segment-management tasks) runs ONE commit protocol, `commit`, Druid's:
+  *  1. take the chunks' interval locks — TaskLockbox
+  *     (`indexing-service-submit-task.md:132`): two writers on one chunk →
+  *     the second fails fast with TaskConflictException;
+  *  1. read the manifest under those locks and do the op's file work,
+  *     which yields the chunks' new `SegmentInfo`s (none = drop the chunk);
+  *  1. flip the manifest atomically (rename) to the new segment set — the
+  *     metadata store; readers never see partial data;
+  *  1. retire the overshadowed version dirs the flipped manifest no longer
+  *     references — the Coordinator's drop (`arch/druid-arch.md:21-23`).
+  *
   * - Segments are immutable: a rewrite of a chunk lands in a NEW `v<N+1>`
-  *   directory and the manifest flips atomically (rename) — readers never
-  *   see partial data. Old versions are removed after the flip (Druid's
-  *   overshadowing + kill).
-  * - Chunk-level write locks mirror TaskLockbox's interval locks
-  *   (`indexing-service-submit-task.md:132`): two writers on one chunk →
-  *   the second fails with TaskConflictException.
+  *   directory (`rewriteChunk`); only `appendBatch` adds part-files to the
+  *   live one, and only the flip makes them visible.
   * - Rollup: an optional ingest-time pre-aggregation; the manifest records
   *   the stored count-metric name so the planner can rewrite query-time
   *   `count` to `sum(count_metric)` (SURVEY §7.3).
@@ -118,8 +126,9 @@ class SegmentStore(val root: String) {
   // design), but every task rewrites the WHOLE manifest — so the manifest
   // read-modify-write itself must be atomic per datasource or the last
   // writer silently drops the other task's segments. All mutations go
-  // through `updateManifest`, and overshadowed version dirs are deleted only
-  // after confirming the flipped manifest no longer references them.
+  // through `updateManifest` (called only by `commit`), and overshadowed
+  // version dirs are deleted only after confirming the flipped manifest no
+  // longer references them.
   // The monitor map is JVM-GLOBAL keyed by manifest path: two SegmentStore
   // instances over the same root in one JVM must share a monitor, because
   // FileChannel locks THROW (OverlappingFileLockException) on same-JVM
@@ -145,34 +154,40 @@ class SegmentStore(val root: String) {
         try {
           val next = update(readManifest(ds))
           writeManifest(next)
-          SegmentStore.bumpMutation(root, ds) // invalidate resolved-plan cache
           next
         } finally lock.release()
       } finally ch.close()
     }
 
-  /** Row count of a just-written segment dir from the parquet footers —
+  /** The `SegmentInfo` of a just-committed version dir from ONE listing of
+    * it: the sorted parquet files the writer pins into the manifest (see
+    * `SegmentInfo.files`) and their row total from the parquet footers —
     * driver-side metadata reads, no Spark job. Each task type used to run a
     * `read.parquet(dir).count()` job per chunk; on a many-chunk ingest that
     * is a scheduler round-trip per chunk for a number the footers already
-    * hold. */
-  private def footerRows(dir: String): Long =
-    graft.sources.ParquetFooters.totalRecords(listParquet(dir),
-      new org.apache.hadoop.conf.Configuration())
-
-  /** Committed parquet files of a segment dir, sorted — the writer pins
-    * this list into the manifest (see `SegmentInfo.files`). Only called
-    * under the chunk's write lock, so the listing cannot race a writer. */
-  private def listParquet(dir: String): Seq[String] = {
-    val d = Paths.get(dir)
-    if (!Files.exists(d)) Seq.empty
-    else {
-      val files = Files.list(d)
-      try files.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toSeq.sorted
-      finally files.close()
+    * hold. Only called under the chunk's write lock, so the listing cannot
+    * race a writer. */
+  private def seal(chunk: String, v: Int, dir: Path, countCol: Option[String],
+      clusterBy: Option[(String, Int)] = None): SegmentInfo = {
+    val files = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+      finally s.close()
     }
+    val rows = graft.sources.ParquetFooters.totalRecords(files,
+      new org.apache.hadoop.conf.Configuration())
+    SegmentInfo(chunk, v, dir.toString, rows, countCol, files, clusterBy)
   }
+
+  private def versionDir(ds: String, chunk: String, v: Int, base: String = root): Path =
+    Paths.get(base, ds, s"dt=$chunk", s"v$v")
+
+  private def stagingDir(ds: String): Path =
+    Paths.get(root, ds, s".staging-${System.nanoTime()}")
+
+  private def liveSegment(m: Manifest, chunk: String): SegmentInfo =
+    m.segments.find(_.chunk == chunk)
+      .getOrElse(throw new IllegalArgumentException(s"no segment for chunk $chunk"))
 
   private def deleteUnreferenced(next: Manifest, candidates: Seq[String]): Unit = {
     val live = next.segments.map(_.path).toSet
@@ -183,14 +198,11 @@ class SegmentStore(val root: String) {
 
   final case class TaskConflictException(msg: String) extends RuntimeException(msg)
 
-  private def lockPath(ds: String, chunk: String): Path =
-    Paths.get(root, ds, s".lock-$chunk")
-
   private def withChunkLocks[T](ds: String, chunks: Seq[String])(body: => T): T = {
     val acquired = scala.collection.mutable.ListBuffer.empty[Path]
     try {
       chunks.foreach { c =>
-        val lp = lockPath(ds, c)
+        val lp = Paths.get(root, ds, s".lock-$c")
         Files.createDirectories(lp.getParent)
         try { Files.createFile(lp); acquired += lp }
         catch {
@@ -202,6 +214,29 @@ class SegmentStore(val root: String) {
       body
     } finally acquired.foreach(p => try Files.deleteIfExists(p) catch { case NonFatal(_) => })
   }
+
+  // -- commit (lock → flip → retire) ----------------------------------------
+
+  /** The one commit path every mutation takes (see the class doc). Under
+    * `chunks`' interval locks: read the manifest — versions of OUR chunks
+    * can no longer move — and run `build`, the op's file work, which
+    * returns the chunks' new segments (an empty result drops them: kill);
+    * flip the manifest to them, carrying `batchId` as `lastBatchId`; then
+    * retire the version dirs the flip overshadowed. Other chunks' segments
+    * are re-read inside `updateManifest`, so a concurrent task on a
+    * different chunk is never dropped. */
+  private def commit(ds: String, chunks: Seq[String], batchId: Option[Long] = None)(
+      build: Manifest => Seq[SegmentInfo]): Unit =
+    withChunkLocks(ds, chunks) {
+      val manifest = readManifest(ds)
+      val fresh = build(manifest)
+      val mine = chunks.toSet
+      val next = updateManifest(ds) { cur =>
+        cur.copy(segments = cur.segments.filterNot(s => mine(s.chunk)) ++ fresh,
+          lastBatchId = batchId.orElse(cur.lastBatchId))
+      }
+      deleteUnreferenced(next, manifest.segments.filter(s => mine(s.chunk)).map(_.path))
+    }
 
   // -- write (index task core) ----------------------------------------------
 
@@ -265,35 +300,25 @@ class SegmentStore(val root: String) {
     }
 
     val withChunk = prepared.withColumn("dt", date_format(col("__time"), "yyyy-MM-dd"))
-    val staging = Paths.get(root, ds, s".staging-${System.nanoTime()}")
+    val staging = stagingDir(ds)
     try {
       val staged = stageByChunk(withChunk, staging, bloomFilterDims)
-      val chunks = staged.map(_._1)
-      withChunkLocks(ds, chunks) {
-        // read under the chunk locks: versions of OUR chunks can no longer move
-        val manifest = readManifest(ds)
-        val byChunk = staged.map { case (c, srcDir) =>
-          val cur = manifest.segments.filter(_.chunk == c).map(_.version).maxOption.getOrElse(0)
-          val v = cur + 1
-          val dir = Paths.get(root, ds, s"dt=$c", s"v$v")
+      commit(ds, staged.map(_._1)) { manifest =>
+        staged.map { case (c, srcDir) =>
+          val v = manifest.segments.filter(_.chunk == c).map(_.version).maxOption.getOrElse(0) + 1
+          val dir = versionDir(ds, c, v)
           Files.createDirectories(dir.getParent)
           Files.move(srcDir, dir) // same-fs rename: metadata-only, no data pass
-          val rows = footerRows(dir.toString)
-          SegmentInfo(c, v, dir.toString, rows,
-            rollup.map(_ => "__rollup_count"), listParquet(dir.toString))
+          seal(c, v, dir, rollup.map(_ => "__rollup_count"))
         }
-        val oldPaths = manifest.segments.filter(s => chunks.contains(s.chunk)).map(_.path)
-        val next = updateManifest(ds) { cur =>
-          cur.copy(segments = cur.segments.filterNot(s => chunks.contains(s.chunk)) ++ byChunk)
-        }
-        deleteUnreferenced(next, oldPaths) // overshadowed versions
       }
     } finally deleteDir(staging)
   }
 
   /** Append-style micro-batch commit (streaming): new files into the
-    * CURRENT version dir of each chunk; manifest row counts refreshed.
-    * Unlike `write`, existing data in the chunk is kept.
+    * CURRENT version dir of each chunk (wherever a `moveChunk` left it);
+    * manifest row counts refreshed. Unlike `write`, existing data in the
+    * chunk is kept.
     *
     * Single-pass like `write`: one staged `partitionBy("dt")` job, then the
     * staged part-files are renamed into each chunk's live version dir (part
@@ -307,16 +332,13 @@ class SegmentStore(val root: String) {
       if (readManifest(ds).lastBatchId.exists(_ >= id)) return
     }
     val withChunk = df.withColumn("dt", date_format(col("__time"), "yyyy-MM-dd"))
-    val staging = Paths.get(root, ds, s".staging-${System.nanoTime()}")
+    val staging = stagingDir(ds)
     try {
       val staged = stageByChunk(withChunk, staging)
-      val chunks = staged.map(_._1)
-      withChunkLocks(ds, chunks) {
-        val manifest = readManifest(ds)
-        val updated = staged.map { case (c, srcDir) =>
+      commit(ds, staged.map(_._1), batchId) { manifest =>
+        staged.map { case (c, srcDir) =>
           val existing = manifest.segments.find(_.chunk == c)
-          val v = existing.map(_.version).getOrElse(1)
-          val dir = Paths.get(root, ds, s"dt=$c", s"v$v")
+          val dir = existing.fold(versionDir(ds, c, 1))(s => Paths.get(s.path))
           Files.createDirectories(dir)
           val files = Files.list(srcDir)
           // move data files AND their local-fs .crc siblings so the
@@ -324,13 +346,7 @@ class SegmentStore(val root: String) {
           try files.iterator().asScala.toSeq.foreach { f =>
             Files.move(f, dir.resolve(f.getFileName), StandardCopyOption.REPLACE_EXISTING)
           } finally files.close()
-          val rows = footerRows(dir.toString)
-          SegmentInfo(c, v, dir.toString, rows, existing.flatMap(_.rollupCountCol),
-            listParquet(dir.toString))
-        }
-        updateManifest(ds) { cur =>
-          cur.copy(segments = cur.segments.filterNot(s => chunks.contains(s.chunk)) ++ updated,
-            lastBatchId = batchId.orElse(cur.lastBatchId))
+          seal(c, existing.fold(1)(_.version), dir, existing.flatMap(_.rollupCountCol))
         }
       }
     } finally deleteDir(staging)
@@ -359,13 +375,12 @@ class SegmentStore(val root: String) {
   def writeClustered(df: DataFrame, ds: String, key: String, nBuckets: Int): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val spark = df.sparkSession
-    val staging = Paths.get(root, ds, s".staging-${System.nanoTime()}")
+    val staging = stagingDir(ds)
     // saveAsTable is the only writer that lays out bucket files (bucketBy +
     // insertInto/parquet(path) both throw); the table entry is dropped right
     // after — an EXTERNAL table (explicit path), so the files survive.
     val tmpTable = s"graft_stage_${ds.replaceAll("[^a-zA-Z0-9_]", "_")}_${System.nanoTime()}"
-    withChunkLocks(ds, Seq(snapshotChunk)) {
-      val manifest = readManifest(ds)
+    commit(ds, Seq(snapshotChunk)) { manifest =>
       val v = manifest.segments.filter(_.chunk == snapshotChunk)
         .map(_.version).maxOption.getOrElse(0) + 1
       try {
@@ -379,17 +394,10 @@ class SegmentStore(val root: String) {
           .bucketBy(nBuckets, key).sortBy(key)
           .option("path", staging.toString)
           .saveAsTable(tmpTable)
-        val dir = Paths.get(root, ds, s"dt=$snapshotChunk", s"v$v")
+        val dir = versionDir(ds, snapshotChunk, v)
         Files.createDirectories(dir.getParent)
         Files.move(staging, dir) // same-fs rename: metadata-only
-        val rows = footerRows(dir.toString)
-        val oldPaths = manifest.segments.filter(_.chunk == snapshotChunk).map(_.path)
-        val next = updateManifest(ds) { cur =>
-          cur.copy(segments = cur.segments.filterNot(_.chunk == snapshotChunk) :+
-            SegmentInfo(snapshotChunk, v, dir.toString, rows, None,
-              listParquet(dir.toString), Some((key, nBuckets))))
-        }
-        deleteUnreferenced(next, oldPaths)
+        Seq(seal(snapshotChunk, v, dir, None, Some((key, nBuckets))))
       } finally {
         try spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
         catch { case NonFatal(_) => }
@@ -411,7 +419,7 @@ class SegmentStore(val root: String) {
       .getOrElse(throw new IllegalArgumentException(
         s"datasource '$ds' has no clustered snapshot"))
     seg.clusterBy match {
-      case None => readCached(spark, ds, Seq(seg))
+      case None => readCached(spark, Seq(seg))
       case Some((key, n)) =>
         val tbl = ("graft_b_" + ds + s"_v${seg.version}_" +
           (Paths.get(root).toAbsolutePath.normalize.toString.hashCode & 0x7fffffff))
@@ -430,93 +438,57 @@ class SegmentStore(val root: String) {
 
   // -- segment-management tasks (reference submit-task.md:75-93) ------------
 
+  /** Rewrite `chunk`'s live segment into a new `v<N+1>` and commit it:
+    * `plan` maps the live segment to the frame to write, its parquet writer
+    * options and the stored rollup count column. */
+  private def rewriteChunk(ds: String, chunk: String)(
+      plan: SegmentInfo => (DataFrame, Map[String, String], Option[String])): Unit =
+    commit(ds, Seq(chunk)) { manifest =>
+      val seg = liveSegment(manifest, chunk)
+      val (frame, options, countCol) = plan(seg)
+      val dir = versionDir(ds, chunk, seg.version + 1)
+      frame.write.mode(SaveMode.Overwrite).options(options).parquet(dir.toString)
+      Seq(seal(chunk, seg.version + 1, dir, countCol))
+    }
+
   /** `append` task: merge a chunk's many small files into `targetFiles`
     * (compaction — the streaming handoff path). */
   def compactChunk(spark: SparkSession, ds: String, chunk: String,
       targetFiles: Int = 1): Unit =
-    withChunkLocks(ds, Seq(chunk)) {
-      val seg = readManifest(ds).segments.find(_.chunk == chunk)
-        .getOrElse(throw new IllegalArgumentException(s"no segment for chunk $chunk"))
-      val v = seg.version + 1
-      val dir = Paths.get(root, ds, s"dt=$chunk", s"v$v").toString
-      spark.read.parquet(seg.path).coalesce(targetFiles)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
-      val rows = footerRows(dir)
-      val next = updateManifest(ds) { cur =>
-        cur.copy(segments = cur.segments.filterNot(_.chunk == chunk) :+
-          SegmentInfo(chunk, v, dir, rows, seg.rollupCountCol, listParquet(dir)))
-      }
-      deleteUnreferenced(next, Seq(seg.path))
-    }
+    rewriteChunk(ds, chunk)(seg =>
+      (spark.read.parquet(seg.path).coalesce(targetFiles), Map.empty, seg.rollupCountCol))
 
   /** `merge` task: re-run rollup aggregation across a chunk's rows (merges
     * shards that were rolled up separately). */
   def mergeChunk(spark: SparkSession, ds: String, chunk: String,
       dims: Seq[String], metricAggs: Seq[Aggregator]): Unit =
-    withChunkLocks(ds, Seq(chunk)) {
-      val seg = readManifest(ds).segments.find(_.chunk == chunk)
-        .getOrElse(throw new IllegalArgumentException(s"no segment for chunk $chunk"))
+    rewriteChunk(ds, chunk) { seg =>
       val df = spark.read.parquet(seg.path)
       val countCol = seg.rollupCountCol.getOrElse("__rollup_count")
       val aggs = metricAggs.map(a => Compilers.aggCol(a, df.schema)) :+
         sum(col(countCol)).cast("long").as(countCol)
-      val merged = df.groupBy((col("__time") +: dims.map(col)): _*)
-        .agg(aggs.head, aggs.tail: _*)
-      val v = seg.version + 1
-      val dir = Paths.get(root, ds, s"dt=$chunk", s"v$v").toString
-      merged.write.mode(SaveMode.Overwrite).parquet(dir)
-      val rows = footerRows(dir)
-      val next = updateManifest(ds) { cur =>
-        cur.copy(segments = cur.segments.filterNot(_.chunk == chunk) :+
-          SegmentInfo(chunk, v, dir, rows, Some(countCol), listParquet(dir)))
-      }
-      deleteUnreferenced(next, Seq(seg.path))
-    }
-
-  /** `kill` task: permanently delete a chunk's segment + metadata. */
-  def killChunk(ds: String, chunk: String): Unit =
-    withChunkLocks(ds, Seq(chunk)) {
-      var dead: Seq[SegmentInfo] = Seq.empty
-      val next = updateManifest(ds) { cur =>
-        val (d, keep) = cur.segments.partition(_.chunk == chunk)
-        dead = d
-        cur.copy(segments = keep)
-      }
-      deleteUnreferenced(next, dead.map(_.path))
-    }
-
-  /** `move`/`archive`/`restore` tasks: relocate segment files to another
-    * storage root and repoint the manifest. */
-  def moveChunk(ds: String, chunk: String, newRoot: String): Unit =
-    withChunkLocks(ds, Seq(chunk)) {
-      val seg = readManifest(ds).segments.find(_.chunk == chunk)
-        .getOrElse(throw new IllegalArgumentException(s"no segment for chunk $chunk"))
-      val dest = Paths.get(newRoot, ds, s"dt=$chunk", s"v${seg.version}")
-      Files.createDirectories(dest.getParent)
-      Files.move(Paths.get(seg.path), dest, StandardCopyOption.ATOMIC_MOVE)
-      updateManifest(ds) { cur =>
-        cur.copy(segments = cur.segments.filterNot(_.chunk == chunk) :+
-          seg.copy(path = dest.toString, files = listParquet(dest.toString)))
-      }
+      (df.groupBy((col("__time") +: dims.map(col)): _*).agg(aggs.head, aggs.tail: _*),
+        Map.empty, Some(countCol))
     }
 
   /** `convert_segment` task: rewrite a chunk with new writer options
     * (e.g. codec). */
   def convertChunk(spark: SparkSession, ds: String, chunk: String,
       options: Map[String, String]): Unit =
-    withChunkLocks(ds, Seq(chunk)) {
-      val seg = readManifest(ds).segments.find(_.chunk == chunk)
-        .getOrElse(throw new IllegalArgumentException(s"no segment for chunk $chunk"))
-      val v = seg.version + 1
-      val dir = Paths.get(root, ds, s"dt=$chunk", s"v$v").toString
-      spark.read.parquet(seg.path).write.mode(SaveMode.Overwrite)
-        .options(options).parquet(dir)
-      val rows = footerRows(dir)
-      val next = updateManifest(ds) { cur =>
-        cur.copy(segments = cur.segments.filterNot(_.chunk == chunk) :+
-          SegmentInfo(chunk, v, dir, rows, seg.rollupCountCol, listParquet(dir)))
-      }
-      deleteUnreferenced(next, Seq(seg.path))
+    rewriteChunk(ds, chunk)(seg => (spark.read.parquet(seg.path), options, seg.rollupCountCol))
+
+  /** `kill` task: permanently delete a chunk's segment + metadata. */
+  def killChunk(ds: String, chunk: String): Unit = commit(ds, Seq(chunk))(_ => Seq.empty)
+
+  /** `move`/`archive`/`restore` tasks: relocate segment files to another
+    * storage root and repoint the manifest. */
+  def moveChunk(ds: String, chunk: String, newRoot: String): Unit =
+    commit(ds, Seq(chunk)) { manifest =>
+      val seg = liveSegment(manifest, chunk)
+      val dest = versionDir(ds, chunk, seg.version, newRoot)
+      Files.createDirectories(dest.getParent)
+      Files.move(Paths.get(seg.path), dest, StandardCopyOption.ATOMIC_MOVE)
+      Seq(seal(chunk, seg.version, dest, seg.rollupCountCol, seg.clusterBy))
     }
 
   // -- read -----------------------------------------------------------------
@@ -524,38 +496,31 @@ class SegmentStore(val root: String) {
   // Resolved-plan LRU: `spark.read.parquet(paths)` eagerly LISTS every
   // segment dir (InMemoryFileIndex) — re-listing per query is a broker-side
   // cost that grows with CHUNK COUNT (~36k daily chunks at 100 TB), not
-  // with data read. Cache key = the live (path, rowCount) set, so any
-  // segment flip (new version dir) or in-place append (same dir, new row
-  // count) resolves to a different key and re-lists; entries hold logical
-  // plans + file indexes, never row data.
+  // with data read. Cache key = the session + the exact path list handed to
+  // `spark.read.parquet`, so every mutation resolves to a different key and
+  // re-lists: a flip pins a new version dir's files, an append adds files,
+  // and a kill + re-ingest of identical rows recreates the same version dir
+  // with NEW part-file names (they carry the write job's UUID) — whichever
+  // store instance or process committed it. Entries hold logical plans +
+  // file indexes, never row data.
   private val planCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
         size() > 64
     })
 
-  private def readCached(spark: SparkSession, ds: String,
-      segs: Seq[SegmentInfo]): DataFrame = {
-    // the mutation counter covers what (path, rowCount) cannot: a kill +
-    // re-ingest of identical data recreates the same version dirs with the
-    // same row counts but NEW part-file names — serving the cached file
-    // index would point every query at deleted files. All mutations in this
-    // JVM go through updateManifest, which bumps the counter. (Cross-process
-    // mutation is outside the cache's view — same single-writer-JVM
-    // assumption the manifest monitor map documents above.)
-    val key = System.identityHashCode(spark) + "|" +
-      SegmentStore.mutationCount(root, ds) + "|" +
-      segs.map(s => s"${s.path}@${s.rowCount}").sorted.mkString(",")
+  private def readCached(spark: SparkSession, segs: Seq[SegmentInfo]): DataFrame = {
+    // scan the manifest-pinned file lists when every segment has one:
+    // a directory listing racing a concurrent append's job-commit could
+    // surface a strict subset of that batch's part-files. Dir-path
+    // fallback only for manifests written before the `files` field.
+    val paths =
+      if (segs.forall(_.files.nonEmpty)) segs.flatMap(_.files)
+      else segs.map(_.path)
+    val key = System.identityHashCode(spark) + "|" + paths.mkString(",")
     val hit = planCache.get(key)
     if (hit != null) hit
     else {
-      // scan the manifest-pinned file lists when every segment has one:
-      // a directory listing racing a concurrent append's job-commit could
-      // surface a strict subset of that batch's part-files. Dir-path
-      // fallback only for manifests written before the `files` field.
-      val paths =
-        if (segs.forall(_.files.nonEmpty)) segs.flatMap(_.files)
-        else segs.map(_.path)
       val df = spark.read.parquet(paths: _*)
       planCache.put(key, df)
       df
@@ -569,7 +534,7 @@ class SegmentStore(val root: String) {
   def read(spark: SparkSession, ds: String): DataFrame = {
     val manifest = readManifest(ds)
     require(manifest.segments.nonEmpty, s"datasource '$ds' has no segments")
-    readCached(spark, ds, manifest.segments)
+    readCached(spark, manifest.segments)
   }
 
   /** Interval-routed read: only segments whose day-chunk overlaps one of
@@ -589,7 +554,7 @@ class SegmentStore(val root: String) {
         intervals.exists(iv => iv.start.isBefore(dayEnd) && dayStart.isBefore(iv.end))
       }
     if (live.isEmpty) read(spark, ds).limit(0) // keep the schema
-    else readCached(spark, ds, live)
+    else readCached(spark, live)
   }
 
   private def deleteDir(p: Path): Unit =
@@ -604,23 +569,6 @@ object SegmentStore {
     * updateManifest — must be shared across SegmentStore instances). */
   private val manifestLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** JVM-global per-(root, datasource) mutation counters — part of the
-    * resolved-plan cache key (see readCached); global so two SegmentStore
-    * instances over one root invalidate each other's cached plans. */
-  private val mutationCounters =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-
-  private def counterFor(root: String, ds: String) =
-    mutationCounters.computeIfAbsent(
-      java.nio.file.Paths.get(root, ds).toAbsolutePath.normalize.toString,
-      _ => new java.util.concurrent.atomic.AtomicLong())
-
-  private[store] def bumpMutation(root: String, ds: String): Unit =
-    counterFor(root, ds).incrementAndGet()
-
-  private[store] def mutationCount(root: String, ds: String): Long =
-    counterFor(root, ds).get()
 }
 
 /** Catalog over a SegmentStore: resolves datasources from manifests and

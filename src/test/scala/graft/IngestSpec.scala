@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Ingestion/segment-management lifecycle (SURVEY §2.9, §3.3):
   * index → query → compact/merge/kill, status transitions, duplicate
@@ -288,12 +289,17 @@ class IngestSpec extends SparkTestBase {
   test("append (compact) task preserves data, bumps version") {
     val store = freshStore()
     store.write(raw, "ev")
+    // a streaming micro-batch leaves 2024-05-01 with more than one file
+    store.appendBatch(Seq((ts("2024-05-01T09:00:00Z"), "view", 1.0))
+      .toDF("__time", "event_type", "value"), "ev")
     val v1 = store.readManifest("ev").segments.find(_.chunk == "2024-05-01").get
+    assert(v1.files.size >= 2)
     store.compactChunk(spark, "ev", "2024-05-01", targetFiles = 1)
     val v2 = store.readManifest("ev").segments.find(_.chunk == "2024-05-01").get
     assert(v2.version == v1.version + 1)
     assert(v2.rowCount == v1.rowCount)
-    assert(store.read(spark, "ev").count() == 4)
+    assert(v2.files.size == 1)
+    assert(store.read(spark, "ev").count() == 5)
   }
 
   test("index task ingests JSON and CSV input formats") {
@@ -490,21 +496,97 @@ class IngestSpec extends SparkTestBase {
       Seq(("2024-05-01", 3L), ("2024-05-02", 1L)))
   }
 
-  test("compaction policy rewrites old chunks; retention kills them") {
-    import graft.ingest.Compactor
+  /** The store's files match its manifest: the `dt=<chunk>/v<N>` dirs under the
+    * datasource are exactly the manifest's live paths under this root, and
+    * no staging dir or chunk lock is left behind. Empty `dt=` parents (a
+    * killed or moved chunk) are allowed. */
+  private def assertTidy(store: SegmentStore, ds: String, step: String): Unit = {
+    def ls(p: java.nio.file.Path): List[java.nio.file.Path] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val dsDir = java.nio.file.Paths.get(store.root, ds)
+    val names = ls(dsDir).map(_.getFileName.toString)
+    val stray = names.filter(n => n.startsWith(".staging-") || n.startsWith(".lock-"))
+    assert(stray.isEmpty, s"$step: left behind ${stray.mkString(", ")}")
+    val onDisk = names.filter(_.startsWith("dt=")).flatMap(n => ls(dsDir.resolve(n)))
+      .filter(_.getFileName.toString.matches("v\\d+")).map(_.toString).toSet
+    val live = store.readManifest(ds).segments.map(_.path)
+      .filter(_.startsWith(dsDir.toString + java.io.File.separator)).toSet
+    assert(onDisk == live, s"$step: version dirs on disk $onDisk, manifest $live")
+  }
+
+  test("every commit leaves exactly the manifest's version dirs on disk") {
     val store = freshStore()
-    store.write(raw, "ev") // chunks 2024-05-01, 2024-05-02
-    // append twice to fragment 05-01
-    store.appendBatch(Seq((ts("2024-05-01T09:00:00Z"), "view", 1.0))
+    val lateView = Seq((ts("2024-05-01T09:00:00Z"), "view", 1.0))
+      .toDF("__time", "event_type", "value")
+    store.write(raw, "ev"); assertTidy(store, "ev", "write")
+    store.write(raw, "ev"); assertTidy(store, "ev", "overwriting write")
+    store.appendBatch(lateView, "ev"); assertTidy(store, "ev", "appendBatch")
+    store.compactChunk(spark, "ev", "2024-05-01"); assertTidy(store, "ev", "compactChunk")
+    store.convertChunk(spark, "ev", "2024-05-01", Map("compression" -> "gzip"))
+    assertTidy(store, "ev", "convertChunk")
+    store.moveChunk("ev", "2024-05-02", Files.createTempDirectory("graft-tier2").toString)
+    assertTidy(store, "ev", "moveChunk")
+    store.killChunk("ev", "2024-05-01"); assertTidy(store, "ev", "killChunk")
+    assert(store.read(spark, "ev").count() == 1)
+
+    // merge sums the stored count column, so it runs on a rollup datasource
+    store.write(Seq((ts("2024-05-01T01:00:00Z"), "click", 30.0, 2L))
+      .toDF("__time", "event_type", "sv", "__rollup_count"), "evr")
+    store.appendBatch(Seq((ts("2024-05-01T01:00:00Z"), "click", 10.0, 1L))
+      .toDF("__time", "event_type", "sv", "__rollup_count"), "evr")
+    store.mergeChunk(spark, "evr", "2024-05-01", Seq("event_type"),
+      Seq(Aggregator.Sum("sv", "sv", "double")))
+    assertTidy(store, "evr", "mergeChunk")
+
+    val snap = spark.range(0, 20).toDF("k")
+    store.writeClustered(snap, "evc", "k", nBuckets = 2)
+    assertTidy(store, "evc", "writeClustered")
+    store.writeClustered(snap.limit(5), "evc", "k", nBuckets = 2)
+    assertTidy(store, "evc", "overwriting writeClustered")
+
+    // a write that loses to a held chunk lock leaves nothing behind: it
+    // takes 2024-05-01's lock, then fails on 2024-05-02's
+    store.write(raw, "evl")
+    val held = java.nio.file.Paths.get(store.root, "evl", ".lock-2024-05-02")
+    Files.createFile(held)
+    try intercept[store.TaskConflictException](store.write(raw, "evl"))
+    finally Files.delete(held)
+    assertTidy(store, "evl", "write that lost the chunk lock")
+  }
+
+  test("a kill + identical re-ingest by another store instance never serves deleted files") {
+    // store B commits through a symlink to A's root: two spellings of one
+    // root, as a second process would be. Re-writing the killed chunk's
+    // rows recreates v1 at the same path with the same row count but new
+    // part-file names; A's cached plan must not scan the deleted ones
+    val realRoot = Files.createTempDirectory("graft-real")
+    val linkRoot = Files.createTempDirectory("graft-link").resolve("root")
+    Files.createSymbolicLink(linkRoot, realRoot)
+    val storeA = new SegmentStore(realRoot.toString)
+    val storeB = new SegmentStore(linkRoot.toString)
+    storeB.write(raw, "ev")
+    assert(storeA.read(spark, "ev").count() == 4)
+    val before = storeA.readManifest("ev").segments.find(_.chunk == "2024-05-01").get
+    storeB.killChunk("ev", "2024-05-01")
+    storeB.write(raw.where(col("__time") < lit(ts("2024-05-02T00:00:00Z"))), "ev")
+    val after = storeA.readManifest("ev").segments.find(_.chunk == "2024-05-01").get
+    assert((after.path, after.rowCount) == (before.path, before.rowCount))
+    assert(after.files != before.files)
+    assert(storeA.read(spark, "ev").count() == 4)
+  }
+
+  test("appendBatch into a moved chunk lands in the chunk's live dir") {
+    val store = freshStore()
+    store.write(raw, "ev")
+    val newRoot = Files.createTempDirectory("graft-tier2").toString
+    store.moveChunk("ev", "2024-05-02", newRoot)
+    store.appendBatch(Seq((ts("2024-05-02T09:00:00Z"), "view", 1.0))
       .toDF("__time", "event_type", "value"), "ev")
-    val compacted = Compactor.compactOlderThan(spark, store, "ev",
-      java.time.Instant.parse("2024-05-02T00:00:00Z"))
-    assert(compacted == Seq("2024-05-01"))
+    val seg = store.readManifest("ev").segments.find(_.chunk == "2024-05-02").get
+    assert(seg.path.startsWith(newRoot) && seg.rowCount == 2)
     assert(store.read(spark, "ev").count() == 5)
-    val killed = Compactor.enforceRetention(store, "ev",
-      java.time.Instant.parse("2024-05-02T00:00:00Z"))
-    assert(killed == Seq("2024-05-01"))
-    assert(store.readManifest("ev").segments.map(_.chunk) == Seq("2024-05-02"))
   }
 
   test("native functions resolve through the SQL surface") {

@@ -206,4 +206,26 @@ class ServerMainSpec extends SparkTestBase {
     assert(offenders.isEmpty,
       s"SparkSession.builder() outside graft.tools.Sessions: ${offenders.mkString(", ")}")
   }
+
+  test("every SegmentStore mutation commits through the one commit function") {
+    // lock → flip → retire has one home: a mutation that took its own chunk
+    // locks or flipped the manifest itself would skip the retire step that
+    // every overshadowed version must pass through
+    val lines = Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/store/SegmentStore.scala")).asScala.toList
+    val start = lines.indexWhere(_.contains("private def commit("))
+    assert(start >= 0, "SegmentStore has no commit function")
+    // commit's body ends at the next class-member-level line
+    val end = lines.indexWhere(_.matches("  \\S.*"), start + 1)
+    for (name <- Seq("withChunkLocks", "updateManifest", "deleteUnreferenced")) {
+      val calls = for {
+        (line, i) <- lines.zipWithIndex
+        code = line.trim
+        if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+        if code.contains(name + "(") && !code.contains("def " + name)
+      } yield i
+      assert(calls.size == 1 && calls.forall(i => i > start && i < end),
+        s"$name( call sites outside commit: ${calls.map(_ + 1).mkString(", ")}")
+    }
+  }
 }
