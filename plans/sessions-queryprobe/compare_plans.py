@@ -24,6 +24,7 @@ def norm(t):
     t = re.sub(r'file:/[^ ,\]]*?/target/fixture-cache/',
                'file:CHECKOUT/target/fixture-cache/', t)
     t = re.sub(r'part-\d+-[0-9a-f-]{36}', 'part-N-UUID', t)  # output files
+    t = re.sub(r'lambda ([a-z])_\d+', r'lambda \1_N', t)  # JVM-wide lambda counter
     return t
 
 

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,7 +19,9 @@ import org.apache.spark.sql.types._
   *             frame back for the estimate. Per-bucket pair blowup is
   *             bounded by the skew cap (`cappedBucketPairIds`): oversize
   *             buckets star-link to a representative instead of emitting
-  *             m²/2 pairs.
+  *             m²/2 pairs. A small materialized signature frame skips
+  *             the shuffles: one collect, and the same pairs are banded
+  *             and scored on the driver.
   *  - simhash: per-doc 64-bit signature, band-grouped for candidate pairs.
   *
   * The pair operators materialize their signature frame internally
@@ -159,9 +161,7 @@ object Dedup {
     * refusal. Budget disabled → (-1, false, -1). */
   private def guardCandidates(banded: DataFrame, bucketCap: Int,
       kind: String, knownRows: Long = -1L): (Long, Boolean, Long) = {
-    val budget = banded.sparkSession.conf
-      .getOption("spark.graft.lsh.candidateBudget").map(_.toLong)
-      .getOrElse(DefaultCandidateBudget)
+    val budget = candidateBudget(banded.sparkSession)
     if (budget > 0) {
       val t0 = System.nanoTime()
       val rows = if (knownRows >= 0L) knownRows else banded.count()
@@ -184,18 +184,26 @@ object Dedup {
           s"overflow=${st.overflowBuckets} maxBucket=${st.maxBucket} " +
           s"estCandidates=${st.estCandidates} budget=$budget " +
           f"statsSec=${(System.nanoTime() - t0) / 1e9}%.2f")
-        if (st.estCandidates > budget)
-          throw new IllegalStateException(
-            s"LSH $kind banding would emit ~${st.estCandidates} candidate " +
-              s"pairs (budget $budget): the banding geometry is mis-sized for " +
-              "this corpus (fixed-keyspace bands flooded, or near-random " +
-              "signatures). Use a wider fingerprint / adaptive banding, raise " +
-              "spark.graft.lsh.candidateBudget, or set it to 0 to disable " +
-              "this check.")
+        refuseOverBudget(kind, st.estCandidates, budget)
         (st.estCandidates, true, rows)
       }
     } else (-1L, false, -1L)
   }
+
+  /** `spark.graft.lsh.candidateBudget`; `0` disables the banding guards. */
+  private def candidateBudget(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.lsh.candidateBudget").map(_.toLong)
+      .getOrElse(DefaultCandidateBudget)
+
+  private def refuseOverBudget(kind: String, est: Long, budget: Long): Unit =
+    if (budget > 0 && est > budget)
+      throw new IllegalStateException(
+        s"LSH $kind banding would emit ~$est candidate " +
+          s"pairs (budget $budget): the banding geometry is mis-sized for " +
+          "this corpus (fixed-keyspace bands flooded, or near-random " +
+          "signatures). Use a wider fingerprint / adaptive banding, raise " +
+          "spark.graft.lsh.candidateBudget, or set it to 0 to disable " +
+          "this check.")
 
   /** Pair budget for the EXACT quadratic pair helpers
     * ([[ngramJaccardPairs]] / [[ngramContainmentPairs]]):
@@ -956,14 +964,24 @@ object Dedup {
     */
   def minhashDupPairs(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleN: Int = 3,
-      threshold: Double = 0.7, bucketCap: Int = 256): DataFrame = {
+      threshold: Double = 0.7, bucketCap: Int = 256): DataFrame =
+    placedMinhashDupPairs(df, textCol, idCol, numHashes, bands, shingleN,
+      threshold, bucketCap, driverFinish = true)
+
+  /** [[minhashDupPairs]] with the finish chosen by the caller: `false`
+    * always runs the distributed arm, `true` takes the driver finish
+    * wherever [[minhashDupPairsFromSigs]] would. */
+  private[graft] def placedMinhashDupPairs(df: DataFrame, textCol: String,
+      idCol: String, numHashes: Int, bands: Int, shingleN: Int,
+      threshold: Double, bucketCap: Int, driverFinish: Boolean): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
 
     // one corpus scan + hash pass, reused by both self-join sides
     val sigs = materialize(df.select(col(idCol).as("id"),
       minhashSignature(col(textCol), numHashes, shingleN).as("sig")))
-    minhashDupPairsFromSigs(sigs, "id", "sig", bands, threshold, bucketCap)
+    placedMinhashDupPairsFromSigs(sigs, "id", "sig", bands, threshold,
+      bucketCap, driverFinish = driverFinish)
   }
 
   /** Banding + verify over a pre-MATERIALIZED minhash signature frame.
@@ -988,12 +1006,41 @@ object Dedup {
     * (r19 JobProbe: the 4 broadcast builds were half of q22's final-stage
     * jobs). Carried columns ship with the est fetch BEFORE the est
     * filter, so only carry payloads the fetch exchange can afford —
-    * callers gate on corpus size (the eager-shingle gate). */
+    * callers gate on corpus size (the eager-shingle gate).
+    *
+    * DRIVER FINISH: when `sigs` was materialized here with at most
+    * [[DriverFinishMaxDocs]] rows and the call uses no `carry`, no scale
+    * ladder and no sig-identical collapse, the pairs are finished on the
+    * driver ([[driverMinhashPairs]]): one collect instead of the banding
+    * shuffle, the pair distinct and both signature fetches, whose fixed
+    * per-stage cost is most of a small shard's dedup. The pairs, their
+    * estimates, the `lshStats` record and the budget refusal are the
+    * distributed arm's; the result is a local relation. */
   def minhashDupPairsFromSigs(sigs: DataFrame, idCol: String, sigCol: String,
       bands: Int, threshold: Double, bucketCap: Int = 256,
       numHashes: Int = -1, scaleGeomMinDocs: Long = 0L,
       collapseSigMinDocs: Long = defaultScaleGeomMinDocs,
-      carry: Seq[(String, String)] = Nil): DataFrame = {
+      carry: Seq[(String, String)] = Nil): DataFrame =
+    placedMinhashDupPairsFromSigs(sigs, idCol, sigCol, bands, threshold,
+      bucketCap, numHashes, scaleGeomMinDocs, collapseSigMinDocs, carry,
+      driverFinish = true)
+
+  /** Signature rows at or under which [[minhashDupPairsFromSigs]] may
+    * finish on the driver: 2^16 × 16 bands of (long key) plus 64-byte
+    * estimates is a few MB of collected rows. At 65,000 documents the
+    * finish still beat the distributed arm on a 4-core local[4] session
+    * (2.9–3.4 s against 3.8–3.9 s for pairs plus clusters), by a margin
+    * that narrows with size. */
+  private val DriverFinishMaxDocs: Long = 1L << 16
+
+  /** [[minhashDupPairsFromSigs]] with the finish chosen by the caller:
+    * `false` always runs the distributed arm. */
+  private[graft] def placedMinhashDupPairsFromSigs(sigs: DataFrame,
+      idCol: String, sigCol: String, bands: Int, threshold: Double,
+      bucketCap: Int = 256, numHashes: Int = -1, scaleGeomMinDocs: Long = 0L,
+      collapseSigMinDocs: Long = defaultScaleGeomMinDocs,
+      carry: Seq[(String, String)] = Nil,
+      driverFinish: Boolean): DataFrame = {
     validateCarry(carry)
     lazy val nDocs: Long = {
       val m = materializedRows(sigs); if (m >= 0) m else sigs.count()
@@ -1025,11 +1072,19 @@ object Dedup {
           (bands, -1)
         } else scaledMinhashGeometry(nDocs, numHashes, bands, scaleGeomMinDocs)
       }
+    val collapse = collapseSigMinDocs > 0 && nDocs >= collapseSigMinDocs
+    val sigRows = materializedRows(sigs)
+    val finished =
+      if (driverFinish && carry.isEmpty && gRows < 0 && !collapse &&
+          sigRows >= 0 && sigRows <= DriverFinishMaxDocs)
+        driverMinhashPairs(sigs, idCol, sigCol, bands, threshold, bucketCap)
+      else None
+    if (finished.isDefined) return finished.get
     // sig-identical pre-banding collapse (VERDICT r18 #4): distinct
     // signatures band, members attach to their representative directly —
     // see sigIdenticalCollapse for semantics + the star-link equivalence
     val (bandSrc, memberPairs, collapsed) =
-      if (collapseSigMinDocs > 0 && nDocs >= collapseSigMinDocs)
+      if (collapse)
         sigIdenticalCollapse(sigs, idCol, Seq(col(sigCol)),
           "minhash-sig-collapse")
       else (sigs, null, 0L)
@@ -1046,10 +1101,7 @@ object Dedup {
     // guard's cardinality is known from the materialization (minus the
     // collapsed members, whose count the collapse already measured) —
     // zero extra jobs
-    val known = {
-      val m = materializedRows(sigs)
-      if (m >= 0) (m - collapsed) * gBands else -1L
-    }
+    val known = if (sigRows >= 0) (sigRows - collapsed) * gBands else -1L
     // the estimate travels as MinHashBytes (64 B vs the long array's
     // ~528 B) in BOTH forms — the est co-location, not the banding, is
     // what exhausted scratch at the 4th decade. Form choice mirrors
@@ -1097,6 +1149,110 @@ object Dedup {
       bandedPairs.unionByName(
         if (carry.isEmpty) m0 else joinSigs(m0, sigs, idCol, carryCols: _*))
     }
+  }
+
+  /** The driver finish of [[minhashDupPairsFromSigs]]: one job collects
+    * (id, band keys, [[graft.functions.MinHashBytes]]) and the driver
+    * enumerates exactly the pairs `aggBucketPairs` emits — every pair of
+    * a bucket within `bucketCap`, the min-id star past it, `id_a < id_b`
+    * (a null id pairs with nothing, and a null id heading an oversize
+    * bucket's sorted members empties its star), each pair once — scored
+    * by [[graft.functions.ByteJaccard]]'s own `eval`.
+    *
+    * Before any pair is built, the exact post-cap candidate count from
+    * the bucket sizes is recorded in `lshStats` (kind `minhash`, the
+    * distributed guard's measured tier) and refused past the candidate
+    * budget. A count past the driver union-find's edge bound
+    * ([[driverMaxEdges]]) returns None: the caller runs the distributed
+    * arm over the same checkpoint. So do ids of a non-integral type, whose
+    * order this finish does not reproduce. */
+  private def driverMinhashPairs(sigs: DataFrame, idCol: String,
+      sigCol: String, bands: Int, threshold: Double,
+      bucketCap: Int): Option[DataFrame] = {
+    import scala.collection.mutable.{ArrayBuffer, LongMap}
+    val spark = sigs.sparkSession
+    val idType = sigs.select(col(idCol)).schema.head.dataType
+    if (!Seq(LongType, IntegerType, ShortType, ByteType).contains(idType))
+      return None
+    val t0 = System.nanoTime()
+    val rows = sigs.select(col(idCol),
+      graft.functions.TextHashFunctions.band_keys(col(sigCol), bands),
+      graft.functions.TextHashFunctions.minhash_bytes(col(sigCol))).collect()
+    val hasId = rows.map(!_.isNullAt(0))
+    val id = rows.map(r => if (r.isNullAt(0)) 0L else r.getAs[Number](0).longValue())
+    val banded = rows.indices.filterNot(rows(_).isNullAt(1)).toArray
+    val keys = banded.map(r => rows(r).getSeq[Long](1).toArray)
+    // per band, one primitive sort finds the repeated keys; only buckets of
+    // two or more members are gathered (most buckets are singletons)
+    var nBuckets = 0L
+    val groups = ArrayBuffer.empty[ArrayBuffer[Int]]
+    (0 until bands).foreach { b =>
+      val k = keys.map(_(b))
+      val sorted = k.clone()
+      java.util.Arrays.sort(sorted)
+      val multi = LongMap.empty[ArrayBuffer[Int]]
+      var i = 0
+      while (i < sorted.length) {
+        var j = i + 1
+        while (j < sorted.length && sorted(j) == sorted(i)) j += 1
+        nBuckets += 1
+        if (j - i >= 2) multi(sorted(i)) = new ArrayBuffer[Int](j - i)
+        i = j
+      }
+      if (multi.nonEmpty)
+        k.indices.foreach(t => multi.get(k(t)).foreach(_ += banded(t)))
+      groups ++= multi.values
+    }
+    // the measured guard tier, from the exact bucket sizes (singletons add
+    // no candidates)
+    val sizes = groups.map(_.size.toLong)
+    val over = sizes.filter(_ > bucketCap)
+    val est = sizes.iterator
+      .map(m => if (m > bucketCap) m - 1 else m * (m - 1) / 2).sum
+    recordLshStat(LshStat("minhash", nBuckets, over.size,
+      over.iterator.map(_ - bucketCap).sum,
+      if (sizes.nonEmpty) sizes.max else math.min(nBuckets, 1L), est))
+    val budget = candidateBudget(spark)
+    System.err.println(s"[graft-lsh] minhash driver finish: docs=${rows.length} " +
+      s"buckets=$nBuckets overflow=${over.size} estCandidates=$est " +
+      f"budget=$budget groupSec=${(System.nanoTime() - t0) / 1e9}%.2f")
+    refuseOverBudget("minhash", est, budget)
+    if (est > driverMaxEdges(spark)) return None
+    val pairs = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    groups.foreach { ms =>
+      if (ms.size <= bucketCap) {
+        val ids = ms.filter(hasId).map(id)
+        for (i <- ids.indices; j <- i + 1 until ids.size if ids(i) != ids(j))
+          pairs += ((math.min(ids(i), ids(j)), math.max(ids(i), ids(j))))
+      } else if (ms.forall(hasId)) {
+        val rep = ms.iterator.map(id).min
+        ms.iterator.map(id).filter(_ > rep).foreach(m => pairs += ((rep, m)))
+      }
+    }
+    // every row of each id (an id repeated in `sigs` meets each of its
+    // signatures, as the distributed arm's fetch joins do)
+    val rowsOf = rows.indices.filter(hasId).groupBy(id)
+    val jaccard = graft.functions.ByteJaccard(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(0, BinaryType, true),
+      org.apache.spark.sql.catalyst.expressions.BoundReference(1, BinaryType, true))
+    def typed(v: Long): Any = idType match {
+      case LongType => v
+      case IntegerType => v.toInt
+      case ShortType => v.toShort
+      case _ => v.toByte
+    }
+    val out = new java.util.ArrayList[Row]()
+    pairs.toSeq.sorted.foreach { case (a, b) =>
+      for (ra <- rowsOf(a); rb <- rowsOf(b)) {
+        val j = jaccard.eval(org.apache.spark.sql.catalyst.InternalRow(
+          rows(ra).get(2), rows(rb).get(2)))
+        if (j != null && j.asInstanceOf[Double] >= threshold)
+          out.add(Row(typed(a), typed(b), j))
+      }
+    }
+    Some(spark.createDataFrame(out, StructType(Seq(
+      StructField("id_a", idType), StructField("id_b", idType),
+      StructField("est_jaccard", DoubleType)))))
   }
 
   /** Persistent LSH band index over a corpus signature frame: one row per
@@ -1790,7 +1946,9 @@ object Dedup {
     * replaces diameter+1 rounds of fixed job cost (r19; the same
     * bounded-pull class as the ANN centroid fetches). Min-id-root unions
     * reproduce the propagation labels exactly (spec-pinned, chains
-    * included) and the fast path converges for any diameter.
+    * included) and the fast path converges for any diameter. A local
+    * pair frame (`isLocal`, as the minhash driver finish returns) within
+    * that bound goes straight to the union-find: no checkpoint, no job.
     *
     * Returns (`id`, `cluster`) for every id that appears in a pair;
     * unpaired corpus ids are their own singleton clusters and are not
@@ -1798,9 +1956,9 @@ object Dedup {
     * Throws after `maxIter` non-converged rounds rather than returning a
     * partially-propagated (silently wrong) labeling. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val (dedupedPairs, nPairs) = materializeCounted(
-      pairs.select(col("id_a").cast(LongType).as("src"),
-        col("id_b").cast(LongType).as("dst")).distinct())
+    val spark = pairs.sparkSession
+    val directed = pairs.select(col("id_a").cast(LongType).as("src"),
+      col("id_b").cast(LongType).as("dst"))
     // SMALL pair graphs (`spark.graft.cc.driverMaxEdges`, default 1M ≈
     // 16 MB of longs — the bounded-driver-pull class the centroid fetches
     // already sit in): a driver union-find labels components in one
@@ -1808,34 +1966,17 @@ object Dedup {
     // at bench SFs those fixed per-round jobs WERE the query (r19: q71
     // spent ~0.8 s on ~8 jobs for a 3-round graph). Min-id roots keep the
     // iterative path's labels exactly (spec-pinned equal, chains incl.).
-    val driverMaxEdges = dedupedPairs.sparkSession.conf
-      .getOption("spark.graft.cc.driverMaxEdges").map(_.toLong)
-      .getOrElse(1000000L)
-    if (nPairs <= driverMaxEdges) {
-      val spark = dedupedPairs.sparkSession
+    // A local pair frame (the minhash driver finish) is already on the
+    // driver: its collect runs no Spark job and needs no checkpoint.
+    if (pairs.isLocal) {
+      val es = directed.collect().distinct
+      if (es.length <= driverMaxEdges(spark)) return unionFindLabels(spark, es)
+    }
+    val (dedupedPairs, nPairs) = materializeCounted(directed.distinct())
+    if (nPairs <= driverMaxEdges(spark)) {
       val es = dedupedPairs.collect()
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x
-        while (parent.getOrDefault(c, c) != c) {
-          val nx = parent.getOrDefault(c, c); parent.put(c, r); c = nx
-        }
-        r
-      }
-      es.foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // min-id root: labels match the iterative path
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val ids = es.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-        .toArray.distinct
       releaseMaterialized(dedupedPairs)
-      import spark.implicits._
-      return ids.map(i => (i, find(i))).toSeq.toDF("id", "cluster")
+      return unionFindLabels(spark, es)
     }
     // large path: undirect the CHECKPOINTED directed pairs (the pair plan
     // ran exactly once, into the checkpoint — the old two-branch union
@@ -1871,6 +2012,40 @@ object Dedup {
       s"dupClusters did not converge within $maxIter rounds — the pair " +
         "graph has a path longer than maxIter; raise maxIter (rounds " +
         "needed = graph diameter) or pre-split the input")
+  }
+
+  /** `spark.graft.cc.driverMaxEdges`: the pair count up to which
+    * [[dupClusters]] labels on the driver, and past which the minhash
+    * driver finish hands its candidates to the distributed arm. */
+  private def driverMaxEdges(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.cc.driverMaxEdges").map(_.toLong)
+      .getOrElse(1000000L)
+
+  /** Union-find over (src, dst) long edges: (`id`, `cluster`) for every
+    * endpoint, labelled by its component's min id (min-id roots), as a
+    * local relation. */
+  private def unionFindLabels(spark: SparkSession, es: Array[Row]): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = x
+      while (parent.getOrDefault(c, c) != c) {
+        val nx = parent.getOrDefault(c, c); parent.put(c, r); c = nx
+      }
+      r
+    }
+    es.foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // min-id root: labels match the iterative path
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    val ids = es.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
+      .toArray.distinct
+    import spark.implicits._
+    ids.map(i => (i, find(i))).toSeq.toDF("id", "cluster")
   }
 
   // -------------------------------------------------------------------------

@@ -95,25 +95,16 @@ object TextAnalysis {
   // pipeline hygiene: scrubbing, chunking, splitting
   // -------------------------------------------------------------------------
 
-  /** Scrub emails and URLs (the standard pre-training hygiene pass). */
   /** Strip markup to plain text: drop tags (`<...>`, including
     * script/style BLOCKS with their contents), decode the five standard
-    * XML entities, collapse whitespace. Pure regex/replace composition —
-    * deterministic and reproducible by any engine, which is what makes a
+    * XML entities, collapse whitespace. One native expression
+    * ([[graft.functions.StripMarkup]]) whose result is exactly that of a
+    * regex/replace chain any engine can replay, which is what makes a
     * cleaned corpus re-derivable from the raw crawl. */
-  def stripMarkup(html: Column): Column = {
-    // one pass per block tag, NOT one pattern with a </\1> backreference:
-    // RE2-family engines (DuckDB, Go) have no backreferences, and the
-    // operator's value is that any engine reproduces the cleaned corpus
-    val noScript = regexp_replace(html, "(?is)<script[^>]*>.*?</script>", " ")
-    val noBlocks = regexp_replace(noScript, "(?is)<style[^>]*>.*?</style>", " ")
-    val noTags = regexp_replace(noBlocks, "<[^>]*>", " ")
-    val decoded = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
-      "&#39;" -> "'", "&amp;" -> "&") // amp LAST: double-escapes stay literal
-      .foldLeft(noTags) { case (c, (e, ch)) => replace(c, lit(e), lit(ch)) }
-    trim(regexp_replace(decoded, "\\s+", " "))
-  }
+  def stripMarkup(html: Column): Column =
+    graft.functions.TextHashFunctions.strip_markup(html)
 
+  /** Scrub emails and URLs (the standard pre-training hygiene pass). */
   def scrubPii(text: Column): Column = {
     val noEmail = regexp_replace(text,
       "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>")

@@ -154,6 +154,8 @@ class ExtSpec extends SparkTestBase {
     // (star-link at bucketCap=16), on both the keys form and the payload
     // form (candidateBudget forced into the measured tier so payloadForm
     // engages), against the window path (fast path disabled via conf).
+    // Both runs are pinned to the distributed arm: at 300 documents the
+    // default call would finish on the driver and skip both sub-arms.
     val texts = (0 until 300).map { i =>
       if (i < 60) s"shared boilerplate header number ${i / 3} repeated for the cluster body tail"
       else if (i < 200) "one giant oversize cluster every document identical beyond the cap"
@@ -164,8 +166,9 @@ class ExtSpec extends SparkTestBase {
     def run(aggRows: String, budget: String): Set[(Long, Long)] = {
       spark.conf.set("spark.graft.lsh.aggPairsMaxBandedRows", aggRows)
       spark.conf.set("spark.graft.lsh.candidateBudget", budget)
-      try Dedup.minhashDupPairs(corpus, "text", "doc_id", numHashes = 64,
-          bands = 16, shingleN = 3, threshold = 0.5, bucketCap = 16)
+      try Dedup.placedMinhashDupPairs(corpus, "text", "doc_id", numHashes = 64,
+          bands = 16, shingleN = 3, threshold = 0.5, bucketCap = 16,
+          driverFinish = false)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       finally {
