@@ -138,7 +138,7 @@ class Engine(spark: SparkSession, catalog: Catalog,
     spark.conf.getOption("spark.graft.segmentCache.maxSlices")
       .map(_.toInt).getOrElse(128)
   // bound on the groups a serve-time partial MERGE may materialize on the
-  // driver (groupBy/topN post-merge evaluation): past it the merge throws
+  // driver (its (bucket, dims) groups): past it the merge throws
   // PartialMerge.Overflow and the query falls back to the whole-query plan
   // — a high-cardinality dimension must not balloon driver memory. Sized
   // like the partial-bucket bound: far past any dashboard shape, far under
@@ -648,34 +648,20 @@ class Engine(spark: SparkSession, catalog: Catalog,
     }
   }
 
-  /** Serve-time merge dispatch for the partial-fragment path. `rollup`
-    * tells the count merge which algebra the day fragments used: on a
-    * rollup datasource the planner compiles count to `sum(storedCount)`,
-    * whose empty value is null, not 0. Throws [[PartialMerge.Overflow]]
-    * when the merge would exceed the driver group bound — callers fall
-    * back to the whole-query plan. */
-  private def mergePartial(query: Query, frags: Seq[String]): String = {
-    val rollup = query.dataSource match {
-      case DataSource.Table(n) => catalog.rollupCountColumn(n).isDefined
-      case _ => false
-    }
-    query match {
-      case t: Query.Timeseries =>
-        PartialMerge.merge(t, frags, chunkCoverageOf(t.dataSource), rollup)
-      case gq: Query.GroupBy =>
-        PartialMerge.mergeGroupBy(gq, frags, rollup,
-          segmentCacheMaxPartialGroups, Some((spark, catalog)))
-      case tn: Query.TopN =>
-        PartialMerge.mergeTopN(tn, frags, rollup, segmentCacheMaxPartialGroups)
+  /** Serve-time merge for the partial-fragment path. `rollup` tells the
+    * count merge which algebra the day fragments used: on a rollup
+    * datasource the planner compiles count to `sum(storedCount)`, whose
+    * empty value is null, not 0. Throws [[PartialMerge.Overflow]] when the
+    * merge would exceed the driver group bound — callers fall back to the
+    * whole-query plan. */
+  private def mergePartial(query: Query, frags: Seq[String]): String =
+    query.dataSource match {
+      case DataSource.Table(n) =>
+        PartialMerge.merge(query, frags, catalog.chunkCoverage(n),
+          catalog.rollupCountColumn(n).isDefined,
+          segmentCacheMaxPartialGroups, spark, catalog)
       case other => throw new IllegalStateException(
-        s"not a partial-merge shape: ${other.getClass.getSimpleName}")
-    }
-  }
-
-  private def chunkCoverageOf(ds: DataSource): Option[Seq[Interval]] =
-    ds match {
-      case DataSource.Table(n) => catalog.chunkCoverage(n)
-      case _ => None
+        s"not a partial-merge datasource: $other")
     }
 
   /** SINGLE-FLIGHT registry for cold fragment computations (VERDICT r12
@@ -1315,8 +1301,8 @@ object ResultEncoder {
 
   /** The (prologue, per-row, epilogue) writers for the three BUCKETED
     * result shapes (timeseries / groupBy / topN) against a given
-    * generator — shared by the main stream encode and the per-chunk
-    * fragment split so the two renderings can never drift. */
+    * generator — shared by the main stream encode, the per-chunk fragment
+    * split and the partial merge so the renderings can never drift. */
   private def bucketedWriters(q: Query,
       gen: JsonGenerator, fieldNames: Array[String])
       : (() => Unit, Row => Unit, () => Unit) = q match {
@@ -1371,6 +1357,19 @@ object ResultEncoder {
 
     case other => throw new IllegalArgumentException(
       s"not a bucketed result shape: ${other.getClass.getSimpleName}")
+  }
+
+  /** Encode driver-side rows (fields `fieldNames`, the whole plan's
+    * output order) in a bucketed result's shape — the partial merge's
+    * rendering. */
+  private[engine] def encodeBucketed(q: Query, fieldNames: Array[String],
+      rows: Iterator[Row]): String = {
+    val out = new java.io.StringWriter()
+    val gen = mapper.getFactory.createGenerator(out)
+    val (prologue, writeRow, epilogue) = bucketedWriters(q, gen, fieldNames)
+    prologue(); rows.foreach(writeRow); epilogue()
+    gen.close()
+    out.toString
   }
 
   /** Encode a bucketed result (timeseries / groupBy / topN) SPLIT into

@@ -2,280 +2,70 @@ package graft.engine
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.expr.Compilers
+import graft.expr.Compilers.TimeColumn
 import graft.model._
 import graft.plan.QueryPlanner
+import graft.sources.Catalog
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAlias
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
+  DeclarativeAggregate}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.time.Instant
+import scala.util.control.NonFatal
 
-/** Serve-time merge of per-chunk DAY-granularity partial aggregates into a
-  * non-nesting-granularity timeseries result — the Spark-engine equivalent
-  * of Druid's broker merging per-segment partial aggregates in its
-  * scatter-gather (reference `arch/druid-arch.md:38-40`,
-  * `query/query-internal-procedure.md:7,43-47`). The fragments are the
-  * day sub-query results [[SegmentResultCache.decomposePartial]] shapes
-  * (skipEmptyBuckets, no post-aggs, ascending); this object re-buckets
-  * their rows under the ORIGINAL granularity, merges aggregator values by
-  * each aggregator's algebra, zero-fills against a driver-replicated spine,
-  * evaluates post-aggregators over the merged values, and renders the
-  * Druid timeseries JSON shape — byte-compatible with the whole-query
-  * plan's encoding (pinned by EngineSpec's randomized equivalence sweep).
+/** Serve-time merge of per-chunk DAY (or HOUR) partial aggregates into the
+  * result of a timeseries / groupBy / topN at a granularity the day chunks
+  * nest in — the Spark-engine equivalent of Druid's broker merging
+  * per-segment partials with the same aggregator factories the historicals
+  * used (reference `arch/druid-arch.md:38-40`,
+  * `query/query-internal-procedure.md:7,43-47,128-142`). The fragments are
+  * the sub-query results [[SegmentResultCache.decomposePartial]] shapes
+  * (no post-aggs, having, limitSpec or ranking).
   *
-  * Every rule here mirrors a specific planner/encoder behavior:
-  *  - bucket timestamp = `Compilers.truncInstant` (the spine's own
-  *    truncation; granularity `all` stamps the first interval start);
-  *  - spine = `QueryPlanner.spineBuckets` ∩ segment coverage (the
-  *    segment-gap skip, reference `query/query-timeseries.md:93`);
-  *  - zero-fill values per `QueryPlanner.zeroFillCol` (sums/counts → typed
-  *    zero, min/max → null) when skipEmptyBuckets is off; granularity
-  *    `all` instead reproduces a global aggregate over zero rows
-  *    (count → 0, long sum → 0, double/float sum and min/max → null);
-  *  - post-aggregator arithmetic reproduces `Compilers.postAggCol`'s null
-  *    and divide-by-zero semantics in doubles.
+  * Every step is evaluated through the planner's own expressions, analysed
+  * once per query shape against a `LocalRelation` and evaluated
+  * interpreted on the driver — no Dataset action runs, so a fully cached
+  * serve runs zero Spark jobs:
+  *  - merge: each aggregator re-aggregates its day values with the
+  *    `Compilers.aggCol` compile of its merge aggregator (counts and sums
+  *    → sum, min/max → min/max, first/last → min_by/max_by over the day
+  *    timestamp, a rollup count → the stored-count sum, null over nothing);
+  *    hyperUnique/cardinality union their day register words;
+  *  - zero-fill (timeseries spine path): `QueryPlanner.zeroFillCol`;
+  *  - post-aggregators: `Compilers.postAggCol`;
+  *  - having: `QueryPlanner.havingCol`;
+  *  - order: `QueryPlanner.limitOrder` (groupBy limitSpec) and
+  *    `QueryPlanner.topNRanking` (topN rank), through `InterpretedOrdering`;
+  *  - render: `ResultEncoder`'s bucketed writers, so the bytes are the
+  *    whole plan's encoding of the same rows.
+  *
+  * Bucket timestamps are `Compilers.truncInstant` of the fragment
+  * timestamp (granularity `all` stamps the first interval start), and the
+  * timeseries spine is `QueryPlanner.spineBuckets` ∩ segment coverage (the
+  * segment-gap skip, reference `query/query-timeseries.md:93`).
   *
   * Floating-point caveat (Druid's broker merge shares it): double/float
   * sums re-associate — a merged sum can differ from the single-plan sum in
   * the last ulp on adversarial value sets. Counts, longs, min and max are
-  * exact.
+  * exact. Fractional dimension values are read back as doubles (a float
+  * dimension under a numeric having or ordering can differ by an ulp).
   *
   * Memory profile: the merge holds the merged result on the driver —
-  * bounded by the BUFFERED result size, i.e. exactly the bound of the
-  * buffered `executeJson` path this serves (which builds the full result
-  * string either way). The streaming path never computes fragments cold;
-  * it serves the partial merge only when every fragment is already
-  * cached, and falls back to the streaming whole-query plan otherwise.
+  * bounded by `spark.graft.segmentCache.maxPartialGroups` and by the
+  * BUFFERED result size of the `executeJson` path it serves. The streaming
+  * path never computes fragments cold; it serves the partial merge only
+  * when every fragment is already cached.
   */
 object PartialMerge {
 
   private val mapper = new ObjectMapper()
-  private val isoFmt = java.time.format.DateTimeFormatter.ISO_INSTANT
-
-  // -- per-aggregator merge algebra -----------------------------------------
-
-  /** What an aggregator's finalized day value merges as: the inner shape of
-    * [[SegmentResultCache.mergeableAgg]]'s accepted set. */
-  private sealed trait Acc {
-    def add(n: JsonNode): Unit
-    /** Merged value; `fill` = apply the zero-fill coalesce (the spine
-      * path's `zeroFillCol` rule) to empty sums. */
-    def value(fill: Boolean): Any
-  }
-
-  /** `rollup = false`: count compiles to `count(...)` — NEVER null, so
-    * the identity is 0 on every path. `rollup = true`: count compiles to
-    * `sum(when(p, storedCount))` (the rollup rewrite), which is NULL over
-    * zero contributing rows — the merge must reproduce null when every
-    * day value was null and no zero-fill coalesce applies (skipEmpty /
-    * granularity `all`), exactly like a double sum. */
-  private final class CountAcc(rollup: Boolean) extends Acc {
-    private var seen = false
-    private var s = 0L
-    def add(n: JsonNode): Unit =
-      if (n != null && !n.isNull) { seen = true; s += n.asLong() }
-    def value(fill: Boolean): Any =
-      if (!rollup || seen || fill) java.lang.Long.valueOf(s) else null
-  }
-
-  /** Long sums are non-null by construction (`aggCol` coalesces to 0L), so
-    * the identity is 0 on both the fill and the empty-`all` path. */
-  private final class LongSumAcc extends Acc {
-    private var s = 0L
-    def add(n: JsonNode): Unit = if (n != null && !n.isNull) s += n.asLong()
-    def value(fill: Boolean): Any = java.lang.Long.valueOf(s)
-  }
-
-  private final class DoubleSumAcc(asFloat: Boolean) extends Acc {
-    private var seen = false
-    private var s = 0.0
-    def add(n: JsonNode): Unit =
-      if (n != null && !n.isNull) { seen = true; s += n.asDouble() }
-    def value(fill: Boolean): Any =
-      if (seen || fill) {
-        if (asFloat) java.lang.Float.valueOf(s.toFloat)
-        else java.lang.Double.valueOf(s)
-      } else null
-  }
-
-  /** min/max with Spark's total ordering (NaN greatest) via
-    * `Double.compare`/`Float.compare`; zero-fill leaves them null
-    * (`zeroFillCol` does not coalesce min/max). */
-  private final class MinMaxAcc(typ: String, isMin: Boolean) extends Acc {
-    private var present = false
-    private var l = 0L; private var d = 0.0; private var f = 0.0f
-    private def better(c: Int): Boolean = if (isMin) c < 0 else c > 0
-    def add(n: JsonNode): Unit = if (n != null && !n.isNull) {
-      typ match {
-        case "long" =>
-          val v = n.asLong()
-          if (!present || better(java.lang.Long.compare(v, l))) l = v
-        case "float" =>
-          val v = n.floatValue()
-          if (!present || better(java.lang.Float.compare(v, f))) f = v
-        case _ =>
-          val v = n.asDouble()
-          if (!present || better(java.lang.Double.compare(v, d))) d = v
-      }
-      present = true
-    }
-    def value(fill: Boolean): Any =
-      if (!present) null
-      else typ match {
-        case "long"  => java.lang.Long.valueOf(l)
-        case "float" => java.lang.Float.valueOf(f)
-        case _       => java.lang.Double.valueOf(d)
-      }
-  }
-
-  /** first/last merge POSITIONALLY: `add` calls arrive in bucket-time
-    * order — a fragment covers exactly ONE UTC day, so each merged bucket
-    * receives at most one day value per fragment, and callers iterate
-    * fragments chunk-ascending. "Value at the bucket's max non-null
-    * timestamp" = the last day with any non-null value contributes its
-    * own (already correct) day-last — i.e. the last non-null day value;
-    * dually for first. A day with rows but only null inputs yields a null
-    * day value and is skipped, exactly as `max_by(in, when(in.isNotNull,
-    * ts))` skips null inputs over the whole bucket. */
-  private final class FirstLastAcc(typ: String, isFirst: Boolean) extends Acc {
-    private var v: Any = null
-    private def typed(n: JsonNode): Any = typ match {
-      case "long"  => java.lang.Long.valueOf(n.asLong())
-      case "float" => java.lang.Float.valueOf(n.floatValue())
-      case _       => java.lang.Double.valueOf(n.asDouble())
-    }
-    def add(n: JsonNode): Unit = if (n != null && !n.isNull) {
-      if (isFirst) { if (v == null) v = typed(n) } else v = typed(n)
-    }
-    def value(fill: Boolean): Any = v // zeroFillCol leaves first/last null
-  }
-
-  /** hyperUnique/cardinality merge from SKETCH day values: the day
-    * sub-query emits self-describing `<algo>:<base64>` register bytes
-    * (`Compilers.aggCol(sketchPartial = true)`), and register union is an
-    * elementwise max — associative, commutative — so day registers merged
-    * in any grouping equal the whole-bucket registers bit-for-bit, and the
-    * finalized estimate is IDENTICAL to the whole-query plan's (`hllpp:` =
-    * Spark's own HLL++ words at the `approx_count_distinct(_, 0.023)`
-    * precision; `hll11:` = the engine's p=11 sketch for pre-built
-    * BinaryType columns). Empty (no day values, or the zero-fill coalesce)
-    * finalizes to 0 — both algorithms estimate 0 over empty registers, and
-    * the planner's `zeroFillCol` coalesces these aggregators to 0L too. */
-  private final class SketchAcc extends Acc {
-    private var hllpp: org.apache.spark.sql.catalyst.expressions.SpecificInternalRow = null
-    private var hll11: Array[Byte] = null
-    def add(n: JsonNode): Unit = if (n != null && !n.isNull) {
-      val s = n.asText()
-      // MIME decoder tolerates (ignores) line separators, so the merge is
-      // robust to either base64 chunking flavor
-      if (s.startsWith("hllpp:")) {
-        if (hllpp == null) hllpp = graft.functions.Hllpp.newBuffer()
-        graft.functions.Hllpp.mergeInto(hllpp,
-          java.util.Base64.getMimeDecoder.decode(s.substring(6)))
-      } else if (s.startsWith("hll11:")) {
-        if (hll11 == null) hll11 = graft.functions.Hll.emptySketch
-        graft.functions.Hll.merge(hll11,
-          java.util.Base64.getMimeDecoder.decode(s.substring(6)))
-      } else throw new IllegalStateException(
-        s"not a sketch partial value: ${s.take(16)}")
-    }
-    def value(fill: Boolean): Any =
-      if (hllpp != null) java.lang.Long.valueOf(graft.functions.Hllpp.estimate(hllpp))
-      else if (hll11 != null) java.lang.Long.valueOf(graft.functions.Hll.estimate(hll11))
-      else java.lang.Long.valueOf(0L)
-  }
-
-  private def newAcc(a: Aggregator, rollup: Boolean): Acc = a match {
-    case Aggregator.Count(_)          => new CountAcc(rollup)
-    case Aggregator.Sum(_, _, "long") => new LongSumAcc
-    case Aggregator.Sum(_, _, t)      => new DoubleSumAcc(asFloat = t == "float")
-    case Aggregator.Min(_, _, t)      => new MinMaxAcc(t, isMin = true)
-    case Aggregator.Max(_, _, t)      => new MinMaxAcc(t, isMin = false)
-    case Aggregator.First(_, _, t)    => new FirstLastAcc(t, isFirst = true)
-    case Aggregator.Last(_, _, t)     => new FirstLastAcc(t, isFirst = false)
-    case _: Aggregator.HyperUnique    => new SketchAcc
-    case _: Aggregator.Cardinality    => new SketchAcc
-    case Aggregator.Filtered(_, inner) => newAcc(inner, rollup)
-    case other => throw new IllegalArgumentException(
-      s"not partial-mergeable: ${other.getClass.getSimpleName}")
-  }
-
-  // -- post-aggregator evaluation over merged values ------------------------
-
-  private def toDouble(v: Any): java.lang.Double = v match {
-    case null                   => null
-    case l: java.lang.Long      => java.lang.Double.valueOf(l.doubleValue)
-    case d: java.lang.Double    => d
-    case f: java.lang.Float     => java.lang.Double.valueOf(f.doubleValue)
-    case other => throw new IllegalStateException(s"non-numeric merge value: $other")
-  }
-
-  /** Mirrors `Compilers.postAggCol` over plain values: arithmetic in
-    * doubles with Spark null propagation, `/` → 0 when the divisor is 0 OR
-    * null, `quotient` = IEEE division with Druid's 0-divisor casing. */
-  private def evalPost(pa: PostAggregator, row: collection.Map[String, Any]): Any =
-    pa match {
-      case PostAggregator.Arithmetic(_, fn, fields) =>
-        val vs = fields.map(f => toDouble(evalPost(f, row)))
-        def red(op: (Double, Double) => Double) =
-          vs.reduce[java.lang.Double]((a, b) =>
-            if (a == null || b == null) null
-            else java.lang.Double.valueOf(op(a.doubleValue, b.doubleValue)))
-        fn match {
-          case "+" => red(_ + _)
-          case "-" => red(_ - _)
-          case "*" => red(_ * _)
-          case "/" =>
-            vs.reduce[java.lang.Double] { (a, b) =>
-              if (b == null || b.doubleValue == 0.0) java.lang.Double.valueOf(0.0)
-              else if (a == null) null
-              else java.lang.Double.valueOf(a.doubleValue / b.doubleValue)
-            }
-          case "quotient" =>
-            vs.reduce[java.lang.Double] { (a, b) =>
-              if (b != null && b.doubleValue == 0.0) {
-                val av = if (a == null) Double.NaN else a.doubleValue
-                java.lang.Double.valueOf(
-                  if (av > 0.0) Double.PositiveInfinity
-                  else if (av < 0.0) Double.NegativeInfinity
-                  else Double.NaN)
-              } else if (a == null || b == null) null
-              else java.lang.Double.valueOf(a.doubleValue / b.doubleValue)
-            }
-          case other =>
-            throw new IllegalArgumentException(s"unknown arithmetic fn '$other'")
-        }
-      case PostAggregator.FieldAccess(_, f)           => row.getOrElse(f, null)
-      case PostAggregator.FinalizingFieldAccess(_, f) => row.getOrElse(f, null)
-      case PostAggregator.Constant(_, v) => java.lang.Double.valueOf(v)
-      // whole plan: col(f).cast(DoubleType) over the finalized estimate
-      case PostAggregator.HyperUniqueCardinality(_, f) =>
-        toDouble(row.getOrElse(f, null))
-      case PostAggregator.GreatestLeast(_, fn, typ, fields) =>
-        // Spark greatest/least ignore nulls; all-null → null
-        if (typ == "long") {
-          // exact longs: a Long operand must NOT round-trip through
-          // Double (lossy past 2^53) — only genuinely fractional inputs
-          // truncate, mirroring cast(LongType)
-          val vs = fields.map(f => evalPost(f, row)).collect {
-            case l: java.lang.Long   => l.longValue
-            case d: java.lang.Double => d.doubleValue.toLong
-            case f: java.lang.Float  => f.floatValue.toLong
-          }
-          if (vs.isEmpty) null
-          else java.lang.Long.valueOf(if (fn == "greatest") vs.max else vs.min)
-        } else {
-          val vs = fields.map(f => toDouble(evalPost(f, row)))
-            .collect { case d if d != null => d.doubleValue }
-          if (vs.isEmpty) null
-          else java.lang.Double.valueOf(
-            if (fn == "greatest") vs.max else vs.min)
-        }
-      case other => throw new IllegalArgumentException(
-        s"not driver-evaluable: ${other.getClass.getSimpleName}")
-    }
-
-  // -- merge + render --------------------------------------------------------
-
-  private implicit val instantOrd: Ordering[Instant] =
-    Ordering.fromLessThan(_ isBefore _)
 
   /** Thrown when the serve-time merge would materialize more groups than
     * the configured bound (`spark.graft.segmentCache.maxPartialGroups`) —
@@ -285,646 +75,521 @@ object PartialMerge {
     s"partial merge materialized > $bound groups; falling back " +
       s"(raise spark.graft.segmentCache.maxPartialGroups to serve this shape)")
 
-  /** Thrown when a serve-time evaluation (FilterH analysis/eval, a value
-    * conversion) cannot reproduce the whole plan — the engine falls back
-    * to the whole-query plan, which either serves the query or raises its
-    * own (better) error. */
+  /** Thrown when a serve-time evaluation (analysis, FilterH, a value
+    * shape, a binding limit through a tie) cannot reproduce the whole plan
+    * — the engine falls back to the whole-query plan, which either serves
+    * the query or raises its own (better) error. */
   final class NotServeable(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
 
-  // -- driver-side post-merge evaluation (having / limitSpec / topN rank) ----
-  //
-  // Druid's broker applies having, limit ordering, and topN ranking AFTER
-  // merging per-segment partials (reference `query/query-internal-procedure
-  // .md:128-142`); these helpers mirror the planner's column semantics over
-  // plain merged values: casts evaluate through Catalyst's own Cast in
-  // LEGACY mode (the engine pins ANSI off), string ordering is UTF8 binary
-  // order, doubles order with Spark's -0.0 == 0.0 / NaN-greatest rule, and
-  // null placement is Spark's default (asc = nulls first, desc = nulls last).
+  // -- compiled programs, memoized per query shape --------------------------
 
-  private def legacyCast(v: Any, to: org.apache.spark.sql.types.DataType): Any =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      org.apache.spark.sql.catalyst.expressions.Literal(v), to, None,
-      org.apache.spark.sql.catalyst.expressions.EvalMode.LEGACY).eval(null)
-
-  private def castToDouble(v: Any): java.lang.Double = v match {
-    case null                 => null
-    case d: java.lang.Double  => d
-    case l: java.lang.Long    => java.lang.Double.valueOf(l.doubleValue)
-    case f: java.lang.Float   => java.lang.Double.valueOf(f.doubleValue)
-    case b: java.lang.Boolean => java.lang.Double.valueOf(if (b) 1.0 else 0.0)
-    case s: String =>
-      legacyCast(org.apache.spark.unsafe.types.UTF8String.fromString(s),
-        org.apache.spark.sql.types.DoubleType) match {
-        case null      => null
-        case d: Double => java.lang.Double.valueOf(d)
-        case other     => java.lang.Double.valueOf(String.valueOf(other).toDouble)
-      }
-    case other => toDouble(other)
-  }
-
-  private def castToString(v: Any): String = v match {
-    case null      => null
-    case s: String => s
-    case other =>
-      String.valueOf(legacyCast(other, org.apache.spark.sql.types.StringType))
-  }
-
-  /** Spark's comparison of two doubles (`SQLOrderingUtil.compareDoubles`):
-    * `==` first so -0.0 equals 0.0, `Double.compare` otherwise so NaN is
-    * greatest. */
-  private def cmpDouble(a: Double, b: Double): Int =
-    if (a == b) 0 else java.lang.Double.compare(a, b)
-
-  /** Total order of two non-null values of one column (same runtime shape
-    * per column by construction): longs/booleans/ints exact, strings in
-    * UTF8 binary order, any numeric mix via the double rule. */
-  private def compareValues(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.lang.Long, y: java.lang.Long) => java.lang.Long.compare(x, y)
-    case (x: java.lang.Integer, y: java.lang.Integer) => Integer.compare(x, y)
-    case (x: java.lang.Boolean, y: java.lang.Boolean) =>
-      java.lang.Boolean.compare(x, y)
-    case (x: String, y: String) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(x)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
-    case (x: org.apache.spark.unsafe.types.UTF8String,
-          y: org.apache.spark.unsafe.types.UTF8String) => x.compareTo(y)
-    case _ =>
-      val x = castToDouble(a); val y = castToDouble(b)
-      if (x == null || y == null)
-        throw new IllegalStateException(s"unorderable values: $a vs $b")
-      cmpDouble(x.doubleValue, y.doubleValue)
-  }
-
-  /** One ordering step: null placement + direction, Spark defaults. */
-  private def compareWithNulls(k1: Any, k2: Any, desc: Boolean): Int =
-    if (k1 == null && k2 == null) 0
-    else if (k1 == null) { if (desc) 1 else -1 } // asc: nulls first
-    else if (k2 == null) { if (desc) -1 else 1 } // desc: nulls last
-    else { val c = compareValues(k1, k2); if (desc) -c else c }
-
-  /** `Compilers.orderingCol` over a plain value. */
-  private def orderKey(dimensionOrder: String, v: Any): Any =
-    dimensionOrder match {
-      case "numeric" => castToDouble(v)
-      case "strlen" =>
-        val s = castToString(v)
-        if (s == null) null
-        else Integer.valueOf(
-          org.apache.spark.unsafe.types.UTF8String.fromString(s).numChars())
-      case "alphanumeric" =>
-        val s = castToString(v)
-        if (s == null) null
-        else graft.functions.AlphanumericSortKey.compute(
-          org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      case _ => v
+  /** Access-ordered LRU (bounded: the keys are client-shaped). */
+  private final class Lru[K, V](capacity: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > capacity
     }
+    def getOrElseUpdate(k: K)(build: => V): V =
+      m.synchronized(Option(m.get(k))).getOrElse {
+        val v = build
+        m.synchronized(m.put(k, v))
+        v
+      }
+  }
 
-  // -- FilterH: serve-time evaluation through Spark's own analyzer ----------
+  /** The merge of one aggregator list, over a day relation
+    * `(__time, <non-sketch day values>)` (`dayNames`/`dayTypes`; the
+    * sketch aggregators `sketchNames` merge beside it): the initial
+    * declarative buffer of the merge aggregates, the update over
+    * `buffer ++ day row`, and the finals over the buffer. */
+  private final class MergeProgram(val sketch: Array[Boolean],
+      val dayNames: Array[String], val dayTypes: Array[DataType],
+      val sketchNames: Array[String], val initial: InternalRow,
+      val update: Array[Expression], val result: Seq[Expression],
+      val aggTypes: Seq[DataType])
+
+  /** The post-merge evaluation of one query shape over the merged relation
+    * `(__time, dims, aggs)`: zero-fill (timeseries), post-aggregators
+    * (producing the output relation), having and order (over it). */
+  private final class FinishProgram(val outAttrs: Seq[Attribute],
+      val zeroFill: Seq[Expression], val post: Seq[Expression],
+      val having: Option[Expression], val order: Seq[SortOrder]) {
+    val toRow: Any => Any = CatalystTypeConverters.createToScalaConverter(
+      StructType(outAttrs.map(a => StructField(a.name, a.dataType))))
+  }
+
+  // keyed by (aggregators, rollup): shared by every shape over them
+  private val merges = new Lru[(Seq[Aggregator], Boolean), MergeProgram](64)
+  // keyed by (query sans intervals and client-noise context, dimension
+  // types, manifest token) — the token is "" unless a FilterH having
+  // compiles against the planned schema, so a commit re-plans nothing else
+  private val finishes =
+    new Lru[(Query, Seq[DataType], String), FinishProgram](64)
 
   /** Context keys that can change the PLANNED schema or row shape — these
-    * stay in the filterEvalCache key; everything else (queryId, timeout,
-    * priority …) is blanked so a polling dashboard still memoizes. */
+    * stay in the finish key; everything else (queryId, timeout, priority …)
+    * is blanked so a polling dashboard still memoizes. */
   private val planShapeContextKeys: Set[String] = Set(
     "graft.sketchPartials", "skipEmptyBuckets", "approxTopN",
     "minTopNThreshold")
 
-  /** Access-ordered LRU of compiled FilterH predicates, keyed by
-    * (query sans intervals/client-noise context, manifest token). Bounded —
-    * predicates hold only small bound expressions, but the key is
-    * client-shaped. */
-  private val filterEvalCache = new java.util.LinkedHashMap[(Query, String),
-      Map[Filter, collection.Map[String, Any] => java.lang.Boolean]](
-      16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[(Query, String),
-        Map[Filter, collection.Map[String, Any] => java.lang.Boolean]])
-        : Boolean = size() > 64
-  }
-
-  private def collectFilterH(h: HavingSpec): Seq[Filter] = h match {
-    case HavingSpec.FilterH(f) => Seq(f)
-    case HavingSpec.AndH(hs)   => hs.flatMap(collectFilterH)
-    case HavingSpec.OrH(hs)    => hs.flatMap(collectFilterH)
-    case HavingSpec.NotH(h0)   => collectFilterH(h0)
-    case _                     => Seq.empty
-  }
-
-  /** Merged value → Catalyst internal value of the PLANNED column type.
-    * A shape the conversion can't reproduce raises [[NotServeable]] (the
-    * engine falls back). Float-typed columns share the documented
-    * float-reparse ulp caveat: the merged value is the double nearest the
-    * rendered decimal. */
-  private def toInternalValue(v: Any,
-      dt: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.spark.sql.types._
-    if (v == null) return null
-    dt match {
-      case StringType =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(castToString(v))
-      case LongType => v match {
-        case l: java.lang.Long    => l
-        case i: java.lang.Integer => java.lang.Long.valueOf(i.longValue)
-        case other => throw new NotServeable(s"FilterH: $other is not a long")
-      }
-      case IntegerType => v match {
-        case l: java.lang.Long    => java.lang.Integer.valueOf(l.intValue)
-        case i: java.lang.Integer => i
-        case other => throw new NotServeable(s"FilterH: $other is not an int")
-      }
-      case DoubleType => v match {
-        case d: java.lang.Double => d
-        case l: java.lang.Long   => java.lang.Double.valueOf(l.doubleValue)
-        case f: java.lang.Float  => java.lang.Double.valueOf(f.doubleValue)
-        case other => throw new NotServeable(s"FilterH: $other is not a double")
-      }
-      case FloatType => v match {
-        case f: java.lang.Float  => f
-        case d: java.lang.Double => java.lang.Float.valueOf(d.floatValue)
-        case l: java.lang.Long   => java.lang.Float.valueOf(l.floatValue)
-        case other => throw new NotServeable(s"FilterH: $other is not a float")
-      }
-      case BooleanType => v match {
-        case b: java.lang.Boolean => b
-        case other => throw new NotServeable(s"FilterH: $other is not a boolean")
-      }
-      case other =>
-        throw new NotServeable(s"FilterH: unsupported column type $other")
+  /** A query's shape: sans intervals and client-noise context. */
+  private def shapeOf(q: Query): Query = {
+    def ctx(c: Map[String, String]) = c.view.filterKeys(planShapeContextKeys).toMap
+    q match {
+      case t: Query.Timeseries => t.copy(intervals = Seq.empty, context = ctx(t.context))
+      case g: Query.GroupBy    => g.copy(intervals = Seq.empty, context = ctx(g.context))
+      case t: Query.TopN       => t.copy(intervals = Seq.empty, context = ctx(t.context))
+      case other               => other
     }
   }
 
-  /** Compile each FilterH filter of `q.having` into a per-row predicate
-    * over the merged values. Rather than hand-mirroring
-    * `Compilers.filterCol`'s semantics (typed literals, legacy casts,
-    * like-escape normalization, search specs, type coercion...), the
-    * filter is compiled by filterCol ITSELF over the planner's aggregate
-    * output schema (a lazy plan — analysis only, never a Spark job; exact
-    * types matter: a double column whose merged window holds whole numbers
-    * renders integral, and a value-derived schema would mistype it),
-    * analyzed by Spark's own analyzer against a LocalRelation — the same
-    * coercion rules the whole-query plan gets — and evaluated interpreted
-    * per row. Semantics match the whole plan by construction; anything
-    * that fails raises [[NotServeable]] and the engine falls back to the
-    * whole plan, which serves the query or raises its own (better) error. */
-  private def filterHavingEvaluators(q: Query.GroupBy, names: Seq[String],
-      spark: org.apache.spark.sql.SparkSession, catalog: graft.sources.Catalog)
-      : Map[Filter, collection.Map[String, Any] => java.lang.Boolean] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
-      AttributeSeq, BindReferences, GenericInternalRow}
-    import org.apache.spark.sql.catalyst.plans.logical
-    val filters = q.having.toSeq.flatMap(collectFilterH).distinct
-    if (filters.isEmpty) return Map.empty
-    val planned =
-      try QueryPlanner.plan(spark, q, catalog).schema
-      catch { case scala.util.control.NonFatal(e) =>
-        throw new NotServeable("FilterH: schema planning failed", e) }
-    val fieldByName = planned.fields.map(f => f.name -> f).toMap
-    val schema = org.apache.spark.sql.types.StructType(names.map(n =>
-      fieldByName.getOrElse(n,
-        throw new NotServeable(s"FilterH: no planned column '$n'"))))
-    val attrs = schema.fields.toSeq.map(f =>
-      AttributeReference(f.name, f.dataType, nullable = true)())
-    val types = schema.fields.map(_.dataType)
-    filters.map { f =>
-      val cond = org.apache.spark.sql.GraftBridge.analyzableExpression(
-        Compilers.filterCol(f, schema))
-      val analyzed =
-        try spark.sessionState.analyzer.execute(
-          logical.Filter(cond, logical.LocalRelation(attrs)))
-        catch { case scala.util.control.NonFatal(e) =>
-          throw new NotServeable("FilterH: analysis failed", e) }
-      val resolvedCond = analyzed match {
-        case lf: logical.Filter if lf.condition.resolved => lf.condition
-        case other => throw new NotServeable(s"FilterH: did not resolve: $other")
-      }
-      val bound = BindReferences.bindReference(resolvedCond, AttributeSeq(attrs))
-      val eval: collection.Map[String, Any] => java.lang.Boolean = { row =>
-        val arr = new Array[Any](names.size)
-        var i = 0
-        names.foreach { n =>
-          arr(i) = toInternalValue(row.getOrElse(n, null), types(i)); i += 1
-        }
-        (try bound.eval(new GenericInternalRow(arr))
-        catch { case scala.util.control.NonFatal(e) =>
-          throw new NotServeable("FilterH: eval failed", e) }) match {
-          case null                 => null
-          case b: java.lang.Boolean => b
-          case other =>
-            throw new NotServeable(s"FilterH: non-boolean value $other")
-        }
-      }
-      f -> eval
-    }.toMap
+  // -- analysis over a LocalRelation -----------------------------------------
+
+  private def attr(name: String, dt: DataType): AttributeReference =
+    AttributeReference(name, dt, nullable = true)()
+
+  private def named(c: Column): NamedExpression =
+    org.apache.spark.sql.GraftBridge.analyzableExpression(c) match {
+      case n: NamedExpression => n
+      case e => UnresolvedAlias(e)
+    }
+
+  /** Analyse `plan` with the session's own analyzer (the whole plan's
+    * coercion rules), replacing runtime-replaceable expressions so every
+    * node evaluates interpreted. Runs no job. */
+  private def analyze(spark: SparkSession,
+      plan: logical.LogicalPlan): logical.LogicalPlan = {
+    val analyzed =
+      try ReplaceExpressions(spark.sessionState.analyzer.execute(plan))
+      catch { case NonFatal(e) => throw new NotServeable("analysis failed", e) }
+    if (!analyzed.resolved) throw new NotServeable(s"did not resolve: $analyzed")
+    analyzed
   }
 
-  /** Three-valued having evaluation mirroring `QueryPlanner.havingCol`:
-    * numeric comparators go through cast-to-double with Spark's double
-    * comparison; dimSelector through cast-to-string equality; and/or keep
-    * Spark's null logic; not is `!coalesce(h, false)`; FilterH evaluates
-    * through the prebuilt `filterEvals` predicate. Returns
-    * TRUE/FALSE/null(unknown); only TRUE keeps the row. */
-  private def evalHaving(h: HavingSpec, row: collection.Map[String, Any],
-      filterEvals: Map[Filter,
-        collection.Map[String, Any] => java.lang.Boolean]): java.lang.Boolean = {
-    import HavingSpec._
-    def cmpTo(a: String, v: Double, f: Int => Boolean): java.lang.Boolean = {
-      val d = castToDouble(row.getOrElse(a, null))
-      if (d == null) null
-      else java.lang.Boolean.valueOf(f(cmpDouble(d.doubleValue, v)))
-    }
-    h match {
-      case EqualTo(a, v)     => cmpTo(a, v, _ == 0)
-      case GreaterThan(a, v) => cmpTo(a, v, _ > 0)
-      case LessThan(a, v)    => cmpTo(a, v, _ < 0)
-      case DimSelector(dim, v) =>
-        val s = castToString(row.getOrElse(dim, null))
-        if (s == null) null else java.lang.Boolean.valueOf(s == v)
-      case AndH(hs) =>
-        var sawNull = false
-        hs.foreach { h0 =>
-          val b = evalHaving(h0, row, filterEvals)
-          if (b == null) sawNull = true
-          else if (!b.booleanValue) return java.lang.Boolean.FALSE
-        }
-        if (sawNull) null else java.lang.Boolean.TRUE
-      case OrH(hs) =>
-        var sawNull = false
-        hs.foreach { h0 =>
-          val b = evalHaving(h0, row, filterEvals)
-          if (b == null) sawNull = true
-          else if (b.booleanValue) return java.lang.Boolean.TRUE
-        }
-        if (sawNull) null else java.lang.Boolean.FALSE
-      case NotH(h0) =>
-        val b = evalHaving(h0, row, filterEvals) // !coalesce(h, false): unknown -> true
-        java.lang.Boolean.valueOf(b == null || !b.booleanValue)
-      case FilterH(f) => filterEvals.getOrElse(f,
-        throw new NotServeable("FilterH: no prebuilt predicate"))(row)
+  private def bind[E <: Expression](e: E, attrs: Seq[Attribute]): E =
+    BindReferences.bindReference(e, AttributeSeq(attrs))
+
+  private def stripAlias(e: Expression): Expression = e match {
+    case Alias(c, _) => c
+    case other       => other
+  }
+
+  // -- the merge algebra -----------------------------------------------------
+
+  private def isSketch(a: Aggregator): Boolean = a match {
+    case _: Aggregator.HyperUnique | _: Aggregator.Cardinality => true
+    case Aggregator.Filtered(_, inner) => isSketch(inner)
+    case _ => false
+  }
+
+  private def typeOf(typ: String): DataType = typ match {
+    case "long"  => LongType
+    case "float" => FloatType
+    case _       => DoubleType
+  }
+
+  /** Type of an aggregator's day value in a fragment. */
+  private def dayType(a: Aggregator): DataType = a match {
+    case _: Aggregator.Count           => LongType
+    case Aggregator.Sum(_, _, t)       => typeOf(t)
+    case Aggregator.Min(_, _, t)       => typeOf(t)
+    case Aggregator.Max(_, _, t)       => typeOf(t)
+    case Aggregator.First(_, _, t)     => typeOf(t)
+    case Aggregator.Last(_, _, t)      => typeOf(t)
+    case Aggregator.Filtered(_, inner) => dayType(inner)
+    case other => throw new IllegalArgumentException(
+      s"not partial-mergeable: ${other.getClass.getSimpleName}")
+  }
+
+  /** The aggregator that re-aggregates `a`'s day values (a day-relation
+    * column named `a.name`) into `a`'s whole-bucket value, compiled by
+    * `Compilers.aggCol` itself. A filtered aggregator's day values already
+    * carry its filter. A count's day values are a stored count: on a rollup
+    * datasource it merges exactly as the planner compiles a rollup count
+    * (sum, null over no rows), elsewhere as a long sum (0 over no rows,
+    * like `count`). */
+  private def mergeCol(a: Aggregator, day: StructType, rollup: Boolean): Column =
+    a match {
+      case Aggregator.Count(n) if rollup =>
+        Compilers.aggCol(a, day, rollupCount = Some(n))
+      case Aggregator.Count(n)       => Compilers.aggCol(Aggregator.Sum(n, n, "long"), day)
+      case Aggregator.Sum(n, _, t)   => Compilers.aggCol(Aggregator.Sum(n, n, t), day)
+      case Aggregator.Min(n, _, t)   => Compilers.aggCol(Aggregator.Min(n, n, t), day)
+      case Aggregator.Max(n, _, t)   => Compilers.aggCol(Aggregator.Max(n, n, t), day)
+      case Aggregator.First(n, _, t) => Compilers.aggCol(Aggregator.First(n, n, t), day)
+      case Aggregator.Last(n, _, t)  => Compilers.aggCol(Aggregator.Last(n, n, t), day)
+      case Aggregator.Filtered(_, inner) => mergeCol(inner, day, rollup)
       case other => throw new IllegalArgumentException(
-        s"not driver-evaluable having: ${other.getClass.getSimpleName}")
+        s"not partial-mergeable: ${other.getClass.getSimpleName}")
     }
+
+  /** Analyse the merge aggregates as one global `Aggregate` over the day
+    * relation and split each declarative aggregate into buffer, update and
+    * final, as Spark's own aggregation iterator does. */
+  private def compileMerge(aggs: Seq[Aggregator], rollup: Boolean,
+      spark: SparkSession): MergeProgram = {
+    val sketch = aggs.map(isSketch).toArray
+    val merged = aggs.filterNot(isSketch)
+    val dayAttrs = attr(TimeColumn, TimestampType) +:
+      merged.map(a => attr(a.name, dayType(a)))
+    val daySchema = StructType(dayAttrs.map(a => StructField(a.name, a.dataType)))
+    val finals = if (merged.isEmpty) Seq.empty[Expression] else
+      analyze(spark, logical.Aggregate(Nil,
+        merged.map(a => named(mergeCol(a, daySchema, rollup))),
+        logical.LocalRelation(dayAttrs), None)) match {
+        case agg: logical.Aggregate => agg.aggregateExpressions.map(stripAlias)
+        case other => throw new NotServeable(s"unexpected merge plan: $other")
+      }
+    val aggExprs = finals.flatMap(_.collect { case ae: AggregateExpression => ae })
+      .distinct
+    val fns = aggExprs.map(_.aggregateFunction match {
+      case d: DeclarativeAggregate => d
+      case other => throw new NotServeable(s"not declarative: ${other.prettyName}")
+    })
+    val bufferAttrs = fns.flatMap(_.aggBufferAttributes)
+    val evaluate = aggExprs.zip(fns.map(_.evaluateExpression)).toMap
+    val initial = new InterpretedProjection(fns.flatMap(_.initialValues))
+      .apply(InternalRow.empty)
+    new MergeProgram(sketch, merged.map(_.name).toArray, merged.map(dayType).toArray,
+      aggs.filter(isSketch).map(_.name).toArray, initial,
+      fns.flatMap(_.updateExpressions).map(bind(_, bufferAttrs ++ dayAttrs)).toArray,
+      finals.map(f => bind(f.transformDown {
+        case ae: AggregateExpression => evaluate(ae)
+      }, bufferAttrs)),
+      aggs.zip(sketch).map {
+        case (_, true) => LongType
+        case (a, false) => finals(merged.indexOf(a)).dataType
+      })
   }
 
-  /** JSON value -> the plain value used by having/ordering. Matches the
-    * whole plan's column values for string/long dims and all aggregates;
-    * FLOAT-typed dims reparse as the nearest double to their shortest
-    * decimal rendering (an ulp-level deviation possible only for a
-    * float-typed dim under a numeric having/ordering - documented). */
-  private def nodeToAny(n: JsonNode): Any =
+  /** hyperUnique/cardinality day values are self-describing register words
+    * (`Compilers.aggCol(sketchPartial = true)`: `hllpp:` = Spark's HLL++
+    * words at the planner's precision, `hll11:` = the engine's p=11 sketch
+    * of pre-built BinaryType columns). Register union is an elementwise
+    * max, so the merged estimate is IDENTICAL to the whole plan's; no
+    * words finalize to 0, as the planner's estimate over no rows does. */
+  private def mergeSketch(acc: AnyRef, text: String): AnyRef = {
+    // the MIME decoder ignores line separators: either base64 chunking works
+    val words = java.util.Base64.getMimeDecoder.decode(text.substring(6))
+    if (text.startsWith("hllpp:")) {
+      val a = if (acc == null) graft.functions.Hllpp.newBuffer()
+        else acc.asInstanceOf[SpecificInternalRow]
+      graft.functions.Hllpp.mergeInto(a, words); a
+    } else if (text.startsWith("hll11:")) {
+      val a = if (acc == null) graft.functions.Hll.emptySketch
+        else acc.asInstanceOf[Array[Byte]]
+      graft.functions.Hll.merge(a, words); a
+    } else throw new IllegalStateException(
+      s"not a sketch partial value: ${text.take(16)}")
+  }
+
+  private def sketchEstimate(acc: AnyRef): Long = acc match {
+    case null                  => 0L
+    case r: SpecificInternalRow => graft.functions.Hllpp.estimate(r)
+    case b: Array[Byte]        => graft.functions.Hll.estimate(b)
+  }
+
+  // -- the post-merge program ------------------------------------------------
+
+  private def compileFinish(q: Query, mergedAttrs: Seq[Attribute],
+      aggs: Seq[Aggregator], posts: Seq[PostAggregator],
+      spark: SparkSession, catalog: Catalog): FinishProgram = {
+    val rel = logical.LocalRelation(mergedAttrs)
+    def project(cols: Seq[NamedExpression], over: logical.LocalRelation) =
+      analyze(spark, logical.Project(cols, over)) match {
+        case p: logical.Project => p
+        case other => throw new NotServeable(s"unexpected plan: $other")
+      }
+    val zeroFill = q match {
+      case _: Query.Timeseries =>
+        project(mergedAttrs.head +: aggs.map(a => named(QueryPlanner.zeroFillCol(a))),
+          rel).projectList.map(e => bind(stripAlias(e), mergedAttrs))
+      case _ => Seq.empty
+    }
+    val postPlan = project(mergedAttrs ++ posts.map(p => named(Compilers.postAggCol(p))),
+      rel)
+    val outAttrs = postPlan.output
+    val out = logical.LocalRelation(outAttrs)
+    val having = q match {
+      case g: Query.GroupBy => g.having.map { h =>
+        val filterH = SegmentResultCache.hasFilterH(h)
+        // FilterH compiles against the PLANNED aggregate schema (exact types
+        // matter for its typed literals): its columns must have the merged
+        // relation's types, or the shape falls back
+        val schema =
+          if (!filterH) StructType(outAttrs.map(a => StructField(a.name, a.dataType)))
+          else try QueryPlanner.plan(spark, q, catalog).schema
+          catch { case NonFatal(e) =>
+            throw new NotServeable("FilterH: schema planning failed", e) }
+        val cond = analyze(spark, logical.Filter(org.apache.spark.sql.GraftBridge
+          .analyzableExpression(QueryPlanner.havingCol(h, schema, spark, catalog)),
+          out)) match {
+          case f: logical.Filter => f.condition
+          case other => throw new NotServeable(s"unexpected having plan: $other")
+        }
+        if (filterH) cond.references.foreach { a =>
+          if (!schema.fields.exists(f => f.name == a.name && f.dataType == a.dataType))
+            throw new NotServeable(s"FilterH: '${a.name}' is not ${a.dataType} in the plan")
+        }
+        bind(cond, outAttrs)
+      }
+      case _ => None
+    }
+    val orderCols = q match {
+      case g: Query.GroupBy => g.limitSpec.toSeq.flatMap(ls => QueryPlanner.limitOrder(ls.columns))
+      case t: Query.TopN => QueryPlanner.topNRanking(t.metric, t.dimension.outputName)
+      case _ => Seq.empty
+    }
+    val order = if (orderCols.isEmpty) Seq.empty else
+      analyze(spark, logical.Sort(orderCols.map(c =>
+        org.apache.spark.sql.GraftBridge.analyzableExpression(c) match {
+          case so: SortOrder => so
+          case e => SortOrder(e, Ascending)
+        }), true, out, None)) match {
+        case s: logical.Sort => s.order.map(bind(_, outAttrs))
+        case other => throw new NotServeable(s"unexpected order plan: $other")
+      }
+    new FinishProgram(outAttrs, zeroFill,
+      postPlan.projectList.map(e => bind(stripAlias(e), mergedAttrs)), having, order)
+  }
+
+  // -- fragment parse ----------------------------------------------------------
+
+  /** One (bucket, dims) group: its dims (typed), the merge buffer and the
+    * sketch accumulators. `dimsText` is the deterministic pre-order. */
+  private final class Group(val bucket: Long, val dims: Array[Any],
+      val dimsText: String, val buffer: InternalRow, val sketches: Array[AnyRef])
+
+  /** A JSON dim value as the Catalyst value of its kind (fractional numbers
+    * read back as doubles, as Jackson parses them). */
+  private def dimValue(n: JsonNode): (Any, DataType) =
+    if (n == null || n.isNull) (null, null)
+    else if (n.isTextual) (UTF8String.fromString(n.asText()), StringType)
+    else if (n.isIntegralNumber) (n.asLong(), LongType)
+    else if (n.isNumber) (n.asDouble(), DoubleType)
+    else if (n.isBoolean) (n.asBoolean(), BooleanType)
+    else throw new NotServeable(s"dimension value $n has no merge type")
+
+  /** A day value of the fragment column type; Jackson reads the quoted
+    * non-finite doubles the encoder writes ("NaN", "Infinity"). */
+  private def dayValue(n: JsonNode, dt: DataType): Any =
     if (n == null || n.isNull) null
-    else if (n.isTextual) n.asText()
-    else if (n.isIntegralNumber) java.lang.Long.valueOf(n.asLong())
-    else if (n.isNumber) java.lang.Double.valueOf(n.asDouble())
-    else if (n.isBoolean) java.lang.Boolean.valueOf(n.asBoolean())
-    else n.toString
+    else dt match {
+      case LongType  => n.asLong()
+      case FloatType => n.asDouble().toFloat
+      case _         => n.asDouble()
+    }
 
-  /** A merged output row: bucket, verbatim dim nodes (for rendering), and
-    * the name -> value map (dims + merged aggs + post-aggs) for
-    * evaluation. */
-  private final case class MRow(bucket: Option[Instant], dimVals: Seq[JsonNode],
-      values: scala.collection.mutable.LinkedHashMap[String, Any])
+  private def micros(i: Instant): Long =
+    Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
 
-  /** Merge groupBy-shaped day fragments into rows in deterministic
-    * (bucket, dims) order, evaluating post-aggs over the merged values.
-    * `bucketOf` maps a fragment row's day timestamp to its output bucket
-    * (None = no timestamp in the output, the groupBy `all` shape). */
-  private def mergeGroupRows(dims: Seq[String], aggs: Seq[Aggregator],
-      postAggs: Seq[PostAggregator], bucketOf: Instant => Option[Instant],
-      fragments: Seq[String], rollup: Boolean, maxGroups: Int): Seq[MRow] = {
-    final case class Group(bucket: Option[Instant], dimVals: Seq[JsonNode],
-      accs: Array[Acc])
-    val merged = scala.collection.mutable.LinkedHashMap.empty[String, Group]
+  // -- merge + render --------------------------------------------------------
+
+  /** Merge the partial `fragments` (chunk-ascending) into the final result
+    * bytes for the ORIGINAL query `q` (timeseries, groupBy or topN).
+    * `coverage` is the datasource's segment-timeline coverage (the
+    * zero-fill gap-skip input, `Catalog.chunkCoverage`); `rollup` says the
+    * datasource stores a rollup count. Throws [[Overflow]] past
+    * `maxGroups` groups and [[NotServeable]] when an evaluation cannot
+    * reproduce the whole plan. */
+  def merge(q: Query, fragments: Seq[String], coverage: Option[Seq[Interval]],
+      rollup: Boolean, maxGroups: Int, spark: SparkSession,
+      catalog: Catalog): String = {
+    val (intervals, g, dims, aggs, posts, body) = q match {
+      case t: Query.Timeseries =>
+        (t.intervals, t.granularity, Seq.empty[String], t.aggregations,
+          t.postAggregations, "result")
+      case gq: Query.GroupBy =>
+        (gq.intervals, gq.granularity, gq.dimensions.map(_.outputName),
+          gq.aggregations, gq.postAggregations, "event")
+      case tn: Query.TopN =>
+        (tn.intervals, tn.granularity, Seq(tn.dimension.outputName),
+          tn.aggregations, tn.postAggregations, "event")
+      case other => throw new IllegalStateException(
+        s"not a partial-merge shape: ${other.getClass.getSimpleName}")
+    }
+    val allBucket = intervals.headOption.map(_.start).getOrElse(Instant.EPOCH)
+    val mp = merges.getOrElseUpdate((aggs, rollup))(compileMerge(aggs, rollup, spark))
+
+    // 1. parse every fragment row and fold it into its (bucket, dims) group
+    val groups = new java.util.HashMap[String, Group]()
+    val dimTypes = new Array[DataType](dims.size)
+    val next = new Array[Any](mp.update.length)
+    val joined = new JoinedRow
+    val day = new GenericInternalRow(1 + mp.dayNames.length)
+    def newGroup(bucket: Long, dimVals: Array[Any], text: String) =
+      new Group(bucket, dimVals, text, mp.initial.copy(),
+        new Array[AnyRef](mp.sketchNames.length))
+    var lastTs: String = null
+    var lastDay = 0L
+    var lastBucket = 0L
     fragments.filter(_.nonEmpty).foreach { frag =>
       val rows = mapper.readTree("[" + frag + "]")
-      // groupBy fragments have NO defined row order (the whole plan's is
-      // partition-arbitrary), and an HOUR fragment can carry one group's
-      // values across many rows — first/last merge POSITIONALLY, so rows
-      // must feed the accumulators in time order. A stable sort by the
-      // fragment-granularity timestamp restores it (fragments themselves
-      // arrive chunk-ascending, and chunk intervals are disjoint-ordered,
-      // so the global order is time-ascending too); day fragments carry
-      // one timestamp and are unaffected.
-      (0 until rows.size()).map(i => rows.get(i))
-        .sortBy(r => Instant.parse(r.get("timestamp").asText()))
-        .foreach { row =>
-        val bucket = bucketOf(Instant.parse(row.get("timestamp").asText()))
-        val ev = row.get("event")
-        val dimVals = dims.map(d => ev.get(d): JsonNode)
-        val key = bucket.map(_.toString).getOrElse("") + " " +
-          dimVals.map(n => if (n == null) "" else n.toString)
-            .mkString(" ")
-        val grp = merged.getOrElseUpdate(key, {
-          if (merged.size >= maxGroups) throw new Overflow(maxGroups)
-          Group(bucket, dimVals, aggs.map(newAcc(_, rollup)).toArray)
-        })
-        var j = 0
-        aggs.foreach { a => grp.accs(j).add(ev.get(a.name)); j += 1 }
-      }
-    }
-    merged.values.toSeq.sortBy(grp =>
-      (grp.bucket.map(_.toEpochMilli).getOrElse(0L),
-        grp.dimVals.map(n => if (n == null) "" else n.toString)
-          .mkString(" ")))
-      .map { grp =>
-        val values = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-        dims.zip(grp.dimVals).foreach { case (d, n) => values.put(d, nodeToAny(n)) }
-        var j = 0
-        aggs.foreach { a => values.put(a.name, grp.accs(j).value(false)); j += 1 }
-        postAggs.foreach(pa => values.put(pa.name, evalPost(pa, values)))
-        MRow(grp.bucket, grp.dimVals, values)
-      }
-  }
-
-  /** Event-object fields: dims render VERBATIM as parsed JSON nodes (typed
-    * dims round-trip exactly), merged aggregate/post-agg values by type. */
-  private def writeEventFields(gen: com.fasterxml.jackson.core.JsonGenerator,
-      dims: Seq[String], row: MRow): Unit = {
-    dims.zip(row.dimVals).foreach { case (d, n) =>
-      gen.writeFieldName(d)
-      if (n == null || n.isNull) gen.writeNull() else gen.writeTree(n)
-    }
-    row.values.foreach { case (k, v) =>
-      if (!dims.contains(k)) {
-        gen.writeFieldName(k)
-        v match {
-          case null                => gen.writeNull()
-          case l: java.lang.Long   => gen.writeNumber(l.longValue)
-          case d: java.lang.Double => gen.writeNumber(d.doubleValue)
-          case f: java.lang.Float  => gen.writeNumber(f.floatValue)
-          case other               => gen.writeString(String.valueOf(other))
+      var r = 0
+      while (r < rows.size()) {
+        val row = rows.get(r)
+        val ts = row.get("timestamp").asText()
+        if (ts != lastTs) {
+          val i = Instant.parse(ts)
+          lastTs = ts
+          lastDay = micros(i)
+          lastBucket = micros(g match {
+            case Granularity.All => allBucket
+            case _               => Compilers.truncInstant(g, i)
+          })
         }
-      }
-    }
-  }
-
-  /** Merge day-partial GROUPBY fragments into the final result bytes:
-    * group day rows by (original-granularity bucket, dimension values),
-    * merge aggregators by their algebra, evaluate post-aggs, then apply
-    * the serve-time post-merge algebra — having filter, limitSpec ordering
-    * and limit (Druid's broker order, reference
-    * `query/query-internal-procedure.md:128-142`). GroupBy has NO zero-fill
-    * spine; without a limitSpec there is no defined output order (the
-    * whole-query plan returns partition-arbitrary rows; the fragment law is
-    * SET equality of event objects) and rows emit in deterministic
-    * (bucket, dims) order. With limitSpec columns the order is the spec's —
-    * ties resolve by the deterministic pre-order (the whole plan's tie
-    * order is partition-arbitrary there too). */
-  def mergeGroupBy(q: Query.GroupBy, fragments: Seq[String],
-      rollup: Boolean, maxGroups: Int = Int.MaxValue,
-      serveCtx: Option[(org.apache.spark.sql.SparkSession,
-        graft.sources.Catalog)] = None): String = {
-    val g = q.granularity
-    val dims = q.dimensions.map(_.outputName)
-    val rows0 = mergeGroupRows(dims, q.aggregations, q.postAggregations,
-      ts => g match {
-        case Granularity.All => None
-        case _ => Some(Compilers.truncInstant(g, ts))
-      },
-      fragments, rollup, maxGroups)
-    // FilterH predicates compile against the planner's schema (needs the
-    // session + catalog; absent context falls back) — MEMOIZED per
-    // (query-sans-intervals, manifest state): a warm dashboard polling the
-    // same FilterH shape must not re-plan the whole query and re-run the
-    // analyzer on every serve (r15 review finding). The manifest token in
-    // the key rebuilds the predicate when segments flip, so a reingest
-    // that changes a column's type cannot serve a stale evaluator.
-    val filterEvals = q.having.toSeq.flatMap(collectFilterH) match {
-      case Nil => Map.empty[Filter,
-        collection.Map[String, Any] => java.lang.Boolean]
-      case _ => serveCtx match {
-        case Some((spark, catalog)) =>
-          val token = q.dataSource match {
-            case DataSource.Table(n) => catalog.segmentInfos(n).mkString(";")
-            case _ => ""
-          }
-          // the key blanks CLIENT noise (queryId, timeout, priority …) but
-          // must retain context flags that change the PLANNED schema —
-          // e.g. graft.sketchPartials flips finalized vs mergeable
-          // aggregate output (QueryPlanner.scala:168) — or two queries
-          // differing only in such a flag would share one compiled
-          // evaluator over the wrong schema (r15 advice)
-          val key = (q.copy(intervals = Seq.empty,
-            context = q.context.view.filterKeys(planShapeContextKeys).toMap),
-            token)
-          filterEvalCache.synchronized(Option(filterEvalCache.get(key)))
-            .getOrElse {
-              val names = dims ++ q.aggregations.map(_.name) ++
-                q.postAggregations.map(_.name)
-              val built = filterHavingEvaluators(q, names, spark, catalog)
-              filterEvalCache.synchronized(filterEvalCache.put(key, built)): Unit
-              built
+        val ev = row.get(body)
+        val dimNodes = dims.map(d => ev.get(d): JsonNode)
+        val text = dimNodes.map(n => if (n == null) "" else n.toString).mkString(" ")
+        val key = lastBucket.toString + " " + text
+        var grp = groups.get(key)
+        if (grp == null) {
+          if (groups.size >= maxGroups) throw new Overflow(maxGroups)
+          val vals = new Array[Any](dims.size)
+          var d = 0
+          while (d < dims.size) {
+            val (v, dt) = dimValue(dimNodes(d))
+            if (dt != null) {
+              if (dimTypes(d) == null) dimTypes(d) = dt
+              else if (dimTypes(d) != dt) throw new NotServeable(
+                s"dimension '${dims(d)}' mixes $dt and ${dimTypes(d)} values")
             }
-        case None =>
-          throw new NotServeable("FilterH: no serve context provided")
-      }
-    }
-    val havinged = q.having match {
-      case Some(h) => rows0.filter { r =>
-        val b = evalHaving(h, r.values, filterEvals)
-        b != null && b.booleanValue
-      }
-      case None => rows0
-    }
-    val finalRows = q.limitSpec match {
-      case Some(LimitSpec(cols, limitOpt)) =>
-        val ord = new Ordering[MRow] {
-          def compare(r1: MRow, r2: MRow): Int = {
-            cols.foreach { c =>
-              val desc = c.direction.startsWith("desc")
-              val cv = compareWithNulls(
-                orderKey(c.dimensionOrder,
-                  r1.values.getOrElse(c.dimension, null)),
-                orderKey(c.dimensionOrder,
-                  r2.values.getOrElse(c.dimension, null)),
-                desc)
-              if (cv != 0) return cv
-            }
-            0
+            vals(d) = v
+            d += 1
           }
+          grp = newGroup(lastBucket, vals, text)
+          groups.put(key, grp)
         }
-        val ordered =
-          if (cols.isEmpty) havinged
-          // stable sort: ties keep the (bucket, dims) pre-order
-          else havinged.sorted(ord)
-        limitOpt.foreach { n =>
-          // a BINDING cut through a spec-ordering tie is order-dependent:
-          // the whole plan's non-stable distributed sort keeps an
-          // arbitrary subset of the tied rows while this merge's stable
-          // pre-order keeps a specific one — cache state must not change
-          // the returned row SET, so the shape falls back (sibling of the
-          // r14 columns-empty guard, which the decompose guard rejects
-          // before it ever reaches here)
-          if (cols.nonEmpty && n > 0 && n < ordered.size &&
-              ord.compare(ordered(n - 1), ordered(n)) == 0)
-            throw new NotServeable(
-              "binding limit cuts through an ordering tie")
-        }
-        limitOpt.map(ordered.take).getOrElse(ordered)
-      case None => havinged
-    }
-    val out = new java.io.StringWriter()
-    val gen = mapper.getFactory.createGenerator(out)
-    gen.setCodec(mapper)
-    gen.writeStartArray()
-    finalRows.foreach { row =>
-      gen.writeStartObject()
-      gen.writeStringField("version", "v1")
-      row.bucket.foreach(b => gen.writeStringField("timestamp", isoFmt.format(b)))
-      gen.writeFieldName("event")
-      gen.writeStartObject()
-      writeEventFields(gen, dims, row)
-      gen.writeEndObject()
-      gen.writeEndObject()
-    }
-    gen.writeEndArray()
-    gen.close()
-    out.toString
-  }
-
-  /** `QueryPlanner.topNOrder` over a merged row: (ranking key, desc?). */
-  private def topNOrderKey(m: TopNMetricSpec, dimOut: String)
-      : (collection.Map[String, Any] => Any, Boolean) = m match {
-    case TopNMetricSpec.Numeric(metric)  => (r => r.getOrElse(metric, null), true)
-    case TopNMetricSpec.Lexicographic(_) => (r => r.getOrElse(dimOut, null), false)
-    case TopNMetricSpec.Alphanumeric(_)  =>
-      (r => orderKey("alphanumeric", r.getOrElse(dimOut, null)), false)
-    case TopNMetricSpec.Inverted(delegate) =>
-      val (k, desc) = topNOrderKey(delegate, dimOut)
-      (k, !desc)
-  }
-
-  /** Merge day-partial fragments (groupBy-shaped, one dimension) into the
-    * final TOPN result bytes: merge per (bucket, dim), evaluate post-aggs,
-    * rank per bucket by the metric spec with the dim-ascending tiebreak,
-    * cut at the threshold, render buckets ascending — exactly
-    * `QueryPlanner.planTopN`'s exact path evaluated at serve time over the
-    * merged partials (Druid's broker topN merge, reference
-    * `query/query-internal-procedure.md:128-142`). The per-bucket ranking
-    * is TOTAL (the dim tiebreak is unique within a bucket), so the bytes
-    * match the whole-query plan's. */
-  def mergeTopN(q: Query.TopN, fragments: Seq[String],
-      rollup: Boolean, maxGroups: Int = Int.MaxValue): String = {
-    val dimOut = q.dimension.outputName
-    val g = q.granularity
-    val allBucket: Instant =
-      q.intervals.headOption.map(_.start).getOrElse(Instant.EPOCH)
-    val rows = mergeGroupRows(Seq(dimOut), q.aggregations, q.postAggregations,
-      ts => Some(g match {
-        case Granularity.All => allBucket
-        case _               => Compilers.truncInstant(g, ts)
-      }),
-      fragments, rollup, maxGroups)
-    val (keyFn, desc) = topNOrderKey(q.metric, dimOut)
-    val rankOrd = new Ordering[MRow] {
-      def compare(r1: MRow, r2: MRow): Int = {
-        val c = compareWithNulls(keyFn(r1.values), keyFn(r2.values), desc)
-        if (c != 0) c
-        else compareWithNulls(r1.values.getOrElse(dimOut, null),
-          r2.values.getOrElse(dimOut, null), desc = false)
-      }
-    }
-    val byBucket = rows.groupBy(_.bucket.get).toSeq.sortBy(_._1)
-    val out = new java.io.StringWriter()
-    val gen = mapper.getFactory.createGenerator(out)
-    gen.setCodec(mapper)
-    gen.writeStartArray()
-    byBucket.foreach { case (bucket, bucketRows) =>
-      gen.writeStartObject()
-      gen.writeStringField("timestamp", isoFmt.format(bucket))
-      gen.writeFieldName("result")
-      gen.writeStartArray()
-      bucketRows.sorted(rankOrd).take(q.threshold).foreach { row =>
-        gen.writeStartObject()
-        writeEventFields(gen, Seq(dimOut), row)
-        gen.writeEndObject()
-      }
-      gen.writeEndArray()
-      gen.writeEndObject()
-    }
-    gen.writeEndArray()
-    gen.close()
-    out.toString
-  }
-
-  /** Merge day-partial `fragments` into the final result bytes for the
-    * ORIGINAL query `q`. `coverage` is the datasource's segment-timeline
-    * coverage (the zero-fill gap-skip input, `Catalog.chunkCoverage`). */
-  def merge(q: Query.Timeseries, fragments: Seq[String],
-      coverage: Option[Seq[Interval]], rollup: Boolean): String = {
-    val g = q.granularity
-    val skipEmpty = q.context.get("skipEmptyBuckets").exists(_.toBoolean)
-    val allBucket: Instant =
-      q.intervals.headOption.map(_.start).getOrElse(Instant.EPOCH)
-
-    val merged = scala.collection.mutable.HashMap.empty[Instant, Array[Acc]]
-    fragments.filter(_.nonEmpty).foreach { frag =>
-      val rows = mapper.readTree("[" + frag + "]")
-      (0 until rows.size()).foreach { i =>
-        val row = rows.get(i)
-        val ts = Instant.parse(row.get("timestamp").asText())
-        val bucket = g match {
-          case Granularity.All => allBucket
-          case _               => Compilers.truncInstant(g, ts)
-        }
-        val accs = merged.getOrElseUpdate(bucket,
-          q.aggregations.map(newAcc(_, rollup)).toArray)
-        val res = row.get("result")
+        day.update(0, lastDay)
         var j = 0
-        q.aggregations.foreach { a =>
-          accs(j).add(res.get(a.name)); j += 1
+        while (j < mp.dayNames.length) {
+          day.update(j + 1, dayValue(ev.get(mp.dayNames(j)), mp.dayTypes(j)))
+          j += 1
         }
+        // the aggregates' update expressions over (buffer, day row), all
+        // evaluated before any buffer slot changes
+        joined(grp.buffer, day)
+        j = 0
+        while (j < next.length) { next(j) = mp.update(j).eval(joined); j += 1 }
+        j = 0
+        while (j < next.length) { grp.buffer.update(j, next(j)); j += 1 }
+        j = 0
+        while (j < mp.sketchNames.length) {
+          val n = ev.get(mp.sketchNames(j))
+          if (n != null && !n.isNull)
+            grp.sketches(j) = mergeSketch(grp.sketches(j), n.asText())
+          j += 1
+        }
+        r += 1
       }
     }
 
-    // bucket set + fill semantics per the planner's three paths:
-    //  - all:        exactly one row, no zero-fill coalesce (a global
-    //                aggregate over zero rows yields null double sums)
-    //  - skipEmpty:  merged buckets only, raw values
-    //  - otherwise:  spine ∩ coverage, zero-fill coalesce everywhere
-    val (buckets, fill) = g match {
-      case Granularity.All => (Seq(allBucket), false)
-      case _ if skipEmpty  => (merged.keys.toSeq.sorted, false)
-      case _ =>
-        val spine = QueryPlanner.spineBuckets(q.intervals, g)
-        val covered = coverage match {
-          case Some(ivs) => spine.filter(b => ivs.exists(iv =>
-            b.isBefore(iv.end) && Compilers.nextBucket(g, b).isAfter(iv.start)))
-          case None => spine
+    // 2. the merged relation (__time, dims, aggs), compiled post-merge steps
+    val mergedAttrs = attr(TimeColumn, TimestampType) +:
+      (dims.zip(dimTypes).map { case (d, t) => attr(d, Option(t).getOrElse(StringType)) } ++
+        aggs.zip(mp.aggTypes).map { case (a, t) => attr(a.name, t) })
+    // a FilterH compile is pinned to the manifest state it planned against
+    val token = q match {
+      case gq: Query.GroupBy if gq.having.exists(SegmentResultCache.hasFilterH) =>
+        gq.dataSource match {
+          case DataSource.Table(n) => catalog.segmentInfos(n).mkString(";")
+          case _ => ""
         }
-        (((covered ++ merged.keys).distinct).sorted, true)
+      case _ => ""
     }
-    val ordered = if (q.descending) buckets.reverse else buckets
-    val emptyAccs: Array[Acc] = q.aggregations.map(newAcc(_, rollup)).toArray
+    val fp = finishes.getOrElseUpdate((shapeOf(q), mergedAttrs.map(_.dataType), token))(
+      compileFinish(q, mergedAttrs, aggs, posts, spark, catalog))
+    val result = new InterpretedProjection(mp.result)
+    def mergedRow(grp: Group): InternalRow = {
+      val finals = result(grp.buffer)
+      val vals = new Array[Any](mergedAttrs.size)
+      vals(0) = grp.bucket
+      System.arraycopy(grp.dims, 0, vals, 1, dims.size)
+      var j = 0; var m = 0; var s = 0
+      while (j < aggs.size) {
+        vals(1 + dims.size + j) =
+          if (mp.sketch(j)) { s += 1; sketchEstimate(grp.sketches(s - 1)) }
+          else { m += 1; finals.get(m - 1, mp.aggTypes(j)) }
+        j += 1
+      }
+      new GenericInternalRow(vals)
+    }
+    val post = new InterpretedProjection(fp.post)
+    val ordering = new InterpretedOrdering(fp.order)
 
-    val out = new java.io.StringWriter()
-    val gen = mapper.getFactory.createGenerator(out)
-    gen.writeStartArray()
-    ordered.foreach { bucket =>
-      val accs = merged.getOrElse(bucket, emptyAccs)
-      val row = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-      var j = 0
-      q.aggregations.foreach { a =>
-        row.put(a.name, accs(j).value(fill)); j += 1
-      }
-      q.postAggregations.foreach(pa => row.put(pa.name, evalPost(pa, row)))
-      gen.writeStartObject()
-      gen.writeStringField("timestamp", isoFmt.format(bucket))
-      gen.writeFieldName("result")
-      gen.writeStartObject()
-      row.foreach { case (k, v) =>
-        gen.writeFieldName(k)
-        v match {
-          case null                => gen.writeNull()
-          case l: java.lang.Long   => gen.writeNumber(l.longValue)
-          case d: java.lang.Double => gen.writeNumber(d.doubleValue)
-          case f: java.lang.Float  => gen.writeNumber(f.floatValue)
-          case other               => gen.writeString(String.valueOf(other))
+    // 3. the result rows in output order
+    val merged = groups.values.toArray(new Array[Group](0))
+    val outRows: Seq[InternalRow] = q match {
+      case t: Query.Timeseries =>
+        val byBucket = merged.map(grp => grp.bucket -> grp).toMap
+        val skipEmpty = t.context.get("skipEmptyBuckets").exists(_.toBoolean)
+        // bucket set per the planner's three paths: `all` = exactly one row,
+        // a global aggregate (no zero-fill); skipEmpty = merged buckets,
+        // raw values; otherwise spine ∩ coverage, zero-filled everywhere
+        val (buckets, fill) = g match {
+          case Granularity.All => (Seq(micros(allBucket)), false)
+          case _ if skipEmpty  => (byBucket.keys.toSeq.sorted, false)
+          case _ =>
+            val spine = QueryPlanner.spineBuckets(intervals, g)
+            val covered = coverage match {
+              case Some(ivs) => spine.filter(b => ivs.exists(iv =>
+                b.isBefore(iv.end) && Compilers.nextBucket(g, b).isAfter(iv.start)))
+              case None => spine
+            }
+            ((covered.map(micros) ++ byBucket.keys).distinct.sorted, true)
         }
-      }
-      gen.writeEndObject()
-      gen.writeEndObject()
+        val zeroFill = new InterpretedProjection(fp.zeroFill)
+        val rows = buckets.map { b =>
+          val m = mergedRow(byBucket.getOrElse(b, newGroup(b, Array.empty, "")))
+          post(if (fill) zeroFill(m) else m)
+        }
+        if (t.descending) rows.reverse else rows
+
+      case gq: Query.GroupBy =>
+        val pre = merged.sortBy(grp => (grp.bucket, grp.dimsText)).toSeq
+        // granularity `all` without dimensions is a global aggregate: one
+        // row even over no input, like the planner's `agg` without keys
+        val grps = if (pre.isEmpty && dims.isEmpty && g == Granularity.All &&
+          aggs.nonEmpty) Seq(newGroup(micros(allBucket), Array.empty, "")) else pre
+        val havinged = grps.map(grp => post(mergedRow(grp))).filter(r =>
+          fp.having.forall(h => h.eval(r) == true))
+        // stable sort: ties keep the (bucket, dims) pre-order
+        val ordered = if (fp.order.isEmpty) havinged else havinged.sorted(ordering)
+        gq.limitSpec.flatMap(_.limit) match {
+          case Some(n) =>
+            // a BINDING cut through an ordering tie is order-dependent: the
+            // whole plan's distributed sort keeps an arbitrary subset of
+            // the tied rows while this merge keeps a specific one — cache
+            // state must not change the returned row SET, so it falls back
+            if (fp.order.nonEmpty && n > 0 && n < ordered.size &&
+                ordering.compare(ordered(n - 1), ordered(n)) == 0)
+              throw new NotServeable("binding limit cuts through an ordering tie")
+            ordered.take(n)
+          case None => ordered
+        }
+
+      case tn: Query.TopN =>
+        // per-bucket rank by the planner's metric order + dim tiebreak (a
+        // TOTAL order within a bucket), cut at the threshold
+        merged.groupBy(_.bucket).toSeq.sortBy(_._1).flatMap { case (_, bucketGroups) =>
+          bucketGroups.toSeq.map(grp => post(mergedRow(grp))).sorted(ordering)
+            .take(tn.threshold)
+        }
+
+      case other => throw new IllegalStateException(
+        s"not a partial-merge shape: ${other.getClass.getSimpleName}")
     }
-    gen.writeEndArray()
-    gen.close()
-    out.toString
+
+    // 4. render through the whole plan's encoder
+    val names = fp.outAttrs.map(_.name).toArray
+    val fieldNames = q match {
+      case gq: Query.GroupBy if gq.granularity == Granularity.All =>
+        names.filterNot(_ == TimeColumn)
+      case _ => names
+    }
+    ResultEncoder.encodeBucketed(q, fieldNames,
+      outRows.iterator.map(r => fp.toRow(r).asInstanceOf[Row]))
   }
 }

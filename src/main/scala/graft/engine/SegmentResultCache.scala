@@ -164,14 +164,13 @@ object SegmentResultCache {
     Some(if (internal) "hour" else "day")
   }
 
-  /** Aggregators whose per-chunk partials merge by a driver-side rule the
-    * engine implements ([[PartialMerge]]): counts and sums add, min/min
-    * and max/max compose, filtered defers to its inner aggregator, and
-    * first/last compose POSITIONALLY — a fragment covers exactly one UTC
-    * day, so per merged bucket the day values arrive one-per-fragment in
-    * chunk-ascending order, and "value at the bucket's max non-null
-    * timestamp" equals "the last non-null day value" (dually for first;
-    * [[PartialMerge]] documents the proof obligation). hyperUnique and
+  /** Aggregators whose per-chunk partials re-aggregate losslessly
+    * ([[PartialMerge]] merges them with the planner's own aggregate
+    * compile): counts and sums add, min/min and max/max compose, filtered
+    * defers to its inner aggregator, and first/last take the value at the
+    * earliest/latest day with a non-null value — "value at the bucket's
+    * max non-null timestamp" is the last non-null day value, because a
+    * fragment row covers one day (or hour) of the bucket. hyperUnique and
     * cardinality merge as SKETCH partials: the day sub-query compiles them
     * to mergeable register bytes (`Compilers.aggCol(sketchPartial)` —
     * Druid's per-segment sketch partials, reference `TOC.md:47`), and the
@@ -208,15 +207,13 @@ object SegmentResultCache {
 
   /** Having specs [[PartialMerge]] evaluates driver-side over merged rows
     * — Druid's broker applies having AFTER merging partials (reference
-    * `query/query-internal-procedure.md:128-142`). The numeric/dimension
-    * comparators and the and/or/not combinators mirror the planner's
-    * `havingCol` three-valued logic exactly; `FilterH` (r15) compiles its
-    * filter through `Compilers.filterCol` over the PLANNED aggregate
-    * schema and evaluates it interpreted via Spark's own analyzer
-    * ([[PartialMerge.filterHavingEval]]), so its semantics are the whole
-    * plan's by construction — any filter over the query's own output
-    * columns qualifies, except registeredLookup extractions (they resolve
-    * against the catalog at plan time). */
+    * `query/query-internal-procedure.md:128-142`). The merge compiles the
+    * spec with the planner's own `havingCol`, so its semantics are the
+    * whole plan's by construction; a `FilterH` filter compiles against
+    * the PLANNED aggregate schema (its typed literals need the exact
+    * column types). Any filter over the query's own output columns
+    * qualifies, except registeredLookup extractions (they resolve against
+    * the catalog at plan time). */
   def evaluableHaving(h: HavingSpec, cols: Set[String]): Boolean = h match {
     // a name outside the query's own output columns falls back too — the
     // whole-query plan raises its (better) unresolved-column error there
@@ -228,6 +225,15 @@ object SegmentResultCache {
     case HavingSpec.OrH(hs)  => hs.forall(evaluableHaving(_, cols))
     case HavingSpec.NotH(s)  => evaluableHaving(s, cols)
     case HavingSpec.FilterH(f) => evaluableFilter(f, cols)
+  }
+
+  /** Whether a having spec holds a FilterH filter anywhere in its tree. */
+  def hasFilterH(h: HavingSpec): Boolean = h match {
+    case _: HavingSpec.FilterH => true
+    case HavingSpec.AndH(hs)   => hs.exists(hasFilterH)
+    case HavingSpec.OrH(hs)    => hs.exists(hasFilterH)
+    case HavingSpec.NotH(h0)   => hasFilterH(h0)
+    case _                     => false
   }
 
   /** Filters the serve-time FilterH evaluator covers: anything over the
@@ -270,11 +276,10 @@ object SegmentResultCache {
 
   /** All output names (dimensions + aggregations + post-aggregations)
     * pairwise distinct. A collision makes the whole-query plan raise a
-    * duplicate/ambiguous-column error, while the merge's row map would
-    * silently drop one of the colliding fields ([[PartialMerge]] keys
-    * values by name) — cache state must not change a query's outcome, so
-    * colliding shapes fall back and raise the planner's own error
-    * (r14 advice). */
+    * duplicate/ambiguous-column error, and the merge's fragment rows (JSON
+    * objects keyed by name) would silently drop one of the colliding
+    * fields — cache state must not change a query's outcome, so colliding
+    * shapes fall back and raise the planner's own error (r14 advice). */
   private def distinctOutputNames(dims: Seq[String], aggs: Seq[Aggregator],
       postAggs: Seq[PostAggregator]): Boolean = {
     val names = dims ++ aggs.map(_.name) ++ postAggs.map(_.name)
@@ -331,8 +336,8 @@ object SegmentResultCache {
     // evaluations over the merged rows — Druid's broker applies them AFTER
     // merging partials (reference `query/query-internal-procedure.md:
     // 128-142`) — so the templates STRIP them and [[PartialMerge]] applies
-    // them at serve time; only `FilterH` having and context maxResults
-    // (a stream-truncation resource cap) still fall back. The sketchPartials
+    // them at serve time; only context maxResults (a stream-truncation
+    // resource cap) still falls back. The sketchPartials
     // context flag makes hyperUnique/cardinality compile to mergeable
     // register bytes instead of finalized estimates.
     val partialCtx = "graft.sketchPartials" -> "true"

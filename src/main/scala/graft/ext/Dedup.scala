@@ -339,7 +339,10 @@ object Dedup {
     *    on PREEMPTIBLE clusters a lost executor's blocks recompute instead
     *    of failing the query. Tradeoff: entries stay registered with the
     *    cache manager until unpersisted/GC'd, so a long-lived server should
-    *    clear them (`spark.catalog.clearCache()`) between pipelines. */
+    *    clear them (`spark.catalog.clearCache()`) between pipelines.
+    *
+    * A local frame (a `LocalRelation`, rows already on the driver) is
+    * returned as it is in either mode: no job, no stored blocks. */
   def materialize(df: DataFrame): DataFrame =
     materializeCounted(df)._1
 
@@ -367,9 +370,13 @@ object Dedup {
     * explodes exactly `bands` rows per signature) can compute their own
     * cardinality without any job. */
   private[ext] def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val pair = df.sparkSession.conf
-      .getOption("spark.graft.materialize.storage") match {
-      case Some("persist") =>
+    val storage = df.sparkSession.conf.getOption("spark.graft.materialize.storage")
+    val pair = df.queryExecution.logical match {
+      // rows already on the driver (the minhash driver finish's pairs):
+      // nothing to store, and their count needs no job
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        (df, l.data.size.toLong)
+      case _ if storage.contains("persist") =>
         val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         (p, p.count()) // eager: populate before the self-join fans out
       case _ =>

@@ -306,7 +306,10 @@ object QueryPlanner {
       StructType(Seq(StructField(TimeColumn, TimestampType, nullable = false)))))
   }
 
-  private def zeroFillCol(a: Aggregator): Column = a match {
+  /** An aggregator's value on the zero-filled spine (sums, counts and
+    * sketch estimates coalesce to a typed zero; min/max/first/last stay
+    * null). */
+  private[graft] def zeroFillCol(a: Aggregator): Column = a match {
     case Aggregator.Count(n) => coalesce(col(n), lit(0L)).as(n)
     case Aggregator.Sum(n, _, "long") => coalesce(col(n), lit(0L)).as(n)
     case Aggregator.Sum(n, _, "float") => coalesce(col(n), lit(0.0f)).as(n)
@@ -382,10 +385,7 @@ object QueryPlanner {
       case Some(LimitSpec(cols, limitOpt)) =>
         val ordered =
           if (cols.isEmpty) havinged
-          else havinged.orderBy(cols.map { c =>
-            val oc = Compilers.orderingCol(c.dimensionOrder, col(c.dimension))
-            if (c.direction.startsWith("desc")) oc.desc else oc.asc
-          }: _*)
+          else havinged.orderBy(limitOrder(cols): _*)
         limitOpt.map(ordered.limit).getOrElse(ordered)
       case None => havinged
     }
@@ -427,7 +427,16 @@ object QueryPlanner {
   /** The spec itself (filters applied) but without the final alias mattering. */
   private def stripOutput(spec: DimensionSpec): DimensionSpec = spec
 
-  private def havingCol(h: HavingSpec, schema: StructType,
+  /** A limitSpec's sort orders (SURVEY §2.7). */
+  private[graft] def limitOrder(cols: Seq[OrderByColumnSpec]): Seq[Column] =
+    cols.map { c =>
+      val oc = Compilers.orderingCol(c.dimensionOrder, col(c.dimension))
+      if (c.direction.startsWith("desc")) oc.desc else oc.asc
+    }
+
+  /** A having spec as a predicate over the aggregated row; `schema` types
+    * the literals of a FilterH filter. */
+  private[graft] def havingCol(h: HavingSpec, schema: StructType,
       spark: SparkSession, catalog: Catalog): Column = {
     import HavingSpec._
     h match {
@@ -492,10 +501,9 @@ object QueryPlanner {
         // local rank per (pseudo-segment, bucket) over the partial metric —
         // post-aggs computed on partials for ranking only, like Druid's
         // per-segment pass
-        val (k, desc) = topNOrder(q.metric, dimOut)
-        val oc = if (desc) k.desc else k.asc
         val segParts = col("__seg") +: bucketOpt.map(_ => col(TimeColumn)).toSeq
-        val segW = Window.partitionBy(segParts: _*).orderBy(oc, col(dimOut).asc)
+        val segW = Window.partitionBy(segParts: _*)
+          .orderBy(topNRanking(q.metric, dimOut): _*)
         val kept = withPostAggs(partial, q.postAggregations)
           .withColumn("__segrank", row_number().over(segW))
           .where(col("__segrank") <= perSegLimit)
@@ -524,24 +532,29 @@ object QueryPlanner {
       }
     val posted = withPostAggs(agged, q.postAggregations)
 
-    val (orderKey, descending) = topNOrder(q.metric, dimOut)
-    val orderCol = if (descending) orderKey.desc else orderKey.asc
-    val tiebreak = col(dimOut).asc
+    val ranking = topNRanking(q.metric, dimOut)
 
     bucketOpt match {
       case None =>
         // granularity 'all' → global top-K: TakeOrderedAndProject, no window
         val start = q.intervals.headOption.map(_.start).getOrElse(Instant.EPOCH)
-        posted.orderBy(orderCol, tiebreak)
+        posted.orderBy(ranking: _*)
           .limit(q.threshold)
           .withColumn(TimeColumn, lit(Timestamp.from(start)))
       case Some(_) =>
-        val w = Window.partitionBy(col(TimeColumn)).orderBy(orderCol, tiebreak)
+        val w = Window.partitionBy(col(TimeColumn)).orderBy(ranking: _*)
         posted.withColumn("__rank", row_number().over(w))
           .where(col("__rank") <= q.threshold)
           .drop("__rank")
-          .orderBy(col(TimeColumn).asc, orderCol, tiebreak)
+          .orderBy(col(TimeColumn).asc +: ranking: _*)
     }
+  }
+
+  /** A topN bucket's rank order: the metric spec's key, then the dimension
+    * ascending — total within a bucket. */
+  private[graft] def topNRanking(m: TopNMetricSpec, dimOut: String): Seq[Column] = {
+    val (k, desc) = topNOrder(m, dimOut)
+    Seq(if (desc) k.desc else k.asc, col(dimOut).asc)
   }
 
   /** (ranking key, descending?) for a topN metric spec. */

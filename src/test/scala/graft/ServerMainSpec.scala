@@ -228,4 +228,22 @@ class ServerMainSpec extends SparkTestBase {
         s"$name( call sites outside commit: ${calls.map(_ + 1).mkString(", ")}")
     }
   }
+
+  test("the partial merge evaluates the planner's expressions, not mirrors") {
+    // post-aggregator, having and ranking semantics live only in Compilers
+    // and QueryPlanner: a case over their specs, or a hand-built cast, in
+    // PartialMerge is a second definition that can drift from the planner
+    val mirror = ("case\\s+(\\w+\\s*:\\s*)?(PostAggregator|HavingSpec|TopNMetricSpec)\\." +
+      "|import\\s+.*\\b(PostAggregator|HavingSpec|TopNMetricSpec)\\._" +
+      "|\\bCast\\(").r
+    val lines = Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/engine/PartialMerge.scala")).asScala
+    val offenders = for {
+      (line, i) <- lines.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if mirror.findFirstIn(code).isDefined
+    } yield s"PartialMerge.scala:${i + 1}: $code"
+    assert(offenders.isEmpty, s"hand mirrors in PartialMerge: ${offenders.mkString("; ")}")
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.ext.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -187,6 +188,35 @@ class SmallShardFinishSpec extends SparkTestBase {
     }
   }
 
+  /** `body`'s result and the Spark jobs started while it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("materialize keeps a local frame on the driver: with dupClusters, no job") {
+    // built as the minhash driver finish builds its pairs
+    val pairs = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, 2L, 0.9), Row(2L, 3L, 0.8), Row(7L, 8L, 1.0)),
+      StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType),
+        StructField("est_jaccard", DoubleType))))
+    assert(pairs.isLocal)
+    val (labels, jobs) = jobsOf(
+      Dedup.dupClusters(Dedup.materialize(pairs)).as[(Long, Long)].collect())
+    assert(jobs == 0, s"materialize + dupClusters ran $jobs jobs on a local frame")
+    assert(labels.toSet == Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L)))
+  }
+
   test("after the signature checkpoint, pairs run one Spark job and clusters none") {
     val dir = java.nio.file.Files.createTempDirectory("graft-small-shard").toString
     val docs = (0 until 500).map { i =>
@@ -196,26 +226,11 @@ class SmallShardFinishSpec extends SparkTestBase {
     docs.toDF("id", "text").write.mode("overwrite").parquet(dir)
     val sigs = Dedup.materialize(spark.read.parquet(dir).select(col("id"),
       Dedup.minhashSignature(col("text"), 64, 3).as("sig")))
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    def jobsOf[T](body: => T): (T, Int) = {
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      jobs = 0
-      val out = body
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      (out, jobs)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (pairs, pairJobs) = jobsOf(Dedup.minhashDupPairsFromSigs(sigs, "id", "sig",
-        bands = 16, threshold = 0.7))
-      assert(pairJobs == 1, s"pair step ran $pairJobs jobs, want 1 (the collect)")
-      val (labels, clusterJobs) = jobsOf(Dedup.dupClusters(pairs).collect())
-      assert(clusterJobs == 0, s"dupClusters ran $clusterJobs jobs on a local pair frame")
-      assert(labels.length >= 100, s"expected the planted families: ${labels.length}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (pairs, pairJobs) = jobsOf(Dedup.minhashDupPairsFromSigs(sigs, "id", "sig",
+      bands = 16, threshold = 0.7))
+    assert(pairJobs == 1, s"pair step ran $pairJobs jobs, want 1 (the collect)")
+    val (labels, clusterJobs) = jobsOf(Dedup.dupClusters(pairs).collect())
+    assert(clusterJobs == 0, s"dupClusters ran $clusterJobs jobs on a local pair frame")
+    assert(labels.length >= 100, s"expected the planted families: ${labels.length}")
   }
 }
