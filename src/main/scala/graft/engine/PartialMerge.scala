@@ -3,6 +3,7 @@ package graft.engine
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.expr.Compilers
 import graft.expr.Compilers.TimeColumn
+import graft.functions.Hllpp
 import graft.model._
 import graft.plan.QueryPlanner
 import graft.sources.Catalog
@@ -264,33 +265,6 @@ object PartialMerge {
       })
   }
 
-  /** hyperUnique/cardinality day values are self-describing register words
-    * (`Compilers.aggCol(sketchPartial = true)`: `hllpp:` = Spark's HLL++
-    * words at the planner's precision, `hll11:` = the engine's p=11 sketch
-    * of pre-built BinaryType columns). Register union is an elementwise
-    * max, so the merged estimate is IDENTICAL to the whole plan's; no
-    * words finalize to 0, as the planner's estimate over no rows does. */
-  private def mergeSketch(acc: AnyRef, text: String): AnyRef = {
-    // the MIME decoder ignores line separators: either base64 chunking works
-    val words = java.util.Base64.getMimeDecoder.decode(text.substring(6))
-    if (text.startsWith("hllpp:")) {
-      val a = if (acc == null) graft.functions.Hllpp.newBuffer()
-        else acc.asInstanceOf[SpecificInternalRow]
-      graft.functions.Hllpp.mergeInto(a, words); a
-    } else if (text.startsWith("hll11:")) {
-      val a = if (acc == null) graft.functions.Hll.emptySketch
-        else acc.asInstanceOf[Array[Byte]]
-      graft.functions.Hll.merge(a, words); a
-    } else throw new IllegalStateException(
-      s"not a sketch partial value: ${text.take(16)}")
-  }
-
-  private def sketchEstimate(acc: AnyRef): Long = acc match {
-    case null                  => 0L
-    case r: SpecificInternalRow => graft.functions.Hllpp.estimate(r)
-    case b: Array[Byte]        => graft.functions.Hll.estimate(b)
-  }
-
   // -- the post-merge program ------------------------------------------------
 
   private def compileFinish(q: Query, mergedAttrs: Seq[Attribute],
@@ -360,7 +334,7 @@ object PartialMerge {
   /** One (bucket, dims) group: its dims (typed), the merge buffer and the
     * sketch accumulators. `dimsText` is the deterministic pre-order. */
   private final class Group(val bucket: Long, val dims: Array[Any],
-      val dimsText: String, val buffer: InternalRow, val sketches: Array[AnyRef])
+      val dimsText: String, val buffer: InternalRow, val sketches: Array[SpecificInternalRow])
 
   /** A JSON dim value as the Catalyst value of its kind (fractional numbers
     * read back as doubles, as Jackson parses them). */
@@ -421,7 +395,7 @@ object PartialMerge {
     val day = new GenericInternalRow(1 + mp.dayNames.length)
     def newGroup(bucket: Long, dimVals: Array[Any], text: String) =
       new Group(bucket, dimVals, text, mp.initial.copy(),
-        new Array[AnyRef](mp.sketchNames.length))
+        Array.fill(mp.sketchNames.length)(Hllpp.newBuffer()))
     var lastTs: String = null
     var lastDay = 0L
     var lastBucket = 0L
@@ -479,7 +453,7 @@ object PartialMerge {
         while (j < mp.sketchNames.length) {
           val n = ev.get(mp.sketchNames(j))
           if (n != null && !n.isNull)
-            grp.sketches(j) = mergeSketch(grp.sketches(j), n.asText())
+            Hllpp.mergePartial(grp.sketches(j), n.asText())
           j += 1
         }
         r += 1
@@ -510,7 +484,7 @@ object PartialMerge {
       var j = 0; var m = 0; var s = 0
       while (j < aggs.size) {
         vals(1 + dims.size + j) =
-          if (mp.sketch(j)) { s += 1; sketchEstimate(grp.sketches(s - 1)) }
+          if (mp.sketch(j)) { s += 1; Hllpp.estimate(grp.sketches(s - 1)) }
           else { m += 1; finals.get(m - 1, mp.aggTypes(j)) }
         j += 1
       }

@@ -1,6 +1,9 @@
 package graft.expr
 
 import graft.model._
+import graft.functions.Hllpp
+import graft.functions.HllppFunctions.{hll_sketch_build, hll_sketch_estimate,
+  hll_sketch_merge, hll_sketch_partial}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -579,21 +582,27 @@ object Compilers {
 
   /** Compile an aggregator to an aggregate Column aliased to its name.
     * `rollupCount`: when reading rolled-up segments, `count` must become
-    * `sum(<storedCountMetric>)` (SURVEY §7.3). */
+    * `sum(<storedCountMetric>)` (SURVEY §7.3). `sketchPartial`: emit the
+    * MERGEABLE sketch (`hll_sketch_partial` text) instead of the finalized
+    * estimate — the day-partial fragment form for the serve-time partial
+    * merge (Druid's broker merges per-segment sketch partials the same way,
+    * reference `arch/druid-arch.md:38-40`). Raw and pre-built columns both
+    * yield `Hllpp` words, so the driver merge needs no schema. */
   def aggCol(a: Aggregator, schema: StructType, rollupCount: Option[String] = None,
       sketchPartial: Boolean = false): Column = {
     import Aggregator._
 
-    // sketchPartial: emit the MERGEABLE sketch (self-describing
-    // `<algo>:<base64>` string) instead of the finalized estimate — the
-    // day-partial fragment form for the serve-time partial merge (Druid's
-    // broker merges per-segment sketch partials the same way, reference
-    // `arch/druid-arch.md:38-40`). The prefix names the register layout so
-    // the driver merge needs no schema: `hllpp:` = Spark HLL++ words at
-    // rsd 0.023 (the raw-column compile), `hll11:` = the engine's own p=11
-    // sketch (the pre-built BinaryType column compile).
-    def sketchStr(prefix: String, sketch: Column): Column =
-      concat(lit(prefix), base64(sketch))
+    // raw input (a raw hyperUnique column, every cardinality) in a single
+    // query: the built-in HLL++ (codegen'd, partial-aggregated, no per-row
+    // sketch object churn) at the sketch's rsd. Spark maps rsd 0.023 to
+    // p = 12 registers, and its bias correction holds the documented ±5%
+    // band in the n ≈ register-count regime where the DEFAULT rsd 0.05
+    // missed it on every bucket (measured at both verify SFs). Its words are
+    // the ones `hll_sketch_build` stores, so this estimate equals a rollup
+    // column's built from the same rows.
+    def rawDistinct(in: Column): Column =
+      if (sketchPartial) hll_sketch_partial(hll_sketch_build(in))
+      else approx_count_distinct(in, Hllpp.Rsd)
 
     def input(field: String, typ: String): Column = {
       val c = col(field)
@@ -635,38 +644,18 @@ object Compilers {
         val in = pred.map(p => when(p, col(f))).getOrElse(col(f))
         fieldType(schema, f) match {
           case Some(BinaryType) =>
-            if (sketchPartial)
-              sketchStr("hll11:", graft.functions.HllFunctions.hll_sketch_merge(in))
-            else
-            // pre-built mergeable sketch column (rollup segment):
-            // merge sketches, then finalize (Druid hyperUnique-on-metric)
-            graft.functions.HllFunctions.hll_sketch_estimate(
-              graft.functions.HllFunctions.hll_sketch_merge(in))
-          case _ if sketchPartial =>
-            sketchStr("hllpp:", graft.functions.HllppFunctions.hllpp_sketch_words(in))
-          case _ =>
-            // raw column in a single query: the built-in HLL++ (codegen'd,
-            // partial-aggregated, no per-row sketch object churn) at rsd
-            // 0.023 — the engine's p=11 sketch precision (1.04/sqrt(2^11)).
-            // Spark maps that rsd to p = ceil(2·log2(1.106/rsd)) = 12
-            // registers (slightly MORE accurate than the sketch it
-            // replaces), and its bias correction holds the documented ±5%
-            // band in the n ≈ register-count regime where the DEFAULT rsd
-            // 0.05 missed it on every bucket (measured at both verify SFs). The
-            // engine's own sketch (HllSketchAgg) remains the path for
-            // sketch-typed columns above and for rollup segment storage,
-            // where MERGEABILITY across segments is the point — in a
-            // one-shot query it buys nothing (round-9 verdict: 3.6x cost
-            // drift vs this built-in).
-            approx_count_distinct(in, 0.023)
+            // pre-built words column (rollup segment): merge the stored
+            // words, then finalize (Druid hyperUnique-on-metric)
+            val words = hll_sketch_merge(in)
+            if (sketchPartial) hll_sketch_partial(words) else hll_sketch_estimate(words)
+          case _ => rawDistinct(in)
         }
       case Cardinality(_, fields, byRow) =>
         val base =
           if (fields.size == 1) col(fields.head)
           else if (byRow) {
-            // canonical delimited encoding, not struct(): the sketch hashes
-            // non-primitive inputs via toString, and InternalRow renderings
-            // differ between Unsafe/Generic rows. Each non-null field is
+            // canonical delimited encoding: one string per tuple, hashed
+            // like any string column. Each non-null field is
             // LENGTH-PREFIXED ("<len>:<value>") so the encoding is
             // injective even when a value contains the \u0001 joiner or
             // equals the \u0000 null marker: ("a\u0001b") encodes
@@ -681,13 +670,8 @@ object Compilers {
             concat_ws("\u0001", encoded: _*)
           }
           else concat_ws("", fields.map(c => col(c).cast(StringType)): _*)
-        val in = pred.map(p => when(p, base)).getOrElse(base)
-        // raw-input cardinality: same built-in HLL++ routing (and rsd) as
-        // raw-column hyperUnique above — cardinality never reads sketch
-        // columns, so there is no mergeable-sketch case to preserve here
-        if (sketchPartial)
-          sketchStr("hllpp:", graft.functions.HllppFunctions.hllpp_sketch_words(in))
-        else approx_count_distinct(in, 0.023)
+        // cardinality never reads sketch columns: always raw input
+        rawDistinct(pred.map(p => when(p, base)).getOrElse(base))
       case Filtered(f, agg) =>
         val p = filterCol(f, schema)
         inner(agg, pred.map(_ && p).orElse(Some(p)))

@@ -3,9 +3,11 @@ package graft.store
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.expr.Compilers
+import graft.functions.HllppFunctions
 import graft.model.{Aggregator, Granularity}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructType}
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -267,6 +269,17 @@ class SegmentStore(val root: String) {
     finally s.close()
   }
 
+  /** A rollup metric as stored by `write` and `mergeChunk`: `hyperUnique`
+    * stays mergeable `Hllpp` words — built from a raw field, merged from a
+    * stored words column — and every other aggregator compiles as a query's. */
+  private def storedMetricCol(a: Aggregator, schema: StructType): Column = a match {
+    case Aggregator.HyperUnique(name, field) =>
+      val stored = schema.find(_.name == field).exists(_.dataType == BinaryType)
+      (if (stored) HllppFunctions.hll_sketch_merge(col(field))
+       else HllppFunctions.hll_sketch_build(col(field))).as(name)
+    case _ => Compilers.aggCol(a, schema)
+  }
+
   /** Ingest `df` (must carry `__time`) into day-chunked segments, optionally
     * rolled up to `queryGranularity` over `dims` with `metricAggs`.
     * Overwrites any existing version of the touched chunks.
@@ -288,12 +301,8 @@ class SegmentStore(val root: String) {
       case Some((qGran, dims, metricAggs)) =>
         val bucket = Compilers.granularityCol(qGran, col("__time"))
           .getOrElse(col("__time"))
-        val aggs = metricAggs.map {
-          // hyperUnique at ingest = build a mergeable sketch column
-          case Aggregator.HyperUnique(name, field) =>
-            graft.functions.HllFunctions.hll_sketch_build(col(field)).as(name)
-          case a => Compilers.aggCol(a, df.schema)
-        } :+ count(lit(1)).as("__rollup_count")
+        val aggs = metricAggs.map(storedMetricCol(_, df.schema)) :+
+          count(lit(1)).as("__rollup_count")
         df.groupBy((bucket.as("__time") +: dims.map(col)): _*)
           .agg(aggs.head, aggs.tail: _*)
       case None => df
@@ -465,7 +474,7 @@ class SegmentStore(val root: String) {
     rewriteChunk(ds, chunk) { seg =>
       val df = spark.read.parquet(seg.path)
       val countCol = seg.rollupCountCol.getOrElse("__rollup_count")
-      val aggs = metricAggs.map(a => Compilers.aggCol(a, df.schema)) :+
+      val aggs = metricAggs.map(storedMetricCol(_, df.schema)) :+
         sum(col(countCol)).cast("long").as(countCol)
       (df.groupBy((col("__time") +: dims.map(col)): _*).agg(aggs.head, aggs.tail: _*),
         Map.empty, Some(countCol))

@@ -1160,8 +1160,8 @@ class EngineSpec extends SparkTestBase {
     assert(seg.metrics.last.segmentMisses == 0 &&
       seg.metrics.last.segmentHits == 9, seg.metrics.last.toString)
 
-    // pre-built BinaryType sketch column (rollup segment) → the engine's
-    // own p=11 registers (hll11:)
+    // pre-built BinaryType sketch column (rollup segment) → its stored
+    // HLL++ words, merged (hllpp:)
     val rstore = new SegmentStore(
       Files.createTempDirectory("graft-segsketchr").toString)
     val rrows = Seq(
@@ -1183,7 +1183,7 @@ class EngineSpec extends SparkTestBase {
            |"aggregations":[{"type":"hyperUnique","name":"uq","fieldName":"uq"},
            |{"type":"count","name":"cnt"}]}""".stripMargin
       val got = rseg.executeJson(q)
-      assert(got == rwhole.executeJson(q), s"hll11 partial diverged: $q\n$got")
+      assert(got == rwhole.executeJson(q), s"rollup-sketch partial diverged: $q\n$got")
       assert(rseg.metrics.last.segmentMisses + rseg.metrics.last.segmentHits > 0,
         s"must take the partial path: $q")
     }

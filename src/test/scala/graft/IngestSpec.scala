@@ -361,6 +361,36 @@ class IngestSpec extends SparkTestBase {
     assert(click.getAs[Long]("__rollup_count") == 3L)
   }
 
+  test("merge task keeps a rollup's hyperUnique words mergeable") {
+    val store = freshStore()
+    // two rollup shards of one chunk, with overlapping users
+    def shard(from: Int): org.apache.spark.sql.DataFrame = (from until from + 600).map { i =>
+      (ts(f"2024-05-01T${i % 24}%02d:00:00Z"), s"type_${i % 3}", (i % 500).toLong)
+    }.toDF("__time", "event_type", "user_id")
+    val rollup = Some((Granularity.Simple("hour"), Seq("event_type"),
+      Seq(Aggregator.HyperUnique("uu", "user_id"))))
+    store.write(shard(0), "evu", rollup = rollup)
+    store.write(shard(300), "evu_b", rollup = rollup)
+    store.appendBatch(store.read(spark, "evu_b"), "evu")
+    val engine = new Engine(spark, new SegmentCatalog(store))
+    val q =
+      """{"queryType":"timeseries","dataSource":"evu",
+        |"intervals":["2024-05-01T00:00:00Z/2024-05-02T00:00:00Z"],
+        |"granularity":"all","context":{"useCache":"false","populateCache":"false"},
+        |"aggregations":[{"type":"hyperUnique","name":"uu","fieldName":"uu"},
+        |  {"type":"count","name":"cnt"}]}""".stripMargin
+    val before = engine.executeJson(q)
+    val rowsBefore = store.read(spark, "evu").count()
+
+    store.mergeChunk(spark, "evu", "2024-05-01", Seq("event_type"),
+      Seq(Aggregator.HyperUnique("uu", "uu")))
+    val merged = store.read(spark, "evu")
+    assert(merged.schema("uu").dataType == org.apache.spark.sql.types.BinaryType)
+    assert(merged.count() < rowsBefore) // the shards' shared (hour, type) rows merged
+    assert(engine.executeJson(q) == before)
+    assert(before.contains("\"cnt\":1200"), before)
+  }
+
   test("convert_segment task rewrites a chunk with new writer options") {
     val store = freshStore()
     store.write(raw, "ev")

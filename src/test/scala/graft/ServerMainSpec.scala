@@ -246,4 +246,30 @@ class ServerMainSpec extends SparkTestBase {
     } yield s"PartialMerge.scala:${i + 1}: $code"
     assert(offenders.isEmpty, s"hand mirrors in PartialMerge: ${offenders.mkString("; ")}")
   }
+
+  test("one cardinality sketch: no second HLL layout under src/main") {
+    // rollup storage, the hll_sketch_* functions and cached partials share
+    // Hllpp's words; a second register layout is where a rollup's answer
+    // and the raw rows' approx_count_distinct drift apart
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val texts = files.map(f => root.relativize(f).toString -> new String(Files.readAllBytes(f), "UTF-8"))
+    val legacy = for {
+      (f, text) <- texts
+      (line, i) <- text.linesIterator.zipWithIndex
+      if line.contains("hll11") || line.contains("object Hll ")
+    } yield s"$f:${i + 1}"
+    assert(legacy.isEmpty, s"the p = 11 sketch is back: ${legacy.mkString(", ")}")
+    val hll = "(?i)hyperloglog|\\bhll|numberOfLeadingZeros".r
+    val aggregates = for {
+      (f, text) <- texts if hll.findFirstIn(text).isDefined
+      m <- "extends\\s+TypedImperativeAggregate".r.findAllMatchIn(text)
+    } yield f
+    assert(aggregates == List("graft/functions/HllppSketch.scala"),
+      s"HLL-building TypedImperativeAggregates: ${aggregates.mkString(", ")}")
+  }
 }

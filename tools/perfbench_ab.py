@@ -23,6 +23,10 @@ verdict:
                run reads better than every parent run;
   same         none of the above: no worse than the bound allows.
 
+The first that holds is the verdict. The `unresolved=` flag printed beside
+it is the spread test alone, so a noisy `regression` still shows it: more
+pairs may move that median back inside the bound.
+
 `--out FILE` also writes every run's result object as JSON lines.
 """
 
@@ -76,17 +80,18 @@ def verdict(metric, parent, change):
     cspread = (cq3 - cq1) / cmed if cmed else float("inf")
     worse = ((cmed - pmed) if lower else (pmed - cmed)) / pmed if pmed else 0.0
     bound = metric["bound"]
+    unresolved = max(pspread, cspread) > bound and not all(
+        better(c, p) for c in change for p in parent)
     if len(parent) >= 10 and wins * 10 >= 9 * len(parent) and better(cmed, pmed) \
             and abs(cmed - pmed) > pq3 - pq1:
         v = "gain"
     elif worse > bound:
         v = "regression"
-    elif max(pspread, cspread) > bound and not all(
-            better(c, p) for c in change for p in parent):
+    elif unresolved:
         v = "unresolved"
     else:
         v = "same"
-    return (pmed, pq1, pq3, cmed, cq1, cq3, wins, pspread, cspread, worse), v
+    return (pmed, pq1, pq3, cmed, cq1, cq3, wins, pspread, cspread, worse, unresolved), v
 
 
 def main():
@@ -141,7 +146,7 @@ def main():
         name = m["name"]
         parent = [r["metrics"][name]["value"] for _, r in results["parent"]]
         change = [r["metrics"][name]["value"] for _, r in results["change"]]
-        (pmed, pq1, pq3, cmed, cq1, cq3, wins, pspread, cspread, worse), v = \
+        (pmed, pq1, pq3, cmed, cq1, cq3, wins, pspread, cspread, worse, unresolved), v = \
             verdict(m, parent, change)
         print(f"\n  {name} ({m['unit']}, {m['better']} is better, bound {m['bound']})")
         for (seed, _), p, c in zip(results["parent"], parent, change):
@@ -149,7 +154,7 @@ def main():
         print(f"    parent median {pmed:.6g} (q1 {pq1:.6g}, q3 {pq3:.6g}) spread {pspread:.3f}")
         print(f"    change median {cmed:.6g} (q1 {cq1:.6g}, q3 {cq3:.6g}) spread {cspread:.3f}")
         print(f"    change wins {wins}/{n}; median change {-worse:+.1%} in the better "
-              f"direction; unresolved={v == 'unresolved'}; verdict {v}")
+              f"direction; verdict {v}; unresolved={unresolved}")
 
 
 if __name__ == "__main__":
