@@ -2,8 +2,7 @@ package graft.expr
 
 import graft.model._
 import graft.functions.Hllpp
-import graft.functions.HllppFunctions.{hll_sketch_build, hll_sketch_estimate,
-  hll_sketch_merge, hll_sketch_partial}
+import graft.functions.HllppFunctions.{hllpp_build, hllpp_estimate, hllpp_merge, hllpp_partial}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,6 +49,21 @@ object Compilers {
       Some(timestamp_millis(floor((unix_millis(t) - o).cast(DoubleType) / ms)
         .cast(LongType).*(ms).+(o)))
     case Granularity.Period(p, tz, origin) => Some(periodTrunc(p, tz, origin, t))
+  }
+
+  /** `(length, origin)` millis when `granularityCol(g, t)` is `origin +
+    * k·length`, a tumbling window's start: `Duration`, and in a UTC session
+    * fixed simple units and UTC periods. None for `all`, `none`, zoned
+    * periods, months, quarters, years and weeks (Druid weeks start on
+    * Monday, windows on Thursday 1970-01-01). */
+  def fixedBuckets(g: Granularity, utcSession: Boolean): Option[(Long, Long)] = g match {
+    case Granularity.Duration(ms, origin) => Some((ms, origin.fold(0L)(_.toEpochMilli)))
+    case Granularity.Simple(u) if utcSession => fixedUnitMillis.get(u).map((_, 0L))
+    case Granularity.Period(p, tz, origin) if utcSession &&
+        tz.forall(ZoneId.of(_).normalized == java.time.ZoneOffset.UTC) &&
+        !p.takeWhile(_ != 'T').exists("WMY".contains(_)) =>
+      Some((periodMillis(p), origin.fold(0L)(_.toEpochMilli)))
+    case _ => None
   }
 
   private def simpleTrunc(unit: String, t: Column): Column = unit match {
@@ -583,7 +597,7 @@ object Compilers {
   /** Compile an aggregator to an aggregate Column aliased to its name.
     * `rollupCount`: when reading rolled-up segments, `count` must become
     * `sum(<storedCountMetric>)` (SURVEY §7.3). `sketchPartial`: emit the
-    * MERGEABLE sketch (`hll_sketch_partial` text) instead of the finalized
+    * MERGEABLE sketch (`hllpp_partial` text) instead of the finalized
     * estimate — the day-partial fragment form for the serve-time partial
     * merge (Druid's broker merges per-segment sketch partials the same way,
     * reference `arch/druid-arch.md:38-40`). Raw and pre-built columns both
@@ -598,10 +612,10 @@ object Compilers {
     // p = 12 registers, and its bias correction holds the documented ±5%
     // band in the n ≈ register-count regime where the DEFAULT rsd 0.05
     // missed it on every bucket (measured at both verify SFs). Its words are
-    // the ones `hll_sketch_build` stores, so this estimate equals a rollup
+    // the ones `hllpp_build` stores, so this estimate equals a rollup
     // column's built from the same rows.
     def rawDistinct(in: Column): Column =
-      if (sketchPartial) hll_sketch_partial(hll_sketch_build(in))
+      if (sketchPartial) hllpp_partial(hllpp_build(in))
       else approx_count_distinct(in, Hllpp.Rsd)
 
     def input(field: String, typ: String): Column = {
@@ -646,8 +660,8 @@ object Compilers {
           case Some(BinaryType) =>
             // pre-built words column (rollup segment): merge the stored
             // words, then finalize (Druid hyperUnique-on-metric)
-            val words = hll_sketch_merge(in)
-            if (sketchPartial) hll_sketch_partial(words) else hll_sketch_estimate(words)
+            val words = hllpp_merge(in)
+            if (sketchPartial) hllpp_partial(words) else hllpp_estimate(words)
           case _ => rawDistinct(in)
         }
       case Cardinality(_, fields, byRow) =>

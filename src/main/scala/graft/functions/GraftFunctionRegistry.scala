@@ -10,13 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * {{{
   *   SELECT cosine_similarity(a.embedding, b.embedding) FROM ...
-  *   SELECT hll_sketch_estimate(hll_sketch_merge(sk)) FROM rollup_table
+  *   SELECT hllpp_estimate(hllpp_merge(sk)) FROM rollup_table
   * }}}
   *
-  * The `hll_sketch_*` functions build, merge and finalize the engine's one
+  * The `hllpp_*` functions build, merge and finalize the engine's one
   * cardinality sketch (`Hllpp` words, the form rollup segments store): an
   * estimate over stored words equals `approx_count_distinct(c, 0.023)`
-  * over the raw rows they were built from.
+  * over the raw rows they were built from. No name here is one of Spark's
+  * built-ins (its DataSketches `hll_sketch_*` stay reachable).
   *
   * Also registers the reference system's SQL time functions (TIME_FLOOR /
   * TIME_SHIFT / TIME_EXTRACT / TIME_PARSE / TIME_FORMAT /
@@ -131,11 +132,11 @@ object GraftFunctionRegistry {
       es => DequantizeInt8(es(0))),
     ("vector_max_abs_diff", "max elementwise |a[i]-b[i]| of two arrays",
       es => VectorMaxAbsDiff(es(0), es(1))),
-    ("hll_sketch_build", "aggregate values into mergeable HLL++ words",
+    ("hllpp_build", "aggregate values into mergeable HLL++ words",
       es => HllppSketchAgg(es.head)),
-    ("hll_sketch_merge", "merge stored HLL++ words",
+    ("hllpp_merge", "merge stored HLL++ words",
       es => HllppSketchAgg(es.head, mergeWords = true)),
-    ("hll_sketch_estimate", "finalize HLL++ words to the approx_count_distinct estimate",
+    ("hllpp_estimate", "finalize HLL++ words to the approx_count_distinct estimate",
       es => HllppEstimate(es.head)),
     // --- reference-system SQL time functions -----------------------------
     ("time_floor", "floor a timestamp to a period (origin, timezone)", es => {

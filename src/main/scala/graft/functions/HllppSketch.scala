@@ -63,7 +63,7 @@ object Hllpp {
     helper.merge(acc, fromBytes(bytes), 0, 0)
 
   /** A cached sketch partial carries its words as `hllpp:<base64>` text
-    * (`HllppFunctions.hll_sketch_partial`). */
+    * (`HllppFunctions.hllpp_partial`). */
   val PartialPrefix = "hllpp:"
 
   /** Merge a cached partial's text into `acc` (the serve-time merge). */
@@ -79,10 +79,10 @@ object Hllpp {
 }
 
 /** Aggregate into HLL++ register words (binary): from raw values
-  * (`hll_sketch_build`, the same update path as
+  * (`hllpp_build`, the same update path as
   * `approx_count_distinct(child, Hllpp.Rsd)` — only the finalization
   * differs), or from stored words (`mergeWords = true`,
-  * `hll_sketch_merge` over a rollup column). */
+  * `hllpp_merge` over a rollup column). */
 case class HllppSketchAgg(child: Expression, mergeWords: Boolean = false,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[SpecificInternalRow]
@@ -96,8 +96,8 @@ case class HllppSketchAgg(child: Expression, mergeWords: Boolean = false,
     else child.dataType match {
       case BinaryType => TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(
-        s"hll_sketch_merge requires binary sketch input, got ${t.simpleString} " +
-          "(use hll_sketch_build to aggregate raw values)")
+        s"hllpp_merge requires binary sketch input, got ${t.simpleString} " +
+          "(use hllpp_build to aggregate raw values)")
     }
 
   override def createAggregationBuffer(): SpecificInternalRow = Hllpp.newBuffer()
@@ -133,7 +133,7 @@ case class HllppSketchAgg(child: Expression, mergeWords: Boolean = false,
     copy(child = c)
 
   override def prettyName: String =
-    if (mergeWords) "hll_sketch_merge" else "hll_sketch_build"
+    if (mergeWords) "hllpp_merge" else "hllpp_build"
 }
 
 /** Scalar: finalize HLL++ words to the `approx_count_distinct` estimate. */
@@ -145,13 +145,13 @@ case class HllppEstimate(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"hll_sketch_estimate requires binary sketch input, got ${t.simpleString}")
+      s"hllpp_estimate requires binary sketch input, got ${t.simpleString}")
   }
 
   override def nullSafeEval(v: Any): Any =
     Hllpp.estimate(Hllpp.fromBytes(v.asInstanceOf[Array[Byte]]))
 
-  override def prettyName: String = "hll_sketch_estimate"
+  override def prettyName: String = "hllpp_estimate"
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -160,20 +160,20 @@ case class HllppEstimate(child: Expression)
 object HllppFunctions {
   /** Aggregate raw values into mergeable words (ingest-time rollup, and
     * the raw-column cache partial). */
-  def hll_sketch_build(c: Column): Column =
+  def hllpp_build(c: Column): Column =
     GraftBridge.column(HllppSketchAgg(GraftBridge.expression(c))
       .toAggregateExpression())
 
   /** Aggregate stored words into one (query-time over a rollup column). */
-  def hll_sketch_merge(c: Column): Column =
+  def hllpp_merge(c: Column): Column =
     GraftBridge.column(HllppSketchAgg(GraftBridge.expression(c), mergeWords = true)
       .toAggregateExpression())
 
   /** Finalize: words → the `approx_count_distinct`-identical estimate. */
-  def hll_sketch_estimate(c: Column): Column =
+  def hllpp_estimate(c: Column): Column =
     GraftBridge.column(HllppEstimate(GraftBridge.expression(c)))
 
   /** Words as the text of a cached sketch partial (`Hllpp.mergePartial`). */
-  def hll_sketch_partial(words: Column): Column =
+  def hllpp_partial(words: Column): Column =
     functions.concat(functions.lit(Hllpp.PartialPrefix), functions.base64(words))
 }

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.model.{Aggregator, Granularity, QueryJson}
+import graft.model.{Aggregator, QueryJson}
 import graft.store.SegmentStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,13 +14,12 @@ import scala.util.control.NonFatal
 sealed trait Task { def id: String; def taskType: String }
 object Task {
   /** batch index: read input, parse timestamp, optional rollup, write
-    * segments (`index`/`index_hadoop` collapse into one Spark job —
-    * SURVEY §2.9). */
-  /** flatten: (outputColumn, sourceJsonColumn, jsonPath) triples — Druid's
-    * ingest-time flattenSpec for nested input (SURVEY §1.2). */
+    * segments (`index`/`index_hadoop` collapse into one Spark job — SURVEY
+    * §2.9). `flatten`: (outputColumn, sourceJsonColumn, jsonPath) triples —
+    * Druid's ingest-time flattenSpec for nested input (SURVEY §1.2). */
   final case class Index(id: String, dataSource: String, inputPath: String,
       inputFormat: String, timestampColumn: String,
-      rollup: Option[(Granularity, Seq[String], Seq[Aggregator])],
+      rollup: Option[SegmentStore.RollupSpec],
       flatten: Seq[(String, String, String)] = Seq.empty)
       extends Task { def taskType = "index" }
   final case class Append(id: String, dataSource: String, chunk: String,
@@ -162,6 +161,15 @@ class TaskService(spark: SparkSession, store: SegmentStore) {
 
   // -- task JSON parsing (polymorphic on `type`) ----------------------------
 
+  /** The rollup spec of an index task's `rollup` or a merge task:
+    * `queryGranularity`, `dimensions` and `metricsSpec`. */
+  private def rollupSpec(n: JsonNode): SegmentStore.RollupSpec = {
+    def list(f: String): Seq[JsonNode] =
+      Option(n.get(f)).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
+    (QueryJson.parseGranularity(Option(n.get("queryGranularity"))),
+      list("dimensions").map(_.asText()), list("metricsSpec").map(QueryJson.parseAggregator))
+  }
+
   def parseTask(json: String): Task = {
     val n = mapper.readTree(json)
     def s(f: String): String = Option(n.get(f)).map(_.asText())
@@ -170,14 +178,7 @@ class TaskService(spark: SparkSession, store: SegmentStore) {
     val id = sOpt("id").getOrElse(s"${s("type")}_${java.util.UUID.randomUUID()}")
     s("type") match {
       case "index" | "index_hadoop" =>
-        val rollup = Option(n.get("rollup")).filterNot(_.isNull).map { r =>
-          val gran = QueryJson.parseGranularity(Option(r.get("queryGranularity")))
-          val dims = Option(r.get("dimensions")).map(_.elements().asScala.map(_.asText()).toSeq)
-            .getOrElse(Seq.empty)
-          val aggs = Option(r.get("metricsSpec")).map(_.elements().asScala.toSeq)
-            .getOrElse(Seq.empty).map(QueryJson.parseAggregator)
-          (gran, dims, aggs)
-        }
+        val rollup = Option(n.get("rollup")).filterNot(_.isNull).map(rollupSpec)
         val flatten = Option(n.get("flattenSpec")).flatMap(f => Option(f.get("fields")))
           .map(_.elements().asScala.toSeq.map { fld =>
             val name = fld.get("name").asText()
@@ -192,10 +193,7 @@ class TaskService(spark: SparkSession, store: SegmentStore) {
         Task.Append(id, s("dataSource"), s("chunk"),
           Option(n.get("targetFiles")).map(_.asInt()).getOrElse(1))
       case "merge" =>
-        val dims = Option(n.get("dimensions")).map(_.elements().asScala.map(_.asText()).toSeq)
-          .getOrElse(Seq.empty)
-        val aggs = Option(n.get("metricsSpec")).map(_.elements().asScala.toSeq)
-          .getOrElse(Seq.empty).map(QueryJson.parseAggregator)
+        val (_, dims, aggs) = rollupSpec(n)
         Task.Merge(id, s("dataSource"), s("chunk"), dims, aggs)
       case "kill"    => Task.Kill(id, s("dataSource"), s("chunk"))
       case "move"    => Task.Move(id, s("dataSource"), s("chunk"), s("targetRoot"))

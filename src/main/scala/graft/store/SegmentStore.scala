@@ -3,7 +3,7 @@ package graft.store
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.expr.Compilers
-import graft.functions.HllppFunctions
+import graft.functions.HllppFunctions.{hllpp_build, hllpp_merge}
 import graft.model.{Aggregator, Granularity}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -269,20 +269,8 @@ class SegmentStore(val root: String) {
     finally s.close()
   }
 
-  /** A rollup metric as stored by `write` and `mergeChunk`: `hyperUnique`
-    * stays mergeable `Hllpp` words — built from a raw field, merged from a
-    * stored words column — and every other aggregator compiles as a query's. */
-  private def storedMetricCol(a: Aggregator, schema: StructType): Column = a match {
-    case Aggregator.HyperUnique(name, field) =>
-      val stored = schema.find(_.name == field).exists(_.dataType == BinaryType)
-      (if (stored) HllppFunctions.hll_sketch_merge(col(field))
-       else HllppFunctions.hll_sketch_build(col(field))).as(name)
-    case _ => Compilers.aggCol(a, schema)
-  }
-
   /** Ingest `df` (must carry `__time`) into day-chunked segments, optionally
-    * rolled up to `queryGranularity` over `dims` with `metricAggs`.
-    * Overwrites any existing version of the touched chunks.
+    * rolled up by `SegmentStore.Rollup`. Overwrites the touched chunks.
     *
     * Single-pass: one `partitionBy("dt")` job into a staging dir, then a
     * metadata-only rename per chunk into its new `v<N>` dir under the chunk
@@ -293,21 +281,9 @@ class SegmentStore(val root: String) {
     * `bloomFilterDims`: high-cardinality dimensions to write Parquet bloom
     * filters for — the storage-side stand-in for Druid's per-column bitmap
     * indexes on selective filters (SURVEY §1.1). */
-  def write(df: DataFrame, ds: String,
-      rollup: Option[(Granularity, Seq[String], Seq[Aggregator])] = None,
+  def write(df: DataFrame, ds: String, rollup: Option[SegmentStore.RollupSpec] = None,
       bloomFilterDims: Seq[String] = Seq.empty): Unit = {
-
-    val prepared = rollup match {
-      case Some((qGran, dims, metricAggs)) =>
-        val bucket = Compilers.granularityCol(qGran, col("__time"))
-          .getOrElse(col("__time"))
-        val aggs = metricAggs.map(storedMetricCol(_, df.schema)) :+
-          count(lit(1)).as("__rollup_count")
-        df.groupBy((bucket.as("__time") +: dims.map(col)): _*)
-          .agg(aggs.head, aggs.tail: _*)
-      case None => df
-    }
-
+    val prepared = rollup.fold(df)(SegmentStore.Rollup(df, _))
     val withChunk = prepared.withColumn("dt", date_format(col("__time"), "yyyy-MM-dd"))
     val staging = stagingDir(ds)
     try {
@@ -318,7 +294,7 @@ class SegmentStore(val root: String) {
           val dir = versionDir(ds, c, v)
           Files.createDirectories(dir.getParent)
           Files.move(srcDir, dir) // same-fs rename: metadata-only, no data pass
-          seal(c, v, dir, rollup.map(_ => "__rollup_count"))
+          seal(c, v, dir, SegmentStore.Rollup.countCol(prepared.schema))
         }
       }
     } finally deleteDir(staging)
@@ -333,7 +309,9 @@ class SegmentStore(val root: String) {
     * staged part-files are renamed into each chunk's live version dir (part
     * names carry the job's UUID, so they cannot collide with files already
     * there). Visibility is still solely the manifest flip — the pinned
-    * `files` list is captured only after every rename landed. */
+    * `files` list is captured only after every rename landed. A chunk's
+    * first batch records the stored rollup count when the frame carries
+    * one (a streaming rollup), so the planner's count rewrite applies. */
   def appendBatch(df: DataFrame, ds: String, batchId: Option[Long] = None): Unit = {
     // replay protection: a retried micro-batch (crash between parquet
     // append and checkpoint commit) must not double-write its rows
@@ -355,7 +333,8 @@ class SegmentStore(val root: String) {
           try files.iterator().asScala.toSeq.foreach { f =>
             Files.move(f, dir.resolve(f.getFileName), StandardCopyOption.REPLACE_EXISTING)
           } finally files.close()
-          seal(c, existing.fold(1)(_.version), dir, existing.flatMap(_.rollupCountCol))
+          seal(c, existing.fold(1)(_.version), dir,
+            existing.fold(SegmentStore.Rollup.countCol(df.schema))(_.rollupCountCol))
         }
       }
     } finally deleteDir(staging)
@@ -467,17 +446,14 @@ class SegmentStore(val root: String) {
     rewriteChunk(ds, chunk)(seg =>
       (spark.read.parquet(seg.path).coalesce(targetFiles), Map.empty, seg.rollupCountCol))
 
-  /** `merge` task: re-run rollup aggregation across a chunk's rows (merges
-    * shards that were rolled up separately). */
+  /** `merge` task: re-run rollup aggregation across a chunk's rows at their
+    * stored buckets (merges shards that were rolled up separately). */
   def mergeChunk(spark: SparkSession, ds: String, chunk: String,
       dims: Seq[String], metricAggs: Seq[Aggregator]): Unit =
     rewriteChunk(ds, chunk) { seg =>
-      val df = spark.read.parquet(seg.path)
-      val countCol = seg.rollupCountCol.getOrElse("__rollup_count")
-      val aggs = metricAggs.map(storedMetricCol(_, df.schema)) :+
-        sum(col(countCol)).cast("long").as(countCol)
-      (df.groupBy((col("__time") +: dims.map(col)): _*).agg(aggs.head, aggs.tail: _*),
-        Map.empty, Some(countCol))
+      val rolled = SegmentStore.Rollup(spark.read.parquet(seg.path),
+        (Granularity.NoneG, dims, metricAggs))
+      (rolled, Map.empty, SegmentStore.Rollup.countCol(rolled.schema))
     }
 
   /** `convert_segment` task: rewrite a chunk with new writer options
@@ -578,6 +554,49 @@ object SegmentStore {
     * updateManifest — must be shared across SegmentStore instances). */
   private val manifestLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** A Druid `dataSchema` rollup: `(queryGranularity, dimensions, metricsSpec)`. */
+  type RollupSpec = (Granularity, Seq[String], Seq[Aggregator])
+
+  /** The one rollup layout, for `write`, `mergeChunk` and `windowedRollup`:
+    * `__time` bucketed, each metric stored (`hyperUnique` as mergeable
+    * `Hllpp` words), and the row count that query-time `count` sums —
+    * `count(1)` over raw rows, the stored count's sum over a rollup. A
+    * stream buckets by a tumbling `window` (Append mode closes it at the
+    * watermark), whose start equals `granularityCol`'s bucket only for
+    * `Compilers.fixedBuckets`: other granularities throw before it starts. */
+  private[graft] object Rollup {
+    private val CountCol = "__rollup_count"
+
+    def countCol(schema: StructType): Option[String] = schema.fieldNames.find(_ == CountCol)
+
+    private def storedMetricCol(a: Aggregator, schema: StructType): Column = a match {
+      case Aggregator.HyperUnique(name, field) =>
+        val stored = schema.find(_.name == field).exists(_.dataType == BinaryType)
+        (if (stored) hllpp_merge(col(field)) else hllpp_build(col(field))).as(name)
+      case _ => Compilers.aggCol(a, schema, rollupCount = countCol(schema))
+    }
+
+    def apply(df: DataFrame, spec: RollupSpec): DataFrame = {
+      val (gran, dims, metricAggs) = spec
+      val aggs = (metricAggs :+ Aggregator.Count(CountCol)).map(storedMetricCol(_, df.schema))
+      if (!df.isStreaming) {
+        val bucket = Compilers.granularityCol(gran, col("__time")).getOrElse(col("__time"))
+        df.groupBy((bucket.as("__time") +: dims.map(col)): _*).agg(aggs.head, aggs.tail: _*)
+      } else {
+        val utc = java.time.ZoneId.of(df.sparkSession.conf.get("spark.sql.session.timeZone"))
+          .normalized == java.time.ZoneOffset.UTC
+        val (ms, origin) = Compilers.fixedBuckets(gran, utc).getOrElse(throw new
+          IllegalArgumentException(s"a streaming rollup cannot bucket granularity $gran: " +
+            "only fixed-length UTC buckets in a UTC session match a window's start"))
+        df.groupBy((window(col("__time"), s"$ms milliseconds", s"$ms milliseconds",
+            s"${Math.floorMod(origin, ms)} milliseconds") +: dims.map(col)): _*)
+          .agg(aggs.head, aggs.tail: _*)
+          .select((col("window.start").as("__time") +:
+            (dims ++ metricAggs.map(_.name) :+ CountCol).map(col)): _*)
+      }
+    }
+  }
 }
 
 /** Catalog over a SegmentStore: resolves datasources from manifests and

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.store.SegmentStore
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -21,21 +22,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object RealtimeIngest {
 
-  /** Parse a "10 minutes"-style duration into millis. */
-  private[streaming] def durationMs(s: String): Long = {
-    val parts = s.trim.toLowerCase.split("\\s+")
-    require(parts.length == 2, s"duration '$s' must be '<n> <unit>'")
-    val n = parts(0).toLong
-    parts(1).stripSuffix("s") match {
-      case "millisecond" => n
-      case "second"      => n * 1000L
-      case "minute"      => n * 60000L
-      case "hour"        => n * 3600000L
-      case "day"         => n * 86400000L
-      case u => throw new IllegalArgumentException(s"unknown duration unit '$u'")
-    }
-  }
-
   /** Start ingesting `stream` (must carry `__time`) into `datasource`.
     * `watermark` e.g. "10 minutes" drops events later than the period
     * behind the max event time seen — pass None to accept everything.
@@ -54,35 +40,22 @@ object RealtimeIngest {
   def start(stream: DataFrame, store: SegmentStore, datasource: String,
       watermark: Option[String], checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val lateMs = watermark.map(durationMs)
+    // the delay parsed as `withWatermark` parses it
+    val lateMs = watermark.map(w => IntervalUtils.getDuration(
+      IntervalUtils.fromIntervalString(w), java.util.concurrent.TimeUnit.MILLISECONDS))
     // process-local high-watermark of event time, advanced per batch
     val maxSeenMs = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val accepted = lateMs match {
-            case Some(ms) =>
-              val horizon = maxSeenMs.get() match {
-                case Long.MinValue => Long.MinValue
-                case seen          => seen - ms
-              }
-              val kept =
-                if (horizon == Long.MinValue) batch
-                else batch.where(col("__time") >=
-                  new java.sql.Timestamp(horizon))
-              val batchMax = batch.agg(max(col("__time"))).head().getTimestamp(0)
-              if (batchMax != null)
-                maxSeenMs.getAndUpdate(m => math.max(m, batchMax.getTime))
-              kept
-            case None => batch
-          }
-          store.appendBatch(accepted, datasource, Some(batchId))
-        }
+    sink(stream, store, datasource, checkpointDir, trigger) { batch =>
+      lateMs.fold(batch) { ms =>
+        val seen = maxSeenMs.get()
+        val kept =
+          if (seen == Long.MinValue) batch
+          else batch.where(col("__time") >= new java.sql.Timestamp(seen - ms))
+        val batchMax = batch.agg(max(col("__time"))).head().getTimestamp(0)
+        if (batchMax != null) maxSeenMs.getAndUpdate(m => math.max(m, batchMax.getTime))
+        kept
       }
-      .start()
+    }
   }
 
   /** Exactly-once streaming ingest with CROSS-BATCH content dedup — the
@@ -102,42 +75,36 @@ object RealtimeIngest {
       dedupKeys: Seq[String], watermark: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
     require(dedupKeys.nonEmpty, "startDeduped needs at least one dedup key")
-    stream
-      .withWatermark("__time", watermark)
-      .dropDuplicatesWithinWatermark(dedupKeys)
-      .writeStream
+    sink(stream.withWatermark("__time", watermark).dropDuplicatesWithinWatermark(dedupKeys),
+      store, datasource, checkpointDir, trigger)(identity)
+  }
+
+  /** Streaming rollup with the index task's spec, built by the same
+    * `SegmentStore.Rollup` as `SegmentStore.write`: the same metric columns
+    * and stored row count as a batch rollup of the same rows. A bucket
+    * commits once the watermark (`watermark` behind the max seen `__time`)
+    * passes its end; later rows are dropped — Druid's windowPeriod. Only
+    * fixed-length UTC granularities stream (`Compilers.fixedBuckets`):
+    * `all`, `none`, `week`, `month`, `quarter`, `year` and zoned periods
+    * throw before the stream starts. */
+  def windowedRollup(stream: DataFrame, store: SegmentStore, datasource: String,
+      rollup: SegmentStore.RollupSpec, watermark: String, checkpointDir: String)
+      : StreamingQuery =
+    // watermark-closed buckets only; ProcessingTime(0) is Spark's default trigger
+    sink(SegmentStore.Rollup(stream.withWatermark("__time", watermark), rollup),
+      store, datasource, checkpointDir, Trigger.ProcessingTime(0L))(identity)
+
+  /** The one streaming sink: each non-empty append-mode micro-batch, through
+    * `accept`, commits with its batchId (a post-crash replay is a no-op). */
+  private def sink(frame: DataFrame, store: SegmentStore, datasource: String,
+      checkpointDir: String, trigger: Trigger)(accept: DataFrame => DataFrame)
+      : StreamingQuery =
+    frame.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId makes a post-crash replay a no-op (see start())
-        if (!batch.isEmpty) store.appendBatch(batch, datasource, Some(batchId))
+        if (!batch.isEmpty) store.appendBatch(accept(batch), datasource, Some(batchId))
       }
       .start()
-  }
-
-  /** Windowed streaming aggregation with watermark-based late-data
-    * handling: tumbling buckets of `granularity` (e.g. "1 hour"), rows
-    * later than `watermark` past the max seen `__time` are dropped —
-    * Druid's windowPeriod rejection semantics. Results are upserted into a
-    * rolled-up datasource per completed window. */
-  def windowedRollup(stream: DataFrame, store: SegmentStore, datasource: String,
-      granularity: String, watermark: String, dims: Seq[String],
-      aggExprs: Seq[org.apache.spark.sql.Column], checkpointDir: String)
-      : StreamingQuery = {
-    val agged = stream
-      .withWatermark("__time", watermark)
-      .groupBy((window(col("__time"), granularity) +: dims.map(col)): _*)
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      .withColumn("__time", col("window.start"))
-      .drop("window")
-    agged.writeStream
-      .outputMode("append") // watermark-closed windows only
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId makes a post-crash replay a no-op (see start())
-        if (!batch.isEmpty) store.appendBatch(batch, datasource, Some(batchId))
-      }
-      .start()
-  }
 }

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
+import graft.model.{Aggregator, Granularity}
 import graft.store.SegmentStore
 import graft.streaming.RealtimeIngest
 import org.apache.spark.sql.functions._
@@ -143,9 +144,9 @@ object StreamRehearsal {
           (col("value") % 5).cast("string").as("event_type"),
           lit(1L).as("n"))
       val q = RealtimeIngest.windowedRollup(stream, store, "stream_rollup",
-        granularity = "2 seconds", watermark = "1 second",
-        dims = Seq("event_type"), aggExprs = Seq(sum(col("n")).as("cnt")),
-        checkpointDir = ckpt)
+        (Granularity.Duration(2000, None), Seq("event_type"),
+          Seq(Aggregator.Sum("cnt", "n", "long"))),
+        watermark = "1 second", checkpointDir = ckpt)
       val t0 = System.nanoTime()
       while ((System.nanoTime() - t0) / 1e6 < 15000L && q.isActive)
         Thread.sleep(500)

@@ -1,18 +1,18 @@
 package graft
 
 import graft.engine.Engine
-import graft.functions.{Hllpp, HllppFunctions}
+import graft.functions.Hllpp
 import graft.functions.HllppFunctions._
 import graft.model.{Aggregator, Granularity}
 import graft.store.{SegmentCatalog, SegmentStore}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{hll_sketch_estimate => _, _}
+import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 import java.sql.Timestamp
 
 /** The engine's one mergeable cardinality sketch (`Hllpp` words behind
-  * `hll_sketch_build`/`_merge`/`_estimate`, SURVEY §7.2): accuracy, merge
+  * `hllpp_build`/`_merge`/`_estimate`, SURVEY §7.2): accuracy, merge
   * associativity, the full rollup round-trip (build at ingest → store as
   * binary → merge+finalize at query time), and rollup == raw bit-exactly. */
 class HllSketchSpec extends SparkTestBase {
@@ -22,11 +22,11 @@ class HllSketchSpec extends SparkTestBase {
   private def ts(s: String): Timestamp = Timestamp.from(java.time.Instant.parse(s))
 
   private def words(df: DataFrame, c: String): Array[Byte] =
-    df.agg(hll_sketch_build(col(c))).head().getAs[Array[Byte]](0)
+    df.agg(hllpp_build(col(c))).head().getAs[Array[Byte]](0)
 
   private def estimateOf(ws: Array[Byte]*): Long =
     ws.map(Tuple1(_)).toDF("w")
-      .agg(hll_sketch_estimate(hll_sketch_merge(col("w")))).head().getLong(0)
+      .agg(hllpp_estimate(hllpp_merge(col("w")))).head().getLong(0)
 
   test("sketch estimate within 5% of exact distinct") {
     val n = 50000
@@ -50,7 +50,7 @@ class HllSketchSpec extends SparkTestBase {
     // engine-path regression for the sf0.1 q30 failure: a raw (non-sketch)
     // column at 1500 uniques per bucket must estimate within the band.
     // Raw columns route to approx_count_distinct(rsd 0.023) since round
-    // 10; hll_sketch_merge is the sketch-typed/rollup-storage path.
+    // 10; hllpp_merge is the sketch-typed/rollup-storage path.
     val n = 1500
     val df = (0 until 3).flatMap(b => (1 to n).map(u =>
       (Timestamp.from(java.time.Instant.parse(s"2024-01-0${b + 1}T00:00:00Z")),
@@ -92,18 +92,35 @@ class HllSketchSpec extends SparkTestBase {
     val df = (1 to 20000).map(i => (i % 7, s"user_${i % 3000}")).toDF("g", "u")
     // build per-group sketches, merge them in a second aggregation, finalize
     val merged = df.groupBy($"g")
-      .agg(hll_sketch_build($"u").as("sk"))
-      .agg(hll_sketch_merge($"sk").as("m"))
-      .select(hll_sketch_estimate($"m").as("est"))
+      .agg(hllpp_build($"u").as("sk"))
+      .agg(hllpp_merge($"sk").as("m"))
+      .select(hllpp_estimate($"m").as("est"))
       .collect().head.getAs[Long]("est")
     assert(math.abs(merged - 3000).toDouble / 3000 < 0.05, s"est=$merged")
   }
 
-  test("hll_sketch_merge rejects raw input at analysis") {
+  test("hllpp_merge rejects raw input at analysis") {
     val e = intercept[org.apache.spark.sql.AnalysisException](
-      Seq(1L, 2L).toDF("u").agg(hll_sketch_merge($"u")).collect())
-    assert(e.getMessage.contains("hll_sketch_merge requires binary sketch input"),
+      Seq(1L, 2L).toDF("u").agg(hllpp_merge($"u")).collect())
+    assert(e.getMessage.contains("hllpp_merge requires binary sketch input"),
       e.getMessage)
+  }
+
+  test("a graft session leaves Spark's own hll_sketch_* functions reachable") {
+    graft.functions.GraftFunctionRegistry.registerAll(spark)
+    assert(spark.sql("SELECT hll_sketch_estimate(hll_sketch_agg(id)) FROM range(100)")
+      .head().getLong(0) == 100L)
+    assert(spark.sql("SELECT hllpp_estimate(hllpp_merge(w)) FROM " +
+        "(SELECT hllpp_build(id) AS w FROM range(1000) GROUP BY id % 7)").head().getLong(0) ==
+      spark.range(1000).agg(approx_count_distinct(col("id"), Hllpp.Rsd)).head().getLong(0))
+  }
+
+  test("no graft SQL function name is a Spark built-in") {
+    val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+      .listFunction().map(_.funcName.toLowerCase).toSet
+    val clashes = graft.functions.GraftFunctionRegistry.builders.map(_._1)
+      .filter(n => builtin(n.toLowerCase))
+    assert(clashes.isEmpty, s"graft functions shadowing Spark built-ins: ${clashes.mkString(", ")}")
   }
 
   test("HLL++ words finalize to the approx_count_distinct estimate " +
@@ -112,8 +129,8 @@ class HllSketchSpec extends SparkTestBase {
       .toDF("id", "u")
     val want = df.agg(approx_count_distinct(col("u"), Hllpp.Rsd)).head().getLong(0)
     // whole-corpus words → estimate
-    val whole = df.agg(hll_sketch_build(col("u")).as("w"))
-      .select(hll_sketch_estimate(col("w"))).head().getLong(0)
+    val whole = df.agg(hllpp_build(col("u")).as("w"))
+      .select(hllpp_estimate(col("w"))).head().getLong(0)
     assert(whole == want, s"whole=$whole want=$want")
     // per-half words merged driver-side (the partial-merge path's exact
     // mechanics) → the SAME estimate: register union is order-free
@@ -122,7 +139,7 @@ class HllSketchSpec extends SparkTestBase {
     val acc = Hllpp.newBuffer()
     halves.foreach(Hllpp.mergeInto(acc, _))
     assert(Hllpp.estimate(acc) == want)
-    // and merged in Spark through hll_sketch_merge
+    // and merged in Spark through hllpp_merge
     assert(estimateOf(halves: _*) == want)
   }
 
@@ -135,11 +152,9 @@ class HllSketchSpec extends SparkTestBase {
     val ckpt = Files.createTempDirectory("graft-hll-ckpt").toString
 
     val q = graft.streaming.RealtimeIngest.windowedRollup(stream, store, "live_hll",
-      granularity = "1 hour", watermark = "10 minutes", dims = Seq("event_type"),
-      aggExprs = Seq(
-        HllppFunctions.hll_sketch_build(col("user_id")).as("uu_sketch"),
-        count(lit(1)).as("cnt")),
-      checkpointDir = ckpt)
+      (Granularity.Simple("hour"), Seq("event_type"),
+        Seq(Aggregator.HyperUnique("uu_sketch", "user_id"), Aggregator.Count("cnt"))),
+      watermark = "10 minutes", checkpointDir = ckpt)
     // window closes when watermark passes: emit 10:00 window via later event
     mem.addData((0 until 300).map(i =>
       (ts(f"2024-08-01T10:${i % 60}%02d:00Z"), "click", (i % 120).toLong)): _*)
@@ -150,8 +165,8 @@ class HllSketchSpec extends SparkTestBase {
 
     val stored = store.read(spark, "live_hll")
     assert(stored.schema("uu_sketch").dataType == org.apache.spark.sql.types.BinaryType)
-    val est = stored.select(hll_sketch_estimate(
-      hll_sketch_merge(stored("uu_sketch"))).as("est"))
+    val est = stored.select(hllpp_estimate(
+      hllpp_merge(stored("uu_sketch"))).as("est"))
       .collect().head.getAs[Long]("est")
     assert(math.abs(est - 120).toDouble / 120 < 0.06, s"est=$est")
   }
@@ -183,7 +198,7 @@ class HllSketchSpec extends SparkTestBase {
   test("hyperUnique over a rollup datasource == approx_count_distinct(·, 0.023) " +
       "over its raw rows, bit-for-bit, cached partials or not") {
     // int (with nulls), long and string fields over three days; the rollup
-    // stores hll_sketch_build words per (hour, event_type) row
+    // stores hllpp_build words per (hour, event_type) row
     val raw = (0 until 3000).map { k =>
       (ts(f"2024-07-0${1 + k % 3}T${k % 24}%02d:${k % 60}%02d:00Z"), s"type_${k % 4}",
         if (k % 7 == 0) None else Some(k % 700), k * 2654435761L % 5000L, s"u${k % 900}")
@@ -217,7 +232,7 @@ class HllSketchSpec extends SparkTestBase {
     // and through the functions directly: all rows, one estimate each way
     val stored = store.read(spark, "ev_roll")
     for ((w, f) <- Seq("ui" -> "i", "ul" -> "l", "us" -> "s"))
-      assert(stored.agg(hll_sketch_estimate(hll_sketch_merge(col(w)))).head().getLong(0) ==
+      assert(stored.agg(hllpp_estimate(hllpp_merge(col(w)))).head().getLong(0) ==
         raw.agg(approx_count_distinct(col(f), 0.023)).head().getLong(0), w)
   }
 

@@ -948,11 +948,11 @@ class IngestSpec extends SparkTestBase {
     val stream = mem.toDF().toDF("__time", "event_type", "value")
     val ckpt = Files.createTempDirectory("graft-ckpt2").toString
 
-    // watermark 30 min, 1-hour tumbling windows
+    // watermark 30 min, hour buckets
     val q = graft.streaming.RealtimeIngest.windowedRollup(stream, store, "agg",
-      granularity = "1 hour", watermark = "30 minutes", dims = Seq("event_type"),
-      aggExprs = Seq(count(lit(1)).as("cnt"), sum(col("value")).as("sv")),
-      checkpointDir = ckpt)
+      (Granularity.Simple("hour"), Seq("event_type"),
+        Seq(Aggregator.Count("cnt"), Aggregator.Sum("sv", "value", "double"))),
+      watermark = "30 minutes", checkpointDir = ckpt)
     // batch 1 advances the watermark to 12:30 (max 13:00 - 30min)
     mem.addData(
       (ts("2024-06-01T10:05:00Z"), "click", 1.0),
@@ -972,6 +972,68 @@ class IngestSpec extends SparkTestBase {
     assert(w10.isDefined)
     assert(w10.get.getAs[Long]("cnt") == 2L)
     assert(w10.get.getAs[Double]("sv") == 3.0)
+  }
+
+  test("a streaming rollup refuses a calendar granularity before any stream starts") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlC: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[(Timestamp, String, Double)].toDF()
+      .toDF("__time", "event_type", "value")
+    val active = spark.streams.active.length
+    for (g <- Seq("month", "week")) {
+      val e = intercept[IllegalArgumentException](
+        graft.streaming.RealtimeIngest.windowedRollup(stream, freshStore(), "refused",
+          (Granularity.Simple(g), Seq("event_type"), Seq(Aggregator.Count("cnt"))),
+          watermark = "1 hour",
+          checkpointDir = Files.createTempDirectory("graft-ckpt-refused").toString))
+      assert(e.getMessage.contains(g), e.getMessage)
+    }
+    assert(spark.streams.active.length == active, "a refused rollup started a stream")
+  }
+
+  test("merge task on a streaming rollup chunk keeps the batch rollup's counts and sums") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlC: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val streamed = Seq(
+      (ts("2024-06-01T10:05:00Z"), "click", 1.5),
+      (ts("2024-06-01T10:10:00Z"), "click", 2.0),
+      (ts("2024-06-01T10:20:00Z"), "view", 4.25))
+    val appended = Seq(
+      (ts("2024-06-01T10:30:00Z"), "click", 0.25),
+      (ts("2024-06-01T11:40:00Z"), "click", 8.0))
+    val spec = (Granularity.Simple("hour"), Seq("event_type"),
+      Seq(Aggregator.Sum("sv", "value", "double")))
+    val store = freshStore()
+    store.write((streamed ++ appended).toDF("__time", "event_type", "value"), "batch",
+      Some(spec))
+    val mem = MemoryStream[(Timestamp, String, Double)]
+    val q = graft.streaming.RealtimeIngest.windowedRollup(
+      mem.toDF().toDF("__time", "event_type", "value"), store, "live", spec,
+      watermark = "0 seconds",
+      checkpointDir = Files.createTempDirectory("graft-ckpt-merge").toString)
+    try {
+      // a next-day row closes every bucket of the day; the second one
+      // runs the batch that emits them
+      mem.addData(streamed: _*); q.processAllAvailable()
+      mem.addData((ts("2024-06-02T12:00:00Z"), "close", 0.0)); q.processAllAvailable()
+      mem.addData((ts("2024-06-02T12:00:00Z"), "close", 0.0)); q.processAllAvailable()
+    } finally q.stop()
+    // a second shard of the 10:00 click bucket, rolled up the same way
+    store.appendBatch(SegmentStore.Rollup(
+      appended.toDF("__time", "event_type", "value"), spec), "live")
+    assert(store.read(spark, "live").where(col("event_type") === "click").count() == 3)
+    store.mergeChunk(spark, "live", "2024-06-01", Seq("event_type"),
+      Seq(Aggregator.Sum("sv", "sv", "double")))
+    val engine = new Engine(spark, new SegmentCatalog(store))
+    def answer(ds: String): String = engine.executeJson(
+      s"""{"queryType":"groupBy","dataSource":"$ds","granularity":"hour",
+         |"intervals":["2024-06-01T00:00:00Z/2024-06-02T00:00:00Z"],
+         |"dimensions":["event_type"],
+         |"aggregations":[{"type":"count","name":"n"},
+         |{"type":"doubleSum","name":"sv","fieldName":"sv"}]}""".stripMargin)
+    val want = answer("batch")
+    assert(want.contains("\"n\":3") && want.contains("\"sv\":3.75"), want)
+    assert(answer("live") == want)
   }
 
   test("retention rules: conf-driven kill/archive sweep emits the existing " +

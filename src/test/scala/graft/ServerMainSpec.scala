@@ -247,8 +247,42 @@ class ServerMainSpec extends SparkTestBase {
     assert(offenders.isEmpty, s"hand mirrors in PartialMerge: ${offenders.mkString("; ")}")
   }
 
+  test("one rollup layout: SegmentStore.Rollup alone builds rollup rows") {
+    // batch write, the merge task and streaming windowedRollup share one
+    // builder; a second place that names the stored count or compiles
+    // stored metrics is a second rollup layout, and a streaming window
+    // grouped outside the builder buckets apart from granularityCol
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val store = "graft/store/SegmentStore.scala"
+    val lines = Files.readAllLines(root.resolve(store)).asScala.toList
+    val start = lines.indexWhere(_.contains("private[graft] object Rollup {"))
+    assert(start >= 0, "SegmentStore has no Rollup builder")
+    val end = lines.indexWhere(_.matches("  }"), start + 1)
+    val outside = for {
+      f <- files
+      rel = root.relativize(f).toString
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if code.contains("\"__rollup_count\"") || code.contains("storedMetricCol(")
+      if rel != store || i <= start || i >= end
+    } yield s"$rel:${i + 1}"
+    assert(outside.isEmpty, s"rollup layout outside SegmentStore.Rollup: ${outside.mkString(", ")}")
+    val windowed = for {
+      f <- files if root.relativize(f).toString.startsWith("graft/streaming/")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if "\\bwindow\\s*\\(".r.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}"
+    assert(windowed.isEmpty, s"streaming code groups by its own window: ${windowed.mkString(", ")}")
+  }
+
   test("one cardinality sketch: no second HLL layout under src/main") {
-    // rollup storage, the hll_sketch_* functions and cached partials share
+    // rollup storage, the hllpp_* functions and cached partials share
     // Hllpp's words; a second register layout is where a rollup's answer
     // and the raw rows' approx_count_distinct drift apart
     val root = java.nio.file.Paths.get("src/main/scala")
